@@ -14,6 +14,11 @@ import graft.functions._
   */
 object Dedup {
 
+  /** Most pair rows [[connectedComponents]] may collect to the driver
+    * for its union-find: 16x its 64k default, ~100 MB of rows.
+    */
+  val DriverPairBudget: Long = 1L << 20
+
   /** Oracle-replicable ~60-bit token hash: two polynomial rolling
     * hashes with coprime (mult, mod) combined as h1 + h2 * 2^30.
     * Every intermediate < 2^62 (ANSI-safe in Spark, BIGINT-safe in
@@ -368,15 +373,18 @@ object Dedup {
     // convergence count). Above the bound — any corpus-scale dedup —
     // the distributed rounds below run unchanged; localRows = 0
     // forces them (spec-gated identical).
-    // clamp before the Int cast: localRows near Int.MaxValue would
-    // overflow to a negative limit and throw instead of falling back
-    // to the distributed path
-    val localLim = math.min(localRows, (Int.MaxValue - 1).toLong)
-    if (localRows > 0 &&
-        fwd.limit(localLim.toInt + 1).count() <= localLim) {
+    // ONE read of `pairs` decides the path and feeds the union-find:
+    // an unmaterialised input (LSH joins + Jaccard check) would
+    // otherwise be evaluated once to count and again to collect
+    require(localRows >= 0 && localRows <= DriverPairBudget,
+      s"localRows $localRows is outside the driver budget [0, $DriverPairBudget]")
+    val head =
+      if (localRows == 0) Array.empty[org.apache.spark.sql.Row]
+      else fwd.limit(localRows.toInt + 1).collect()
+    if (localRows > 0 && head.length <= localRows) {
       val spark = pairs.sparkSession
       import spark.implicits._
-      val es = fwd.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = head.map(r => (r.getLong(0), r.getLong(1)))
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x

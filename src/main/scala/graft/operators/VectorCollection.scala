@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's BaseANN serving surface
@@ -33,9 +33,13 @@ import org.apache.spark.sql.functions._
   * like the centroids: every mutation batch is encoded against the
   * existing models (O(batch), no rebuild — q28's contract).
   *
-  * State is a checkpointed (id, vec) DataFrame + broadcastable
-  * centroids/models; every mutation re-assigns ONLY its batch
-  * (O(batch)), exactly like q28.
+  * State is ONE checkpointed table — (id, vec, ...) before
+  * `createIndex`, the assigned (id, vec, ..., cluster[, codes]) table
+  * after it — plus broadcastable centroids/models. Every mutation
+  * re-assigns ONLY its batch, exactly like q28, and is one map-only
+  * pass over the stored table: the batch is the only data shuffled
+  * ([[Mutations.applyBatch]]). The checkpoint job that stores each
+  * write also counts its rows, so `numEntities` runs no job.
   */
 class VectorCollection(
     spark: SparkSession,
@@ -57,11 +61,13 @@ class VectorCollection(
   require(quantization != "pq_aniso" || metric == VecMetric.InnerProduct,
     "pq_aniso is the score-aware MIPS index: use InnerProduct")
 
-  private var assigned: DataFrame = _
+  /** The one stored table: assigned to `cents` once `createIndex` ran. */
+  private var table: DataFrame = _
+  private var rows = 0L
   private var cents: Array[Array[Double]] = _
+  private def indexed = cents != null
   private var sq: Sq8Index.Model = _
   private var pq: PqIndex.Model = _
-  private var data: DataFrame = initial.localCheckpoint(true)
 
   /** Driver-resident serving replica for the single-query path: a
     * real vector DB answers query() from index state held in the
@@ -82,16 +88,29 @@ class VectorCollection(
     java.util.HashMap[Int, Array[(Long, Array[Float])]] = _
   private var localDirty = true
 
+  store(initial)
+
+  /** Checkpoint `df` as the stored table. The checkpoint job counts
+    * the rows on the way (an observed metric), so neither
+    * `numEntities` nor the serving bound runs a job of its own.
+    */
+  private def store(df: DataFrame): Unit = {
+    val seen = Observation()
+    table = df.observe(seen, count(lit(1)).as("rows")).localCheckpoint(true)
+    rows = seen.get("rows").asInstanceOf[Long]
+    localDirty = true // the serving replica re-collects from the new table
+  }
+
   private def localServe():
       Option[java.util.HashMap[Int, Array[(Long, Array[Float])]]] = {
     if (localDirty) {
       localDirty = false
       localCells =
-        if (quantization != "none" || data.count() > ServeLocalRows) null
+        if (quantization != "none" || rows > ServeLocalRows) null
         else {
           val mp = new java.util.HashMap[Int,
             scala.collection.mutable.ArrayBuffer[(Long, Array[Float])]]()
-          assigned.select(col("cluster"), col("id"), col("vec"))
+          table.select(col("cluster"), col("id"), col("vec"))
             .collect().foreach { r =>
               mp.computeIfAbsent(r.getInt(0),
                 _ => scala.collection.mutable.ArrayBuffer.empty)
@@ -105,25 +124,27 @@ class VectorCollection(
     Option(localCells)
   }
 
-  def numEntities: Long = data.count()
+  def numEntities: Long = rows
 
   /** Build the IVF index (+ quantization model) over the current
     * collection (reference create_index). Idempotent; mutations keep
-    * it maintained incrementally afterwards.
+    * it maintained incrementally afterwards. A re-index reads the
+    * stored table without its old cell and code columns.
     */
   def createIndex(): Unit = {
-    cents = IvfIndex.sampleCentroids(data, "vec", nlist)
+    val data = if (indexed) table.drop("cluster", "codes") else table
+    val c = IvfIndex.sampleCentroids(data, "vec", nlist)
     quantization match {
       case "none"            => ()
       case "sq8"             => sq = Sq8Index.train(data, "vec")
       case "pq" | "pq_aniso" => pq = PqIndex.sampleModel(data, "vec", pqM, pqKStar)
     }
-    assigned = withCodes(IvfIndex.assign(data, "vec", cents))
-      .localCheckpoint(true)
     // a re-index after mutations re-samples centroids and re-clusters:
-    // the serving replica is keyed by the OLD clustering and must be
-    // rebuilt, or query() probes new centroids against stale cells
-    localDirty = true
+    // store() marks the serving replica (keyed by the OLD clustering)
+    // for a rebuild, or query() would probe new centroids against
+    // stale cells
+    store(withCodes(IvfIndex.assign(data, "vec", c)))
+    cents = c
   }
 
   /** Encode a batch against the FROZEN quantization model. */
@@ -136,7 +157,7 @@ class VectorCollection(
   }
 
   private def requireIndex(): Unit =
-    require(assigned != null, "createIndex() must run before queries")
+    require(indexed, "createIndex() must run before queries")
 
   /** Reference single-vector query: top-n ids, optional filter.
     * Serving fast path: probe selection runs as driver math over the
@@ -174,7 +195,7 @@ class VectorCollection(
     }
     val probed = IvfIndex.probedQueriesLocal(spark, Seq((0L, v)),
       cents, nprobe)
-    val base = filterExpr.map(assigned.filter).getOrElse(assigned)
+    val base = filterExpr.map(table.filter).getOrElse(table)
     val ranked = if (quantization == "none")
       IvfIndex.searchProbed(base, probed, n, metric)
     else {
@@ -190,7 +211,7 @@ class VectorCollection(
   def batchQuery(queries: DataFrame, n: Int,
       filterExpr: Option[Column] = None): DataFrame = {
     requireIndex()
-    val base = filterExpr.map(assigned.filter).getOrElse(assigned)
+    val base = filterExpr.map(table.filter).getOrElse(table)
     if (quantization == "none")
       IvfIndex.search(base, queries, cents, n, nprobe, metric)
     else quantSearch(base, queries, n, None,
@@ -207,9 +228,9 @@ class VectorCollection(
       pairFilter: Column): DataFrame = {
     requireIndex()
     if (quantization == "none")
-      IvfIndex.search(assigned, queries, cents, n, nprobe, metric,
+      IvfIndex.search(table, queries, cents, n, nprobe, metric,
         pairFilter = Some(pairFilter))
-    else quantSearch(assigned, queries, n, Some(pairFilter),
+    else quantSearch(table, queries, n, Some(pairFilter),
       IvfIndex.probedQueries(queries, cents, nprobe))
   }
 
@@ -268,7 +289,7 @@ class VectorCollection(
     val probed = IvfIndex.probedQueries(queries, cents, nprobe)
     val raw = metric.score(col("qvec"), col("vec"))
     val rs = if (metric.asc) raw else negate(raw)
-    val scored = assigned.join(broadcast(probed), "cluster")
+    val scored = table.join(broadcast(probed), "cluster")
       .select(col("query_id"), rs.as("rs"),
         col(groupCol).as("grp"), col("id"))
     GroupedSearch.championsOf(scored, g)
@@ -287,7 +308,7 @@ class VectorCollection(
     requireIndex()
     require(metric.asc, "rangeQuery expects a distance (ascending) metric")
     val probed = IvfIndex.probedQueries(queries, cents, nprobe)
-    assigned.join(broadcast(probed), "cluster")
+    table.join(broadcast(probed), "cluster")
       .select(col("query_id"),
         metric.score(col("qvec"), col("vec")).as("score"),
         col("id").as("neighbor_id"))
@@ -311,39 +332,37 @@ class VectorCollection(
     requireIndex()
     val probed = IvfIndex.probedQueries(queries, cents, nprobe)
     KnnSearch.iteratorPages(
-      assigned.join(broadcast(probed), "cluster")
+      table.join(broadcast(probed), "cluster")
         .select(col("query_id"),
           metric.score(col("qvec"), col("vec")).as("score"), col("id")),
       pageSize, nPages, metric.asc)
   }
 
-  private def applyMutation(upserts: DataFrame, deletes: DataFrame): Unit = {
-    data = Mutations.applyBatch(data, upserts, deletes, "id")
-      .localCheckpoint(true)
-    if (assigned != null) {
-      assigned = Mutations.applyBatch(assigned,
-        withCodes(IvfIndex.assign(upserts, "vec", cents)), deletes, "id")
-        .localCheckpoint(true)
-    }
-    localDirty = true // the serving replica re-collects post-mutation
-  }
+  private def applyMutation(upserts: DataFrame, deletes: DataFrame): Unit =
+    store(Mutations.applyBatch(table, upserts, deletes, "id"))
+
+  /** An upsert batch in the stored table's shape: assigned to the
+    * existing cells and encoded against the frozen model once indexed.
+    */
+  private def upsertRows(batch: DataFrame): DataFrame =
+    if (indexed) withCodes(IvfIndex.assign(batch, "vec", cents)) else batch
 
   private def emptyKeys: DataFrame = {
     import spark.implicits._
     Seq.empty[Long].toDF("id")
   }
 
-  /** Reference insert: new rows (id, vec). */
-  def insert(batch: DataFrame): Unit = applyMutation(batch, emptyKeys)
+  /** Reference insert: new rows (id, vec, ...). */
+  def insert(batch: DataFrame): Unit =
+    applyMutation(upsertRows(batch), emptyKeys)
 
   /** Reference update: replace same-id rows (insert if absent). */
-  def update(batch: DataFrame): Unit = applyMutation(batch, emptyKeys)
+  def update(batch: DataFrame): Unit =
+    applyMutation(upsertRows(batch), emptyKeys)
 
   /** Reference delete by id. */
-  def delete(ids: DataFrame): Unit = {
-    val none = data.filter(lit(false)).select("id", "vec").limit(0)
-    applyMutation(none, ids.select("id"))
-  }
+  def delete(ids: DataFrame): Unit =
+    applyMutation(table.limit(0), ids.select("id"))
 }
 
 /** The reference's multi-vector collection

@@ -29,7 +29,8 @@ class BoundedCollectSpec extends AnyFunSuite {
       (1, "binary centroid codebook: nlist rows"),
     "operators/Dedup.scala" ->
       (1, "driver-resident union-find's pair collect: <= localRows " +
-        "(64k default) rows by its own limit+count guard — " +
+        "(64k default, required <= DriverPairBudget) rows by its " +
+        "own limit(localRows + 1) — " +
         "corpus-scale dedup keeps the distributed propagation"),
     "operators/GraphSearch.scala" ->
       (10, "4x layer-membership histograms (<= levels rows); " +
@@ -59,8 +60,9 @@ class BoundedCollectSpec extends AnyFunSuite {
     "operators/VectorCollection.scala" ->
       (2, "single-query serve result: k ids (the BaseANN query() " +
         "contract returns a local list); driver-resident serving " +
-        "replica: <= ServeLocalRows (64k) entities by its own count " +
-        "guard — corpus-scale collections never build it"),
+        "replica: <= ServeLocalRows (64k) entities by its row-count " +
+        "guard (counted in each write's checkpoint job) — " +
+        "corpus-scale collections never build it"),
     "queries/AnalyticsQueries.scala" ->
       (3, "a12 mutation op batch (nOps = 32 rows, twice); a13 query " +
         "vector batch (A13NQ rows — the per-query latency series " +

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -184,6 +185,76 @@ class VectorCollectionSpec extends AnyFunSuite {
       assert(rows.map(_._2).sorted.toSeq == (1L to rows.size))
       assert(rows.map(_._3).distinct.size == rows.size)
     }
+  }
+
+  test("delete on a collection with attribute columns keeps serving filters") {
+    import spark.implicits._
+    val corpus = graft.datagen.DataGen.randomFilter(spark, 600, 16, 4,
+        nFilters = 1, seed = 3L)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"),
+        col("label_0"))
+    val coll = new VectorCollection(spark, corpus, nlist = 4, nprobe = 4)
+    coll.createIndex()
+    val n0 = coll.numEntities
+    val victims = (0L until 600L by 5).toSet
+    coll.delete(victims.toSeq.toDF("id"))
+    assert(coll.numEntities == n0 - victims.size)
+    val low = col("label_0") < 50
+    val queries = corpus.filter(col("id") < 10)
+      .select(col("id").as("query_id"), col("vec").as("qvec"))
+    val got = coll.batchQuery(queries, 10, filterExpr = Some(low))
+      .select("neighbor_id").as[Long].collect()
+    assert(got.nonEmpty && !got.exists(victims), got.filter(victims).toSeq)
+    val v0 = queries.head().getSeq[Float](1).toArray
+    val one = coll.query(v0, 10, filterExpr = Some(low))
+    assert(one.nonEmpty && !one.exists(victims), one)
+  }
+
+  test("mixed writes and a re-index track a plain-Scala model") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    def vec(): Array[Float] = Array.fill(64)(rnd.nextFloat())
+    val model = scala.collection.mutable.LinkedHashMap[Long, Array[Float]]()
+    embBase.collect().foreach(r =>
+      model(r.getLong(0)) = r.getSeq[Float](1).toArray)
+    val coll = new VectorCollection(spark, embBase, nlist = 4, nprobe = 4)
+    def rows(df: DataFrame) = df.select("query_id", "rank", "neighbor_id")
+      .collect().map(r => (r.getLong(0), r.getAs[Number](1).longValue,
+        r.getLong(2))).toSet
+    def checkSearch(step: String): Unit = {
+      val queries = (0 until 5).map(i => (i.toLong, vec()))
+        .toDF("query_id", "qvec")
+      val exact = KnnSearch.bruteForce(
+        model.toSeq.toDF("id", "vec"), queries, 5, VecMetric.Euclidean)
+      assert(rows(coll.batchQuery(queries, 5)) == rows(exact), step)
+    }
+    def write(step: String)(f: => Unit): Unit = {
+      f
+      assert(coll.numEntities == model.size.toLong, step)
+    }
+    def upsert(ids: Seq[Long]): DataFrame = {
+      val batch = ids.map(id => id -> vec())
+      batch.foreach { case (id, v) => model(id) = v }
+      batch.toDF("id", "vec")
+    }
+    def delete(ids: Seq[Long]): DataFrame = {
+      ids.foreach(model.remove)
+      ids.toDF("id")
+    }
+    // writes before the index exists land in the plain table
+    write("pre-index insert")(coll.insert(upsert(1000L until 1010L)))
+    coll.createIndex()
+    checkSearch("after createIndex")
+    write("insert")(coll.insert(upsert(2000L until 2020L)))
+    write("update")(coll.update(upsert((0L until 50L by 3) :+ 2005L)))
+    write("delete")(coll.delete(delete((1L until 60L by 4) :+ 2001L)))
+    write("absent delete")(coll.delete(delete(Seq(9999L, 2002L))))
+    checkSearch("after writes")
+    coll.createIndex()
+    checkSearch("after re-index")
+    write("update after re-index")(coll.update(upsert(Seq(1003L, 3000L))))
+    write("delete after re-index")(coll.delete(delete(1000L until 1005L)))
+    checkSearch("after re-index writes")
   }
 
   test("quantization/metric contracts are constructor-enforced") {
