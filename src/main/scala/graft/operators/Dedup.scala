@@ -373,9 +373,8 @@ object Dedup {
     // convergence count). Above the bound — any corpus-scale dedup —
     // the distributed rounds below run unchanged; localRows = 0
     // forces them (spec-gated identical).
-    // ONE read of `pairs` decides the path and feeds the union-find:
-    // an unmaterialised input (LSH joins + Jaccard check) would
-    // otherwise be evaluated once to count and again to collect
+    // One limited collect picks the path and, below the bound, is the
+    // union-find's input; above it the distributed rounds read `pairs` again.
     require(localRows >= 0 && localRows <= DriverPairBudget,
       s"localRows $localRows is outside the driver budget [0, $DriverPairBudget]")
     val head =

@@ -192,7 +192,11 @@ object IvfIndex {
     val merged = Mutations.applyBatch(
       idx.filter(col("cluster").isin(touched: _*)),
       upsAssigned, deletes, "id").localCheckpoint(true)
-    merged.write.mode("overwrite")
+    // the merge keeps the scan's partitioning, which would spread a
+    // cell over several files on every write; rebalancing on the cell
+    // shuffles only the touched cells' rows (rewritten in full anyway)
+    // and lets AQE size the writers, so small cells stay one file
+    merged.hint("rebalance", col("cluster")).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("cluster").parquet(path)
     val nonEmpty = merged.select("cluster").distinct()

@@ -9,11 +9,14 @@ import org.apache.spark.sql.functions._
   * single-row insert/update/delete
   * (/root/reference/bigvectorbench/algorithms/base/module.py:140-180).
   * A distributed store applies mutations as *batches* merged into the
-  * base relation in one map-only pass: base rows whose key the batch
-  * touches are dropped by an anti-join against the broadcast batch
-  * keys, and the batch's surviving upserts are appended. Only the
-  * batch is shuffled (to deduplicate its keys); the base is read once
-  * and never moves. This is the micro-batch compaction model
+  * base relation: base rows whose key the batch touches are dropped
+  * by an anti-join against the batch keys, and the batch's surviving
+  * upserts are appended. The join strategy is left to Spark's size
+  * statistics and AQE: a small batch (a collection write from a local
+  * frame) is broadcast, so the merge is one map-only pass over the
+  * base that shuffles only the batch (to deduplicate its keys); a
+  * corpus-sized batch falls back to a sort-merge join instead of
+  * broadcasting O(N) keys. This is the micro-batch compaction model
   * (Delta/Hudi-style), which is what survives at 100 TB — not per-row
   * RPCs.
   */
@@ -35,9 +38,9 @@ object Mutations {
       deletes: DataFrame,
       keyCol: String): DataFrame = {
     val cols = keyCol +: base.columns.filter(_ != keyCol).toSeq
-    val deleted = broadcast(deletes.select(col(keyCol)))
-    val touched = broadcast(upserts.select(col(keyCol))
-      .unionAll(deletes.select(col(keyCol))))
+    val deleted = deletes.select(col(keyCol))
+    val touched = upserts.select(col(keyCol))
+      .unionAll(deletes.select(col(keyCol)))
     val kept = base.join(touched, Seq(keyCol), "left_anti")
     val fresh = upserts.select(cols.map(col): _*).dropDuplicates(keyCol)
       .join(deleted, Seq(keyCol), "left_anti")

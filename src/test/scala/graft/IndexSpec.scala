@@ -109,6 +109,28 @@ class IndexSpec extends AnyFunSuite {
     assert(left == Set(0L, 1L))
   }
 
+  test("persisted upsert rewrites a touched cell as one file") {
+    val spark2 = spark
+    import spark2.implicits._
+    val cents = Array(Array(0.0, 0.0), Array(9.0, 9.0))
+    val vecs = (0L until 8L).map(i => (i, Array(i * 0.1f, 0f))) ++
+      (8L until 12L).map(i => (i, Array(9f, i * 0.1f)))
+    val p = java.nio.file.Files.createTempDirectory("graft_ups_files").toString
+    IvfIndex.persistIndex(IvfIndex.assign(
+      vecs.toDF("id", "vec").repartition(4), "vec", cents), p)
+    def files(cell: Int): Long = java.nio.file.Files
+      .list(java.nio.file.Paths.get(p, s"cluster=$cell"))
+      .filter(_.toString.endsWith(".parquet")).count()
+    assert(files(0) > 1, "the initial layout should split cell 0")
+    val ups = Seq((3L, Array(0.2f, 0.1f)), (20L, Array(0.1f, 0.2f)))
+      .toDF("id", "vec")
+    IvfIndex.upsertPersisted(spark, p, IvfIndex.assign(ups, "vec", cents),
+      Seq(5L).toDF("id"))
+    assert(files(0) == 1)
+    val left = spark.read.parquet(p).select("id").as[Long].collect().toSet
+    assert(left == (0L until 12L).toSet - 5L + 20L)
+  }
+
   test("q29 persisted upsert returns exactly q28's merged-index results") {
     val asTuples = (name: String) => SparkEntry.queries(name)(spark, sf001)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rank"),

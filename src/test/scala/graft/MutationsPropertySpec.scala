@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.util.Pretty
@@ -107,5 +111,38 @@ class MutationsPropertySpec extends AnyFunSuite {
     val got = table.select("id", "tag").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got == model.toMap)
+  }
+
+  /** Join operators of a physical plan, inside AQE's stages too. */
+  private def joinsOf(plan: SparkPlan): Seq[String] =
+    new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case _: BroadcastHashJoinExec => "broadcast"
+      case _: SortMergeJoinExec => "sort-merge"
+    }
+
+  test("Spark picks the join: small batches broadcast, big ones do not") {
+    val base = rowsDf((0L until 40L).map(k => (k, k.toInt)))
+      .repartition(3).localCheckpoint(true)
+    val w = Write((0L until 40L).map(k => k -> k.toInt).toMap,
+      List((3L, 1003), (45L, 1045), (3L, 1004)), List(4L, 45L, 99L))
+    def merged = Mutations.applyBatch(base, rowsDf(w.ups), keysDf(w.dels),
+      "id")
+    // a collection write: a small local batch is broadcast when the
+    // query is planned, so the base is read in one map-only pass and
+    // never shuffled
+    val small = joinsOf(merged.queryExecution.sparkPlan)
+    assert(small.nonEmpty && small.forall(_ == "broadcast"), small)
+    // a batch above the broadcast threshold is not forced into a
+    // broadcast; the sort-merge plan gives the same rows
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val big = merged
+      big.collect() // AQE fixes its final plan as the stages run
+      val joins = joinsOf(big.queryExecution.executedPlan)
+      assert(joins.nonEmpty && !joins.contains("broadcast"), joins)
+      checkWrite(w)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
