@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Cluster-wide injection point: ship the library jar and set
   * `spark.sql.extensions=graft.GraftExtensions` — every session then
@@ -18,21 +16,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo("graft", null, name, null, "", "", "", "", "", "",
       "scala_udf")
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def inject(name: String)(builder: Seq[Expression] => Expression): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftSession.sqlFunctions.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info(name), builder))
-
-    inject("vec_dot")(es => VecDot(es(0), es(1)))
-    inject("vec_l2")(es => VecL2(es(0), es(1)))
-    inject("vec_l2sq")(es => VecL2Sq(es(0), es(1)))
-    inject("vec_cosine_sim")(es => VecCosineSim(es(0), es(1)))
-    inject("vec_sign_hamming")(es => VecSignHamming(es(0), es(1)))
-    inject("text_fingerprint")(es => TextFingerprint(es(0)))
-    inject("poly_hash")(PolyHash.fromArgs)
-    inject("byte_sum")(es => ByteSum(es(0)))
-    inject("simhash64")(es => SimHash64(es(0)))
-    inject("pack_bits")(PackBits.fromArgs)
-    inject("packed_hamming")(es => PackedHamming(es(0), es(1)))
-    inject("rolling_hash_windows")(RollingHashWindows.fromArgs)
-  }
+    }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftshim.Shim
 
 import graft.functions._
@@ -67,31 +68,28 @@ object GraftSession {
     spark
   }
 
+  /** The vector/text kernels' SQL names and Catalyst builders — the
+    * one table both [[registerFunctions]] (per session) and
+    * [[GraftExtensions]] (cluster-wide injection) install.
+    */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", es => VecDot(es(0), es(1))),
+    ("vec_l2", es => VecL2(es(0), es(1))),
+    ("vec_l2sq", es => VecL2Sq(es(0), es(1))),
+    ("vec_cosine_sim", es => VecCosineSim(es(0), es(1))),
+    ("vec_sign_hamming", es => VecSignHamming(es(0), es(1))),
+    ("text_fingerprint", es => TextFingerprint(es(0))),
+    ("poly_hash", PolyHash.fromArgs),
+    ("byte_sum", es => ByteSum(es(0))),
+    ("simhash64", es => SimHash64(es(0))),
+    ("pack_bits", PackBits.fromArgs),
+    ("packed_hamming", es => PackedHamming(es(0), es(1))),
+    ("pq_adc", es => PqAdc(es(0), es(1))),
+    ("rolling_hash_windows", RollingHashWindows.fromArgs))
+
   /** Register the vector/text kernels as SQL functions. */
-  def registerFunctions(spark: SparkSession): Unit = {
-    Shim.registerFunction(spark, "vec_dot",
-      es => VecDot(es(0), es(1)))
-    Shim.registerFunction(spark, "vec_l2",
-      es => VecL2(es(0), es(1)))
-    Shim.registerFunction(spark, "vec_l2sq",
-      es => VecL2Sq(es(0), es(1)))
-    Shim.registerFunction(spark, "vec_cosine_sim",
-      es => VecCosineSim(es(0), es(1)))
-    Shim.registerFunction(spark, "vec_sign_hamming",
-      es => VecSignHamming(es(0), es(1)))
-    Shim.registerFunction(spark, "text_fingerprint",
-      es => TextFingerprint(es(0)))
-    Shim.registerFunction(spark, "poly_hash", PolyHash.fromArgs)
-    Shim.registerFunction(spark, "byte_sum",
-      es => ByteSum(es(0)))
-    Shim.registerFunction(spark, "simhash64",
-      es => SimHash64(es(0)))
-    Shim.registerFunction(spark, "pack_bits", PackBits.fromArgs)
-    Shim.registerFunction(spark, "packed_hamming",
-      es => PackedHamming(es(0), es(1)))
-    Shim.registerFunction(spark, "pq_adc",
-      es => PqAdc(es(0), es(1)))
-    Shim.registerFunction(spark, "rolling_hash_windows",
-      RollingHashWindows.fromArgs)
-  }
+  def registerFunctions(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      Shim.registerFunction(spark, name, builder)
+    }
 }

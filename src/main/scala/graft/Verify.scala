@@ -10,6 +10,8 @@ import java.nio.file.{Files, Paths}
   *     wall-clock budget kills the dump midway, everything already
   *     dumped is still comparable (truncation, not a zeroed round);
   *   - errors.json is rewritten after every failure, not once at exit;
+  *   - any errored entry makes the process exit 1, after the pool has
+  *     shut down and errors.json names it;
   *   - queries dump on a small worker pool (each is an independent
   *     Spark job; temp dirs, memory-sink names and model caches are
   *     all unique-or-concurrent-safe), cutting the dump wall so more
@@ -18,9 +20,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.create(appName = "graft-verify")
-    try run(spark, args(0), args(1),
-      if (args.length > 2) Some(args(2)) else None)
-    finally spark.stop()
+    val errored =
+      try run(spark, args(0), args(1),
+        if (args.length > 2) Some(args(2)) else None)
+      finally spark.stop()
+    if (errored.nonEmpty) {
+      System.err.println(s"[verify] ${errored.size} entries errored: " +
+        errored.mkString(", "))
+      sys.exit(1)
+    }
   }
 
   /** The dump body, session-in / session-out — callable from specs
@@ -30,9 +38,12 @@ object Verify {
     *
     * `shard`: only dump queries whose name matches the regex
     * (iteration aid; the driver always calls with two args).
+    *
+    * Returns the names of the entries that errored, sorted — the same
+    * keys errors.json holds.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
-      shard: Option[String]): Unit = {
+      shard: Option[String]): Seq[String] = {
     val keep: String => Boolean =
       shard.map(r => (n: String) => r.r.findFirstIn(n).isDefined)
         .getOrElse(_ => true)
@@ -87,5 +98,6 @@ object Verify {
     // driver's whole wall-clock budget before its external timeout)
     try tasks.foreach(_.get())
     finally pool.shutdownNow()
+    errors.keys.toSeq.sorted
   }
 }

@@ -509,8 +509,8 @@ object Dedup {
     * broadcast — boilerplate mass never reaches an exchange; every
     * residual key has cnt <= total/hotF with a 1-row build side,
     * exactly the shape AQE skew-join splits. The boilerplate SET is
-    * never broadcast whole (NOT guaranteed small: ScaleBench's
-    * planted corpus at minOcc=2 makes it O(corpus) distinct strings)
+    * never broadcast whole (NOT guaranteed small: a corpus with
+    * planted repeats at minOcc=2 makes it O(corpus) distinct strings)
     * — only the bounded head is. The rebuild agg shuffles doc-keyed
     * rows once. Nothing is ever quadratic and no full text travels
     * except doc-keyed segments.

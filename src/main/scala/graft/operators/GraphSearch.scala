@@ -146,10 +146,8 @@ object GraphSearch {
       m: Int,
       metric: VecMetric = VecMetric.Euclidean,
       backfill: Boolean = false,
-      nKnown: Long = -1L,
-      bcastRows: Long = 1L << 22): DataFrame =
-    diversifyBy(knn, base, lit(m), metric, backfill, nKnown, bcastRows,
-      Nil)
+      nKnown: Long = -1L): DataFrame =
+    diversifyBy(knn, base, lit(m), metric, backfill, nKnown, Nil)
 
   /** [[diversify]] generalised over a composite node key and a
     * per-row cap: `extraKeys` columns (e.g. "layer") ride along with
@@ -166,7 +164,6 @@ object GraphSearch {
       metric: VecMetric,
       backfill: Boolean,
       nKnown: Long,
-      bcastRows: Long,
       extraKeys: Seq[String]): DataFrame = {
     val keys = extraKeys :+ "id"
     // the pair stream is n·cand²/2 rows; each of the three vector
@@ -175,7 +172,7 @@ object GraphSearch {
     // member count pass it in (nKnown) and the table is broadcast
     // while it fits — join strategy only, never changes the result.
     val vraw = base.select(col("id"), col("vec"))
-    val v = if (nKnown > 0 && nKnown <= bcastRows) broadcast(vraw) else vraw
+    val v = if (nKnown > 0 && nKnown <= BcastRows) broadcast(vraw) else vraw
     val ci = knn.select(keys.map(col) ++ Seq(col("rank").as("ri"),
       col("neighbor_id").as("ni")): _*)
     val cj = knn.select(keys.map(col) ++ Seq(col("rank").as("rj"),
@@ -228,6 +225,26 @@ object GraphSearch {
   /** True iff the node belongs to layer `l` (l = 0 is everyone). */
   def inLayer(id: Column, l: Int): Column =
     (levelHash(id).bitwiseAND(lit((1L << l) - 1))) === 0L
+
+  /** Member count of every layer 0..levels from ONE histogram job
+    * over the id column: layer membership NESTS, so members(l) =
+    * Σ_{depth ≥ l} histogram(depth) and members(0) = N. The collect
+    * is ≤ levels + 1 rows.
+    */
+  private def layerMembers(nodes: DataFrame, levels: Int): IndexedSeq[Long] = {
+    val depth = (1 to levels)
+      .map(l => when(inLayer(col("id"), l), 1).otherwise(0))
+      .reduce(_ + _)
+    val hist = nodes.select(depth.as("d")).groupBy("d").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1))
+    (0 to levels).map(l => hist.filter(_._1 >= l).map(_._2).sum)
+  }
+
+  /** The vector-broadcast ceiling (rows) every join here guards on —
+    * ~4M rows ≈ 1 GB at 64-dim float. Join strategy only, never
+    * results.
+    */
+  private val BcastRows = 1L << 22
 
   /** Build the layer stack's edge lists: (layer, id, neighbor_id).
     * Layer 0 is the base kNN graph at `baseDeg`; each upper layer
@@ -295,8 +312,8 @@ object GraphSearch {
     * UpperBeam-wide descent (they never produce answers), so build
     * quality is cheap to trade for the (2·wk)²-per-node candidate
     * volume — measured at 200k: factor-1 uppers cost ~1/10th of
-    * factor-3 with the search recall gated by the ScaleBench recall
-    * stage, not assumed. Their hash init lands on member ids at only
+    * factor-3, with search recall measured alongside rather than
+    * assumed. Their hash init lands on member ids at only
     * ~(layer size / corpus id range) density; the 2 expansion rounds
     * recover from the sparse seed. Only Euclidean: NN-descent's
     * pruning heap is L2 (q27's contract).
@@ -308,24 +325,14 @@ object GraphSearch {
       upperDeg: Int,
       iters: Int,
       workingDegreeFactor: Int,
-      exactCap: Int = 1 << 14,
-      midCap: Int = 0,
-      bcastRows: Long = 1L << 22): DataFrame = {
-    val layerSizes: Map[Int, Long] = if (levels <= 1) Map.empty else {
-      val depth = (1 until levels)
-        .map(l => when(inLayer(col("id"), l), 1).otherwise(0))
-        .reduce(_ + _)
-      val hist = base.select(depth.as("d")).groupBy("d").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      (0 until levels)
-        .map(l => l -> hist.filter(_._1 >= l).values.sum).toMap
-    }
+      exactCap: Int = 1 << 14): DataFrame = {
+    val layerSizes: IndexedSeq[Long] =
+      if (levels <= 1) IndexedSeq.empty else layerMembers(base, levels)
     def nndLayer(l: Int, deg: Int, factor: Int): DataFrame = {
       val members =
         if (l == 0) base else base.filter(inLayer(col("id"), l))
       val knn = NnDescent.build(members, deg, iters, factor,
-        nKnown = layerSizes.getOrElse(l, -1L),
-        midCap = midCap, bcastRows = bcastRows)
+        nKnown = layerSizes.lift(l).getOrElse(-1L))
         .select(col("id"), col("neighbor_id"))
       knn.unionByName(knn.select(col("neighbor_id").as("id"),
         col("id").as("neighbor_id"))).distinct()
@@ -369,18 +376,9 @@ object GraphSearch {
       iters: Int,
       workingDegreeFactor: Int,
       exactCap: Int = 1 << 14,
-      backfill: Boolean = true,
-      midCap: Int = 0,
-      bcastRows: Long = 1L << 22): DataFrame = {
-    val layerSizes: Map[Int, Long] = if (levels <= 1) Map.empty else {
-      val depth = (1 until levels)
-        .map(l => when(inLayer(col("id"), l), 1).otherwise(0))
-        .reduce(_ + _)
-      val hist = base.select(depth.as("d")).groupBy("d").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      (0 until levels)
-        .map(l => l -> hist.filter(_._1 >= l).values.sum).toMap
-    }
+      backfill: Boolean = true): DataFrame = {
+    val layerSizes: IndexedSeq[Long] =
+      if (levels <= 1) IndexedSeq.empty else layerMembers(base, levels)
     def layer(l: Int, cand: Int, m: Int): DataFrame = {
       val members =
         if (l == 0) base else base.filter(inLayer(col("id"), l))
@@ -395,10 +393,9 @@ object GraphSearch {
         if (l == 0 || layerSizes(l) > exactCap)
           diversify(
             NnDescent.build(members, cand, iters, workingDegreeFactor,
-              nKnown = layerSizes.getOrElse(l, -1L),
-              midCap = midCap, bcastRows = bcastRows),
+              nKnown = layerSizes.lift(l).getOrElse(-1L)),
             members, m, backfill = backfill,
-            nKnown = layerSizes.getOrElse(l, -1L), bcastRows = bcastRows)
+            nKnown = layerSizes.lift(l).getOrElse(-1L))
             .select(col("id"), col("neighbor_id"))
         else
           KnnSearch.bruteForceBlocked(members,
@@ -514,18 +511,12 @@ object GraphSearch {
     }
 
     // the driver cut: smallest layer L (0 when even the base layer
-    // fits) whose member count fits driverTopRows — one histogram job
-    // over the id column (layer membership NESTS, so members(L) =
-    // Σ_{depth ≥ L} histogram(depth); members(0) = N)
-    val cutL: Option[Int] = if (driverTopRows <= 0) None else {
-      val depth = (1 to levels)
-        .map(l => when(inLayer(col("id"), l), 1).otherwise(0))
-        .reduce(_ + _)
-      val hist = base.select(depth.as("d")).groupBy("d").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      (0 to levels).find(l =>
-        hist.filter(_._1 >= l).values.sum <= driverTopRows)
-    }
+    // fits) whose member count fits driverTopRows — one
+    // [[layerMembers]] histogram job
+    val cutL: Option[Int] =
+      if (driverTopRows <= 0) None
+      else Some(layerMembers(base, levels).indexWhere(_ <= driverTopRows))
+        .filter(_ >= 0)
 
     var visited: DataFrame = null
     var lowerFrom = levels - 1 // first distributed upper-layer step
@@ -715,18 +706,17 @@ object GraphSearch {
     // first 256 KB page and OOM'd a 48 GB heap), while the beam side
     // is only batch × width. Each join therefore guards on its OWN
     // estimated row count against the repo's standard 4M-row
-    // broadcast ceiling (the NnDescent bcastRows analog), degree
+    // broadcast ceiling ([[BcastRows]]), degree
     // bounded conservatively by the symmetrized base discipline
     // (~2 × baseCand). Join strategy only, never results
     // (spec-gated: bulk path == broadcast-path halves bit-for-bit).
     // The QUERY side is degree-free (one row per batch member) so it
     // stays broadcast to the same ceiling.
     lazy val batchN = batch.count()
-    val bcastRows = 1L << 22
     def bcastIfUnder(estRows: Long)(df: DataFrame): DataFrame =
-      if (estRows > bcastRows) df else broadcast(df)
+      if (estRows > BcastRows) df else broadcast(df)
     val qSide =
-      if (batchN > bcastRows) qScore else broadcast(qScore)
+      if (batchN > BcastRows) qScore else broadcast(qScore)
 
     def score(cand: DataFrame, estRows: Long): DataFrame =
       vecs.join(bcastIfUnder(estRows)(cand), "id")
@@ -775,17 +765,10 @@ object GraphSearch {
     // (score, id) order, same link rule.
     val cutL: Option[Int] =
       if (driverTopRows <= 0 || batchN > driverTopRows) None
-      else {
-        val depth = (1 to levels)
-          .map(l => when(inLayer(col("id"), l), 1).otherwise(0))
-          .reduce(_ + _)
-        val hist = vecs.select(depth.as("d")).groupBy("d").count()
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        // 0: the whole base fits — the walk, the base rounds AND the
-        // link rule run driver-side (see the search twin's scaladoc)
-        (0 to levels).find(l =>
-          hist.filter(_._1 >= l).values.sum <= driverTopRows)
-      }
+      // 0: the whole base fits — the walk, the base rounds AND the
+      // link rule run driver-side (see the search twin's scaladoc)
+      else Some(layerMembers(vecs, levels).indexWhere(_ <= driverTopRows))
+        .filter(_ >= 0)
 
     // upper-layer links are captured mid-descent: after the layer-l
     // step the visited set is exactly the layer-l candidate pool
@@ -992,7 +975,7 @@ object GraphSearch {
       .select(col("layer"), col("id"), col("rank"), col("neighbor_id"))
       .localCheckpoint(true)
     val kept = diversifyBy(ranked, base, capCol, metric, backfill = true,
-      nKnown = -1L, bcastRows = 1L << 22, extraKeys = Seq("layer"))
+      nKnown = -1L, extraKeys = Seq("layer"))
       .select(col("layer"), col("id"), col("neighbor_id"))
     cold.select(col("layer"), col("id"), col("neighbor_id"))
       .unionByName(kept)

@@ -18,7 +18,7 @@ import graft.functions._
   */
 object NnDescent {
 
-  /** The deterministic sample order both caps rank by: a bijective
+  /** The deterministic sample order the reverse cap ranks by: a bijective
     * scramble of `x mod 2^20` — multiply by an odd constant and take
     * the product MOD 2^20 (odd multiplier ⇒ bijection on the ring).
     * Exact in int64 (product < 2^52) and SQL-replicable verbatim.
@@ -26,8 +26,8 @@ object NnDescent {
     * NnDescentSpec's order-shape guard:
     * (1) NOT the high bits: `(x·M) >> 20` is strictly monotone in x
     *     (slope M/2^20 ≈ 2532, never wraps), so ranking by it is
-    *     ranking by plain id — the bias that silently turned both
-    *     caps into "keep the smallest ids".
+    *     ranking by plain id — the bias that silently turned the
+    *     sampling into "keep the smallest ids".
     * (2) The per-round re-draw must vary the MULTIPLIER: any affine
     *     reseed ((x+a)·M + c ≡ x·M + const mod 2^20) merely ROTATES
     *     the order, so round-to-round only the ~Δ/2^20 of ids nearest
@@ -38,13 +38,13 @@ object NnDescent {
     *     genuinely different permutation, as Dong et al. 2011's
     *     per-iteration sample re-draw requires.
     * The SALT must fold into the multiplier too, for the same
-    * rotation-not-redraw reason WITHIN a round: the reverse cap
-    * (salt 97) and the mid cap (salt 131) run in the same iteration,
-    * and an additive-only salt would rank both by the same rotated
-    * permutation — correlated samples where Dong et al. need two
-    * independent draws. [[mult]] mixes 2·104729·salt into M (even ⇒
-    * still odd/bijective; 104729 coprime to the round factor 7919,
-    * so no (round, salt) pair collides for |Δround| < 104729).
+    * rotation-not-redraw reason WITHIN a round: two samples drawn in
+    * one iteration under different salts would otherwise rank by the
+    * same rotated permutation — correlated samples where Dong et al.
+    * need independent draws. [[mult]] mixes 2·104729·salt into M
+    * (even ⇒ still odd/bijective; 104729 coprime to the round factor
+    * 7919, so no (round, salt) pair collides for |Δround| < 104729).
+    * The reverse cap draws with salt 97.
     */
   def sampleOrder(x: org.apache.spark.sql.Column, salt: Long,
       round: Int = 0): org.apache.spark.sql.Column =
@@ -84,10 +84,10 @@ object NnDescent {
     * layer can take). The scoring joins attach a full vector to every
     * candidate row, and the second join's shuffle WRITE carries that
     * payload: ~(4·dim + 64) bytes per candidate row in flight per
-    * round. At 10M×64d / midCap 12 that is ~1.5e9 rows ≈ 0.5 TB —
-    * measured as "No space left on device" at 73 GB of local scratch
-    * (round-15 attempt 3). Splitting the candidate set into
-    * hash-disjoint chunks scored SEQUENTIALLY bounds the in-flight
+    * round. At 10M×64d, 1.5e9 candidate rows are ≈ 0.5 TB — measured
+    * as "No space left on device" at 73 GB of local scratch.
+    * Splitting the candidate set into hash-disjoint chunks scored
+    * SEQUENTIALLY bounds the in-flight
     * bytes at est/chunks; per-query top-k over the union of per-chunk
     * top-k lists is EXACT (each candidate row lands in exactly one
     * chunk), so chunking is join scheduling, never semantics.
@@ -174,7 +174,7 @@ object NnDescent {
 
   /** Scratch budget for one scoring pass: the env override if set,
     * else 40% of the usable space of the FIRST configured Spark
-    * local dir — exact in local mode (the gate and campaign shape);
+    * local dir — exact in local mode;
     * on a real cluster per-executor scratch aggregates across the
     * fleet, so the driver-disk default is conservative and the env
     * var is the honest knob (set it to the fleet's aggregate
@@ -203,19 +203,14 @@ object NnDescent {
     * top-k graph. Deterministic: hash-seeded init, (dist, id)
     * tie-breaks everywhere.
     *
-    * `midCap` (0 = off, the gate default) is Dong et al. 2011's
-    * sample rate applied AT THE JOIN KEY: at most `midCap` sources
-    * are kept per shared-neighbor group before the
-    * neighbor-of-neighbor pair join, chosen in a fixed
-    * bounded-multiplicative-hash order (deterministic, ties by id).
-    * The reverse-degree cap alone bounds each node's OUT-edges at
-    * 2wk, but the pair join groups by the EDGE TARGET, whose
-    * in-degree through the forward lists is not capped — a popular
-    * node sitting in thousands of top-wk lists still contributes
-    * in-degree² pairs. The mid cap closes that hole: candidate
-    * volume is ≤ n·midCap² + n·wk per round STRUCTURALLY, the bound
-    * a 100 TB build needs. Recall cost is the sampling tradeoff
-    * (measured in ScaleBench; spec-floored at sf0.01).
+    * Candidate volume is bounded by the reverse-degree cap alone:
+    * each node's undirected degree is ≤ 2wk, so a round generates at
+    * most n·(2wk)² pairs. The pair join groups by the edge TARGET,
+    * whose in-degree through the forward lists is not capped, so a
+    * popular node still contributes in-degree² pairs — Dong et al.
+    * 2011's per-group sample rate would close that hole, but no
+    * build in this repo needs it, and every oracled build (q27, q53,
+    * q55) mirrors the uncapped rounds.
     *
     * `bcastRows` is the vector-broadcast ceiling (rows): corpora at
     * or under it compute candidate scores map-side against a
@@ -225,8 +220,7 @@ object NnDescent {
     * Shuffle width is self-sized ([[autoShufflePartitions]] from the
     * structural per-round candidate volume) — a build at the next
     * scale tier picks its own partition count instead of OOMing
-    * behind a missing env var; SPARK_GRAFT_SHUFFLE_PARTITIONS
-    * overrides for calibration.
+    * behind a missing setting.
     */
   def build(
       base: DataFrame,
@@ -235,7 +229,6 @@ object NnDescent {
       workingDegreeFactor: Int = 3,
       seed: Long = 42L,
       nKnown: Long = -1L,
-      midCap: Int = 0,
       bcastRows: Long = 1L << 22,
       scratchBudget: Long = 0L,
       localRows: Long = 1L << 16): DataFrame = {
@@ -246,6 +239,11 @@ object NnDescent {
     // nKnown > 0 skips the count job — callers that already ran a
     // membership histogram (buildLayeredGraphsNnd) pass the size in
     val n = if (nKnown > 0) nKnown else base.count()
+    // per-round candidate volume: n·(2wk)² shared-neighbor pairs plus
+    // the n·wk current-edge add-back. The add-back is NOT decorative:
+    // with it dropped from the GC gate below, a 1M-node build measured
+    // a 39 GB two-rounds-coexist peak against ~20 GB nudged.
+    val perRoundCand = n * 4L * wk * wk + n * wk
 
     // Driver-resident build for sub-bound corpora/layers (the
     // NN-descent twin of GraphSearch's driver-resident top): when the
@@ -262,47 +260,29 @@ object NnDescent {
     // sample orders, same (score, id) top-k ties — localScore is the
     // spec-gated scalar twin of vec_l2) and spec-gated against the
     // distributed build; localRows = 0 forces distributed.
-    if (n <= localRows &&
-        n * (if (midCap > 0) midCap.toLong * midCap else 4L * wk * wk) +
-          n * wk <= (1L << 23))
-      return buildLocal(base, wk, k, n, iters, seed, midCap)
+    if (n <= localRows && perRoundCand <= (1L << 23))
+      return buildLocal(base, wk, k, n, iters, seed)
 
-    // ContextCleaner nudge gate + shuffle-width sizing share the same
-    // structural number: the per-round candidate volume (n·midCap²
-    // capped, n·(2wk)² uncapped, + the n·wk current-edge add-back —
-    // NOT decorative: 1M·16² alone is 2.56e8, a hair under the GC
-    // gate, and a round-14 1M mc16 run with the term dropped measured
-    // a 39 GB two-rounds-coexist peak where the nudged bound is ~20).
-    val perRoundCand =
-      n * (if (midCap > 0) midCap.toLong * midCap else 4L * wk * wk) +
-        n * wk
     // The per-iteration System.gc() below is only worth its
     // stop-the-world pause when a round's shuffle spill is actually
     // multi-GB — i.e. past ~2^28 pairs (tens of GB of candidate+top-k
-    // shuffle at 64d). Gate-scale builds (sf0.1: ~5e7 pairs) skip it;
-    // every measured multi-GB config (1M uncapped 9e8, 1M mc24
-    // 5.9e8, 1M mc16 2.7e8, 5M mc16 1.4e9) keeps the nudge.
+    // shuffle at 64d). Gate-scale builds (sf0.1: ~5e7 pairs) skip it.
     // NOTE: under -XX:+DisableExplicitGC the nudge is a silent no-op
-    // and the two-rounds-of-spill peak returns — scalebench.sh
-    // documents the incompatibility.
+    // and the two-rounds-of-spill peak returns.
     val gcNudge = perRoundCand >= (1L << 28)
     // Shuffle width is derived from the SAME formula, not left to a
     // human: each round streams perRoundCand rows through the typed
     // top-k aggregate, whose heap buffers are unmanaged JVM objects —
-    // a task fed too many rows fails as an opaque executor OOM (the
-    // 5M div build at the 32-partition session default, round 14)
+    // a task fed too many rows fails as an opaque executor OOM
     // instead of spilling. Target ~10M rows/task; the session default
     // is the floor (gate-scale builds keep their parallelism, AQE
-    // coalesces any excess); SPARK_GRAFT_SHUFFLE_PARTITIONS remains
-    // the manual override for calibration runs. Partitioning is join
-    // strategy only — never changes results (oracle-mirrored builds
-    // stay hash-identical at any width).
+    // coalesces any excess). Partitioning is join strategy only —
+    // never changes results (oracle-mirrored builds stay
+    // hash-identical at any width).
     val spark = base.sparkSession
     val shuffleKey = "spark.sql.shuffle.partitions"
     val sessionParts = spark.conf.get(shuffleKey).toInt
-    val buildParts = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .flatMap(_.trim.toIntOption)
-      .getOrElse(autoShufflePartitions(perRoundCand, sessionParts))
+    val buildParts = autoShufflePartitions(perRoundCand, sessionParts)
 
     if (buildParts != sessionParts)
       // operational record: the derived width is the number a cluster
@@ -346,7 +326,7 @@ object NnDescent {
         (rc, fc)
       }
     spark.conf.set(shuffleKey, buildParts.toString)
-    try buildAt(base, wk, k, n, iters, seed, midCap, bcastRows, gcNudge,
+    try buildAt(base, wk, k, n, iters, seed, bcastRows, gcNudge,
       roundChunks, finalChunks)
     finally spark.conf.set(shuffleKey, sessionParts.toString)
   }
@@ -363,7 +343,6 @@ object NnDescent {
       n: Long,
       iters: Int,
       seed: Long,
-      midCap: Int,
       bcastRows: Long,
       gcNudge: Boolean,
       roundChunks: Int = 1,
@@ -523,22 +502,7 @@ object NnDescent {
           org.apache.spark.sql.expressions.Window
             .partitionBy("id").orderBy(revOrd, col("nb"))))
         .filter(col("rr") <= wk).drop("rr")
-      val undAll = edges.unionAll(rev)
-      // mid-key sampling (midCap > 0): keep at most midCap sources
-      // per shared-neighbor group in [[sampleOrder]] (re-seeded per
-      // round so coverage accumulates across iterations), ties by
-      // id. The group size AT the pair-join key is capped, so the
-      // join fans out to ≤ midCap² pairs per mid no matter how
-      // popular the mid is. The current edge list is always scored
-      // regardless (the unionAll add-back below), so every node's
-      // kept list still refines monotonically.
-      val und = if (midCap <= 0) undAll else {
-        val midOrd = sampleOrder(col("id"), 131L, it)
-        undAll.withColumn("mr", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("nb").orderBy(midOrd, col("id"))))
-          .filter(col("mr") <= midCap).drop("mr")
-      }
+      val und = edges.unionAll(rev)
       // candidate pairs: nodes sharing a neighbor (join through mid)
       val a = und.select(col("nb").as("mid"), col("id").as("src"))
       val b = und.select(col("nb").as("mid"), col("id").as("dst"))
@@ -555,7 +519,7 @@ object NnDescent {
       // GB per round at millions of nodes) are only deleted after
       // their now-unreachable RDDs are collected. Without this, two
       // rounds of shuffle coexist on scratch disk and the peak
-      // doubles (measured at 5M/midCap=24: >74 GB by round 2 vs a
+      // doubles (measured at 5M nodes: >74 GB by round 2 vs a
       // ~single-round working set). Semantics-free — results are
       // checkpointed before the old lineage is dropped. Skipped at
       // small candidate volumes (see gcNudge above): there the spill
@@ -579,16 +543,14 @@ object NnDescent {
   }
 
   /** The driver-resident build ([[build]]'s sub-bound fast path):
-    * the SAME rounds as [[buildAt]] — init hash, reverse cap and
-    * mid cap by the same per-round [[sampleOrder]] permutations
-    * (ties by id), shared-neighbor candidate pairs + current-edge
-    * add-back, per-src top-wk by (score, id), final top-k rerank —
-    * run as plain Scala over one bounded collect. Multiset
-    * faithfulness note: the distributed mid cap ranks the und
-    * MULTISET (edges ++ rev can repeat a pair), so the local cap
-    * takes the first midCap ROWS of the same ordered multiset;
-    * candidate pairs then dedupe through the per-src sets exactly as
-    * the distributed .distinct() does. Scoring drops endpoints with
+    * the SAME rounds as [[buildAt]] — init hash, reverse cap by the
+    * same per-round [[sampleOrder]] permutation (ties by id),
+    * shared-neighbor candidate pairs + current-edge add-back,
+    * per-src top-wk by (score, id), final top-k rerank — run as
+    * plain Scala over one bounded collect. The und MULTISET (edges ++
+    * rev can repeat a pair) yields repeated candidate pairs, which
+    * dedupe through the per-src sets exactly as the distributed
+    * .distinct() does. Scoring drops endpoints with
     * no vector row (the init hash targets the full [0, n) id ring;
     * real id spaces have gaps) — the inner-join semantics of the
     * distributed vector join.
@@ -599,8 +561,7 @@ object NnDescent {
       k: Int,
       n: Long,
       iters: Int,
-      seed: Long,
-      midCap: Int): DataFrame = {
+      seed: Long): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
     val rows = base.select(col("id"), col("vec")).collect()
@@ -782,40 +743,14 @@ object NnDescent {
         while (t < keep) { rSrc(rN) = d; rDst(rN) = scratch(t); rN += 1; t += 1 }
         p = q
       }
-      // ---- und = edges ++ rev, optionally mid-capped per target
-      // (group by the row's SECOND element; rank rows by the FIRST's
-      // sample order, id ties; keep the first midCap ROWS — multiset
-      // faithful) ----
-      var uSrc = new Array[Long](eN + rN)
-      var uDst = new Array[Long](eN + rN)
+      // ---- und = edges ++ rev ----
+      val uSrc = new Array[Long](eN + rN)
+      val uDst = new Array[Long](eN + rN)
       System.arraycopy(eSrc, 0, uSrc, 0, eN)
       System.arraycopy(rSrc, 0, uSrc, eN, rN)
       System.arraycopy(eDst, 0, uDst, 0, eN)
       System.arraycopy(rDst, 0, uDst, eN, rN)
-      var uN = eN + rN
-      if (midCap > 0) {
-        val ui = Array.range(0, uN)
-        qsortIdx(ui, 0, uN - 1, uDst)
-        val kSrc = new Array[Long](uN)
-        val kDst = new Array[Long](uN)
-        val uScratch = new Array[Long](uN.max(1)) // und runs exceed eN
-        var kN = 0
-        var pp = 0
-        while (pp < uN) {
-          val d = uDst(ui(pp))
-          var qq = pp
-          while (qq < uN && uDst(ui(qq)) == d) qq += 1
-          val len = qq - pp
-          var t = 0
-          while (t < len) { uScratch(t) = uSrc(ui(pp + t)); t += 1 }
-          sortByOrd(uScratch, 0, len, 131L, it)
-          val keep = if (len < midCap) len else midCap
-          t = 0
-          while (t < keep) { kSrc(kN) = uScratch(t); kDst(kN) = d; kN += 1; t += 1 }
-          pp = qq
-        }
-        uSrc = kSrc; uDst = kDst; uN = kN
-      }
+      val uN = eN + rN
       // ---- candidate lists: nodes sharing a neighbor (all ordered
       // pairs within each und target group), plus the current edge
       // list add-back; duplicates kept here, deduped at scoring ----

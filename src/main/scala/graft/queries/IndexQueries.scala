@@ -361,7 +361,7 @@ object IndexQueries {
     val emb = Tables.embeddings(s, dir)
       .filter(Split.isTrain(col("vec_id")))
     val base = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
-    NnDescent.build(base, k = 5, midCap = OracledMidCap)
+    NnDescent.build(base, k = 5)
       .orderBy("id", "rank")
   }
 
@@ -397,12 +397,6 @@ object IndexQueries {
   // node, the same order as q27's, so the sf0.1 wall stays in q27's
   // band instead of 10× it
   val NndIters = 2
-  // the oracled NN-descent builds (q27/q53/q55) must run with the
-  // mid-key sampling OFF: nndCtes mirrors only the reverse-cap
-  // window. Shared through this constant so enabling midCap at a
-  // call site requires touching it — which trips nndCtes's require.
-  // (midCap is a ScaleBench/100 TB knob; see NnDescent.build.)
-  val OracledMidCap = 0
 
   def levelsFor(n: Long): Int =
     math.max(1, math.round(math.log(n / 16.0) / math.log(2)).toInt)
@@ -452,7 +446,7 @@ object IndexQueries {
       val p = java.nio.file.Files
         .createTempDirectory("graft_layer_graph_nnd").toString
       GraphSearch.buildLayeredGraphsNnd(base, lv, GraphDeg, UpperDeg,
-        NndIters, workingDegreeFactor = 1, midCap = OracledMidCap)
+        NndIters, workingDegreeFactor = 1)
         .write.mode("overwrite").partitionBy("layer").parquet(p)
       (p, lv)
     }
@@ -516,8 +510,7 @@ object IndexQueries {
       val p = java.nio.file.Files
         .createTempDirectory("graft_layer_graph_div").toString
       GraphSearch.buildLayeredGraphsDiversified(base, lv, GraphDeg, DivM,
-        UpperCand, UpperDeg, NndIters, workingDegreeFactor = 1,
-        midCap = OracledMidCap)
+        UpperCand, UpperDeg, NndIters, workingDegreeFactor = 1)
         .write.mode("overwrite").partitionBy("layer").parquet(p)
       (p, lv)
     }
@@ -571,8 +564,7 @@ object IndexQueries {
       val p = java.nio.file.Files
         .createTempDirectory("graft_layer_graph_ins").toString
       GraphSearch.buildLayeredGraphsDiversified(kept, lv, GraphDeg, DivM,
-        UpperCand, UpperDeg, NndIters, workingDegreeFactor = 1,
-        midCap = OracledMidCap)
+        UpperCand, UpperDeg, NndIters, workingDegreeFactor = 1)
         .write.mode("overwrite").partitionBy("layer").parquet(p)
       (p, lv)
     }
@@ -1745,17 +1737,10 @@ object IndexQueries {
     * over the undirected edge set) + (dist, id) top-wk pruning.
     * Shared by q27's oracle and q53's base-layer build.
     *
-    * The chain mirrors ONLY the reverse-cap sampling window (salt
-    * 97); NnDescent's midCap window (salt 131) has no SQL
-    * counterpart here, so every oracled build must run with
-    * midCap = [[OracledMidCap]] = 0 — the require below makes
-    * enabling it fail loudly at oracle-construction time instead of
-    * silently hash-diverging.
+    * The reverse-cap sampling window (salt 97) is NnDescent's only
+    * sample, mirrored here verbatim.
     */
   private def nndCtes(wk: Int, nIters: Int): String = {
-    require(OracledMidCap == 0,
-      "nndCtes has no midCap window — mirror NnDescent's salt-131 " +
-        "sampling in SQL before enabling midCap in oracled builds")
     val iters = (1 to nIters).map { r =>
       val prev = s"e${r - 1}"
       s"""u$r AS (SELECT id, nb FROM $prev

@@ -33,7 +33,8 @@ class BoundedCollectSpec extends AnyFunSuite {
         "own limit(localRows + 1) — " +
         "corpus-scale dedup keeps the distributed propagation"),
     "operators/GraphSearch.scala" ->
-      (10, "4x layer-membership histograms (<= levels rows); " +
+      (7, "one layer-membership histogram (<= levels + 1 rows), " +
+        "shared by the two layered builds and the two descents; " +
         "2x top-of-stack vectors+edges above a histogram-sized cut " +
         "(<= driverTopRows = 64k member rows by construction — the " +
         "cut may reach the base layer ONLY when the whole graph " +

@@ -4,11 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionsSpec extends AnyFunSuite {
-  test("GraftExtensions injection installs the kernels in a new session") {
-    // `spark.sql.extensions=graft.GraftExtensions` is a STATIC conf —
-    // it only takes effect when the SparkContext is created, so on the
-    // shared test context we exercise the same injection through the
-    // programmatic builder route. Never stop() the shared context.
+
+  /** Run `f` on a session built only with `GraftExtensions`.
+    * `spark.sql.extensions=graft.GraftExtensions` is a STATIC conf —
+    * it only takes effect when the SparkContext is created, so on the
+    * shared test context we exercise the same injection through the
+    * programmatic builder route. Never stop() the shared context.
+    */
+  private def withExtensionsSession(f: SparkSession => Unit): Unit = {
     val prev = SparkSession.getDefaultSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
@@ -19,9 +22,7 @@ class ExtensionsSpec extends AnyFunSuite {
         .withExtensions(new GraftExtensions)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
-      val row = spark.sql(
-        "SELECT vec_l2(array(0.0D, 3.0D), array(4.0D, 0.0D)) AS d").head()
-      assert(row.getDouble(0) == 5.0)
+      f(spark)
     } finally {
       SparkSession.clearDefaultSession()
       SparkSession.clearActiveSession()
@@ -30,5 +31,31 @@ class ExtensionsSpec extends AnyFunSuite {
         SparkSession.setActiveSession(p)
       }
     }
+  }
+
+  test("GraftExtensions injection installs the kernels in a new session") {
+    withExtensionsSession { spark =>
+      val row = spark.sql(
+        "SELECT vec_l2(array(0.0D, 3.0D), array(4.0D, 0.0D)) AS d").head()
+      assert(row.getDouble(0) == 5.0)
+    }
+  }
+
+  test("extension injection and registerFunctions install the same function table") {
+    val names = GraftSession.sqlFunctions.map(_._1)
+    assert(names.distinct.length == names.length, s"duplicate names: $names")
+    withExtensionsSession { spark =>
+      val missing = names.filterNot(spark.catalog.functionExists)
+      assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
+    }
+    // the per-session route, on a fresh session of the shared context
+    // (no extensions, no temp functions carried over)
+    val fresh = TestSpark.spark.newSession()
+    def listed: Set[String] =
+      fresh.catalog.listFunctions().collect().map(_.name).toSet
+    val before = listed
+    GraftSession.registerFunctions(fresh)
+    assert(listed -- before == names.toSet,
+      "registerFunctions installed a different set than the table")
   }
 }

@@ -6,6 +6,24 @@ import org.scalatest.funsuite.AnyFunSuite
 class NnDescentSpec extends AnyFunSuite {
   import TestSpark._
 
+  /** Scratch budget that forces the chunked scorer on the sf0.001
+    * train split into a few passes per round (3 at 450 × 64-dim), so
+    * the chunk tests exercise the spill and merge without paying the
+    * job launches of the 64-pass cap.
+    */
+  private val ChunkBudget = 1L << 26
+
+  /** Per-round chunk count a k = 5 build (wk = 15) derives from
+    * [[ChunkBudget]] — NnDescent.build's perRoundCand, n·(2wk)² +
+    * n·wk.
+    */
+  private def chunksAtBudget(base: org.apache.spark.sql.DataFrame): Int = {
+    val n = base.count()
+    val dim = base.select(size(col("vec"))).head().getInt(0)
+    graft.operators.NnDescent.scoreChunksFor(
+      n * 4L * 15 * 15 + n * 15, dim, ChunkBudget)
+  }
+
   test("nn-descent graph recovers most of the exact graph without N^2 work") {
     val approx = SparkEntry.queries("q27_nn_descent")(spark, sf)
       .select("id", "neighbor_id")
@@ -26,38 +44,12 @@ class NnDescentSpec extends AnyFunSuite {
       .filter(graft.queries.Split.isTrain(col("vec_id")))
     val base = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
       .localCheckpoint(true)
-    // both the uncapped and the mid-capped rounds (the cap ranks the
-    // und MULTISET — the local twin must stay multiset-faithful)
-    for (mc <- Seq(0, 16)) {
-      val local = NnDescent.build(base, k = 5, midCap = mc)
-      val dist = NnDescent.build(base, k = 5, midCap = mc,
-        localRows = 0L) // force the distributed path
-      assert(local.exceptAll(dist).count() == 0 &&
-        dist.exceptAll(local).count() == 0,
-        s"local build diverged from distributed at midCap=$mc")
-    }
-  }
-
-  test("mid-capped candidate sampling is deterministic and keeps most of the recall") {
-    import graft.operators.NnDescent
-    val emb = Tables.embeddings(spark, sf)
-      .filter(graft.queries.Split.isTrain(col("vec_id")))
-    val base = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
-      .localCheckpoint(true)
-    // midCap = 16 bites: und degree is up to 2wk = 30 here, so the
-    // pair join really runs on sampled groups — the branch every
-    // >1M ScaleBench build takes
-    val capped = NnDescent.build(base, k = 5, midCap = 16)
-      .select("id", "neighbor_id").localCheckpoint(true)
-    val exact = SparkEntry.queries("q25_graph_knn")(spark, sf)
-      .select("id", "neighbor_id")
-    val hit = capped.intersect(exact).count().toDouble
-    val total = exact.count().toDouble
-    info(f"mid-capped graph recall ${hit / total}%.3f")
-    assert(hit / total >= 0.5, s"mid-capped graph recall ${hit / total}")
-    val again = NnDescent.build(base, k = 5, midCap = 16)
-      .select("id", "neighbor_id")
-    assert(again.exceptAll(capped).count() == 0)
+    val local = NnDescent.build(base, k = 5)
+    val dist = NnDescent.build(base, k = 5,
+      localRows = 0L) // force the distributed path
+    assert(local.exceptAll(dist).count() == 0 &&
+      dist.exceptAll(local).count() == 0,
+      "local build diverged from distributed")
   }
 
   test("sampleOrder is a non-monotone bijection that varies by seed") {
@@ -87,8 +79,8 @@ class NnDescentSpec extends AnyFunSuite {
     val agree = xs.sliding(2).count(p =>
       (p(0)._2 < p(1)._2) == (p(0)._3 < p(1)._3)).toDouble / (xs.length - 1)
     assert(agree < 0.8, s"seeded orders nearly identical ($agree)")
-    // WITHIN-round salt independence (the reverse cap and mid cap run
-    // in the same iteration with salts 97/131): an additive-only salt
+    // WITHIN-round salt independence (two samples drawn in the same
+    // iteration under different salts): an additive-only salt
     // rotates the same permutation, so order agreement would sit near
     // 1 — the salt must fold into the multiplier too
     val ys = spark.range(4096).select(col("id"),
@@ -99,7 +91,7 @@ class NnDescentSpec extends AnyFunSuite {
     val saltAgree = ys.sliding(2).count(p =>
       (p(0)._2 < p(1)._2) == (p(0)._3 < p(1)._3)).toDouble / (ys.length - 1)
     assert(saltAgree < 0.8,
-      s"rev/mid cap orders nearly identical within a round ($saltAgree)")
+      s"salted orders nearly identical within a round ($saltAgree)")
   }
 
   test("auto shuffle width derives from the per-round candidate volume") {
@@ -148,30 +140,33 @@ class NnDescentSpec extends AnyFunSuite {
       .filter(graft.queries.Split.isTrain(col("vec_id")))
     val base = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
       .localCheckpoint(true)
-    // broadcast path (the gate default), shuffle path unchunked, and
-    // shuffle path FORCED into multiple sequential chunks (a 1 MB
-    // budget at this sf) must all produce the identical graph:
-    // chunking partitions the candidate set hash-disjointly and merges
-    // per-chunk top-k exactly, so it is join scheduling, not semantics
-    val bcast = NnDescent.build(base, k = 5, midCap = 8)
-      .localCheckpoint(true)
-    val shuffle = NnDescent.build(base, k = 5, midCap = 8, bcastRows = 1)
-      .localCheckpoint(true)
-    val chunked = NnDescent.build(base, k = 5, midCap = 8, bcastRows = 1,
-      scratchBudget = 1L << 20).localCheckpoint(true)
+    assert(chunksAtBudget(base) >= 2,
+      "ChunkBudget no longer forces chunked scoring at this sf")
+    // the default build (driver-resident at this sf, spec-gated
+    // bit-identical to the distributed broadcast path), the
+    // distributed shuffle path unchunked, and the shuffle path FORCED
+    // into multiple sequential chunks must all produce the identical
+    // graph: chunking partitions the candidate set hash-disjointly
+    // and merges per-chunk top-k exactly, so it is join scheduling,
+    // not semantics
+    val bcast = NnDescent.build(base, k = 5).localCheckpoint(true)
+    val shuffle = NnDescent.build(base, k = 5, bcastRows = 1,
+      localRows = 0L).localCheckpoint(true)
+    val chunked = NnDescent.build(base, k = 5, bcastRows = 1,
+      scratchBudget = ChunkBudget, localRows = 0L).localCheckpoint(true)
     // and the checkpoint-and-filter fallback (clusters without a
     // shared spill filesystem take it) — same graph again
     val nospill = try {
       sys.props("graft.nnd.spill") = "-"
       assert(NnDescent.spillRoot(spark).isEmpty)
-      NnDescent.build(base, k = 5, midCap = 8, bcastRows = 1,
-        scratchBudget = 1L << 20).localCheckpoint(true)
+      NnDescent.build(base, k = 5, bcastRows = 1,
+        scratchBudget = ChunkBudget, localRows = 0L).localCheckpoint(true)
     } finally sys.props.remove("graft.nnd.spill")
     assert(NnDescent.spillRoot(spark).nonEmpty,
       "local mode should default to the pruned parquet spill")
     assert(shuffle.exceptAll(bcast).count() == 0 &&
       bcast.exceptAll(shuffle).count() == 0,
-      "join strategy (broadcast vs shuffle) changed the graph")
+      "shuffle-path scoring changed the graph")
     assert(chunked.exceptAll(bcast).count() == 0 &&
       bcast.exceptAll(chunked).count() == 0,
       "sequential score chunking changed the graph")
@@ -194,13 +189,14 @@ class NnDescentSpec extends AnyFunSuite {
       .filter(graft.queries.Split.isTrain(col("vec_id")))
     val base = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
       .localCheckpoint(true)
-    val bcast = NnDescent.build(base, k = 5, midCap = 8)
-      .localCheckpoint(true)
+    assert(chunksAtBudget(base) >= 2,
+      "ChunkBudget no longer forces chunked scoring at this sf")
+    val bcast = NnDescent.build(base, k = 5).localCheckpoint(true)
     val viaUri = try {
       sys.props("graft.nnd.spill") = s"file:$root"
       assert(NnDescent.spillRoot(spark).contains(s"file:$root"))
-      NnDescent.build(base, k = 5, midCap = 8, bcastRows = 1,
-        scratchBudget = 1L << 20).localCheckpoint(true)
+      NnDescent.build(base, k = 5, bcastRows = 1,
+        scratchBudget = ChunkBudget, localRows = 0L).localCheckpoint(true)
     } finally sys.props.remove("graft.nnd.spill")
     assert(viaUri.exceptAll(bcast).count() == 0 &&
       bcast.exceptAll(viaUri).count() == 0,

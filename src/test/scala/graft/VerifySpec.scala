@@ -22,7 +22,8 @@ class VerifySpec extends AnyFunSuite {
   test("sharded Verify dump: parseable oracle_sql.json + errors.json, parquet per query") {
     val out = Files.createTempDirectory("graft_verify_spec").toString
     val shard = "(a01_pricing_agg|s03_orc_ingest)"
-    Verify.run(spark, "/root/testdata/sf0.001", out, Some(shard))
+    assert(Verify.run(spark, "/root/testdata/sf0.001", out, Some(shard))
+      .isEmpty)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val oracle = om.readTree(Files.readString(Paths.get(s"$out/oracle_sql.json")))
     assert(oracle.isObject, "oracle_sql.json is not a JSON object")
@@ -40,5 +41,17 @@ class VerifySpec extends AnyFunSuite {
         s"no parquet landed for $q")
       assert(spark.read.parquet(s"$out/$q").count() > 0, s"$q dump empty")
     }
+  }
+
+  test("an errored entry is returned and written to errors.json") {
+    val out = Files.createTempDirectory("graft_verify_err").toString
+    val missing = Files.createTempDirectory("graft_verify_nosf")
+      .resolve("absent").toString
+    val errored = Verify.run(spark, missing, out, Some("^a01_pricing_agg$"))
+    assert(errored == Seq("a01_pricing_agg"))
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val errs = om.readTree(Files.readString(Paths.get(s"$out/errors.json")))
+    assert(errs.size() == 1 && errs.has("a01_pricing_agg"),
+      s"errors.json does not name the failed entry: $errs")
   }
 }
