@@ -1,53 +1,159 @@
 #!/usr/bin/env python3
-"""Local replica of the driver's DuckDB correctness compare for a
-subset of queries: run Verify first (or pass --dump to run it), then
-compare each <out>/<name> parquet against the oracle SQL at sfDir.
+"""The DuckDB oracle compare for a graft.Verify dump.
 
-Usage: python3 scripts/check_queries.py <sfDir> <outDir> [name ...]
+Runs every entry of <dumpDir>/oracle_sql.json against the scale-factor
+tables in <sfDir> and compares the result with the dumped parquet rows
+in <dumpDir>/<name>/:
+
+  - column names and dtypes, columns sorted by name (the dump is read
+    with pandas, the oracle fetched from DuckDB as pandas, so an int32
+    column against an int64 one is a mismatch);
+  - the rows, sorted NULL-safely (NULLs and NaNs compare equal to each
+    other and sort first) and compared value for value.
+
+DuckDB runs under a memory cap and spills to a capped temp directory.
+
+Usage:
+  python3 scripts/check_queries.py <sfDir> <dumpDir> [name ...]
+      [--memory-limit 4GB] [--threads 2] [--temp-dir DIR] [--max-temp 20GB]
+
+Prints one line per entry (MATCH / MISMATCH / ERROR / MISSING) and a
+summary, and exits 1 on any mismatch, any query error, or any oracle
+entry with no dump directory.
 """
-import json, sys, glob
+import argparse
+import glob
+import json
+import math
+import os
+import shutil
+import signal
+import sys
+import tempfile
+import time
+
 import duckdb
 import pandas as pd
 
-def canon(df: pd.DataFrame) -> tuple:
-    df = df.reindex(sorted(df.columns), axis=1)
-    df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
-    # hash on rounded repr to mirror float tolerance-free compare
-    return (tuple(df.columns), pd.util.hash_pandas_object(
-        df.astype(str), index=False).sum())
+TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings"]
+
+
+def value(v):
+    """One cell as a comparable, hashable Python value (None for NULL)."""
+    if v is None or (isinstance(v, float) and math.isnan(v)):
+        return None
+    if hasattr(v, "tolist"):  # numpy arrays and scalars
+        v = v.tolist()
+    if isinstance(v, (list, tuple)):
+        return tuple(value(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(sorted((k, value(x)) for k, x in v.items()))
+    try:
+        if pd.isna(v):
+            return None
+    except (TypeError, ValueError):
+        pass
+    return v
+
+
+def rows(df):
+    """The frame's rows, columns by name, in a NULL-safe sorted order."""
+    cols = sorted(df.columns)
+    out = [tuple(value(v) for v in r)
+           for r in df[cols].itertuples(index=False, name=None)]
+    return sorted(out, key=lambda r: tuple((v is not None, repr(v))
+                                           for v in r))
+
+
+def schema(df):
+    return [(c, str(df[c].dtype)) for c in sorted(df.columns)]
+
+
+def compare(con, name, sql, dump_dir):
+    """(status, detail) for one oracle entry."""
+    path = os.path.join(dump_dir, name)
+    if not os.path.isdir(path):
+        return "MISSING", "no dump directory"
+    try:
+        got = pd.concat([pd.read_parquet(f) for f in
+                         sorted(glob.glob(os.path.join(path, "*.parquet")))],
+                        ignore_index=True)
+    except Exception as e:  # no part file, or an unreadable one
+        return "ERROR", f"dump: {type(e).__name__}: {e}".splitlines()[0]
+    try:
+        want = con.execute(sql).df()
+    except Exception as e:  # the oracle itself failed
+        return "ERROR", f"oracle: {type(e).__name__}: {e}".splitlines()[0]
+    if schema(got) != schema(want):
+        return "MISMATCH", f"schema: dump {schema(got)} oracle {schema(want)}"
+    a, b = rows(got), rows(want)
+    if len(a) != len(b):
+        return "MISMATCH", f"rows: dump {len(a)} oracle {len(b)}"
+    for i, (x, y) in enumerate(zip(a, b)):
+        if x != y:
+            return "MISMATCH", f"row {i}: dump {x} oracle {y}"
+    return "MATCH", f"{len(a)} rows"
+
 
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:]
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    if not names:
-        names = sorted(oracle)
-    tables = ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]
-    fails = 0
-    for name in names:
-        if name not in oracle:
-            print(f"{name}: NO ORACLE (rows-only)")
-            continue
-        con = duckdb.connect()
-        for t in tables:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-        want = con.execute(oracle[name]).df()
-        files = glob.glob(f"{out_dir}/{name}/*.parquet")
-        got = pd.concat([pd.read_parquet(f) for f in files])
-        sw, sg = canon(want), canon(got)
-        rows = len(want) == len(got)
-        schema = sw[0] == sg[0]
-        h = sw[1] == sg[1]
-        status = "OK" if (rows and schema and h) else "FAIL"
-        if status == "FAIL":
-            fails += 1
-        print(f"{name}: {status} rows={len(got)}/{len(want)} "
-              f"schema={schema} hash={h}")
-        if not schema:
-            print(f"  spark cols: {sg[0]}\n  oracle cols: {sw[0]}")
-    sys.exit(1 if fails else 0)
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("dump_dir")
+    ap.add_argument("names", nargs="*",
+                    help="entries to check (default: every oracle entry)")
+    ap.add_argument("--memory-limit", default="4GB")
+    ap.add_argument("--threads", type=int, default=2)
+    ap.add_argument("--temp-dir", default=None,
+                    help="DuckDB spill directory (default: a fresh one "
+                         "under the system temp dir, removed at exit)")
+    ap.add_argument("--max-temp", default="20GB",
+                    help="cap on the spill directory's size")
+    args = ap.parse_args()
+
+    oracle = json.load(open(os.path.join(args.dump_dir, "oracle_sql.json")))
+    names = args.names or sorted(oracle)
+    own_temp = args.temp_dir is None
+    temp_dir = tempfile.mkdtemp(prefix="graft_duckdb_") if own_temp \
+        else args.temp_dir
+
+    def killed(*_):  # exit at once, but not without removing our spill
+        if own_temp:
+            shutil.rmtree(temp_dir, ignore_errors=True)
+        os._exit(1)
+    signal.signal(signal.SIGTERM, killed)
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{args.memory_limit}'")
+    con.execute(f"SET threads = {args.threads}")
+    con.execute(f"SET temp_directory = '{temp_dir}'")
+    con.execute(f"SET max_temp_directory_size = '{args.max_temp}'")
+    for t in TABLES:
+        path = os.path.join(args.sf_dir, f"{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+
+    start = time.time()
+    bad = []
+    try:
+        for name in names:
+            if name not in oracle:
+                status, detail = "ERROR", "no oracle SQL for this entry"
+            else:
+                t0 = time.time()
+                status, detail = compare(con, name, oracle[name],
+                                         args.dump_dir)
+                detail += f" ({time.time() - t0:.1f} s)"
+            print(f"{name}: {status} {detail}", flush=True)
+            if status != "MATCH":
+                bad.append(name)
+    finally:
+        con.close()
+        if own_temp:
+            shutil.rmtree(temp_dir, ignore_errors=True)
+    n = len(names)
+    print(f"{n - len(bad)}/{n} MATCH in {time.time() - start:.1f} s"
+          + (f"; not matching: {', '.join(bad)}" if bad else ""))
+    sys.exit(1 if bad else 0)
+
 
 if __name__ == "__main__":
     main()

@@ -32,13 +32,11 @@ object GraphSearch {
     * queries: (query_id, qvec). Returns (query_id, rank, neighbor_id,
     * score) — top-k of every node VISITED by the beam walk.
     *
-    * `entryBeam` > 0 enables the LAYERED entry (the HNSW coarse-layer
-    * descent): the entryN sample rows form layer 1, each query scores
-    * that tiny layer and enters the base graph at only its
-    * `entryBeam` nearest layer rows — a narrower, better-aimed front
-    * than seeding every query with all entryN rows, so the same
-    * visited budget buys more rounds of real walking. `entryBeam` = 0
-    * keeps the flat behavior (all entryN rows seed the walk).
+    * The entry is a single coarse layer: the first `entryN` ids form
+    * it, each query scores that tiny layer and enters the graph at
+    * only its `entryBeam` nearest layer rows — a narrower, better-aimed
+    * front than seeding every query with all entryN rows, so the same
+    * visited budget buys more rounds of real walking.
     */
   def beamSearch(
       base: DataFrame,
@@ -48,10 +46,10 @@ object GraphSearch {
       beam: Int,
       rounds: Int,
       entryN: Int,
-      metric: VecMetric = VecMetric.Euclidean,
-      entryBeam: Int = 0): DataFrame =
+      entryBeam: Int,
+      metric: VecMetric = VecMetric.Euclidean): DataFrame =
     beamSearchWithVisited(base, graph, queries, k, beam, rounds, entryN,
-      metric, entryBeam)._1
+      entryBeam, metric)._1
 
   /** [[beamSearch]] plus the per-query count of nodes the walk scored
     * — the visited-fraction metric a graph index is judged by.
@@ -64,53 +62,107 @@ object GraphSearch {
       beam: Int,
       rounds: Int,
       entryN: Int,
-      metric: VecMetric = VecMetric.Euclidean,
-      entryBeam: Int = 0): (DataFrame, DataFrame) = {
-    val vecs = base.select(col("id"), col("vec"))
+      entryBeam: Int,
+      metric: VecMetric = VecMetric.Euclidean): (DataFrame, DataFrame) = {
+    val w = new Walker(base, queries, metric, () => queries.count(),
+      EstFanout)
+    // the coarse layer: the first entryN ids in id order (the same rows
+    // IVF's sample-init picks as centroids — a fixed, replicable seed
+    // set), evaluated for every query
+    val entries = w.vecs.orderBy("id").limit(entryN).select("id")
+    val layer = w.score(entries.crossJoin(queries.select("query_id")),
+      w.batchN * entryN)
+    var visited = KnnSearch.topKOf(layer, entryBeam, metric.asc)
+      .select(col("query_id"), col("neighbor_id").as("id"), col("score"))
+      .localCheckpoint(true)
     val edges = graph.select(col("id"), col("neighbor_id"))
+    for (_ <- 1 to rounds)
+      visited = w.step(visited, edges, beam)
 
-    // score a (query_id, id) candidate set: one base scan, candidates
-    // broadcast (Q x beam x degree rows — always tiny)
-    def score(cand: DataFrame): DataFrame =
-      vecs.join(broadcast(cand), "id")
-        .join(broadcast(queries), "query_id")
+    // the layer scan scored entryN rows per query however few of them
+    // seeded the walk — count it in the visited metric honestly
+    val visitedCounts = visited.groupBy("query_id")
+      .agg(count(lit(1)).as("n_visited"))
+      .withColumn("n_visited",
+        col("n_visited") + lit((entryN - entryBeam).toLong))
+    (KnnSearch.topKOf(visited, k, metric.asc), visitedCounts)
+  }
+
+  /** Rows-per-query estimate for the broadcast guards where the walk
+    * knows no tighter bound: a stack's top layer (levelsFor targets
+    * ~16 members) and a search graph's out-degree (≤ 2 × the build
+    * degree once symmetrized). Join strategy only, never results.
+    */
+  private val EstFanout = 64
+
+  /** The one distributed walk step, shared by the flat search, the
+    * layered search and the insert: the top-`width` of every query's
+    * visited set expands one hop through `edges`, and only the fresh
+    * (query, node) pairs are scored.
+    *
+    * Each broadcast is guarded by its OWN estimated rows against
+    * [[BcastRows]]: the beam side carries batch × width rows, the
+    * candidate side batch × width × `degEst` (the caller's out-degree
+    * bound), the query side one row per batch member. At search batch
+    * sizes (~100 queries) every guard broadcasts; an insert batch is
+    * whatever the mutation cadence delivers, and even a sub-64k batch
+    * can put a multi-10M-row HashedRelation on the build side
+    * (measured: a 50k insert at beam 32 carried ~38M candidate rows,
+    * whose pinned broadcast starved every HashAggregate's first 256 KB
+    * page and OOM'd a 48 GB heap). Join strategy only, never results
+    * (spec-gated: a bulk insert == its broadcast-path halves).
+    *
+    * The scoring copy of `queries` gets FRESH attribute ids (each
+    * Alias mints a new exprId): a localCheckpoint'ed visited set keeps
+    * the attribute ids it inherited from `queries`, so re-joining the
+    * original would put one exprId on both sides of a join between
+    * DIFFERENT relations, which DeduplicateRelations cannot rewrite
+    * ("conflicting references" — the un-hinted bulk join hit it).
+    *
+    * The visited set grows to ~batch × visited-per-query rows —
+    * hundreds of millions for a bulk insert (measured: a 100k insert
+    * at 48 GB died re-caching spilled DESERIALIZED checkpoint blocks
+    * with ~25 of them registered). So blocks are stored SERIALIZED and
+    * each step unpersists the set it superseded; callers materialise
+    * anything they derive from a visited set before the next step.
+    */
+  private final class Walker(base: DataFrame, queries: DataFrame,
+      metric: VecMetric, batchRows: () => Long, degEst: Int) {
+    val vecs: DataFrame = base.select(col("id"), col("vec"))
+    lazy val batchN: Long = batchRows()
+    private val qScore = queries.select(col("query_id").as("query_id"),
+      col("qvec").as("qvec"))
+
+    private def bcastIfUnder(estRows: Long)(df: DataFrame): DataFrame =
+      if (estRows > BcastRows) df else broadcast(df)
+
+    /** Score a (query_id, id) candidate set of ~`estRows` rows. */
+    def score(cand: DataFrame, estRows: Long): DataFrame =
+      vecs.join(bcastIfUnder(estRows)(cand), "id")
+        .join(bcastIfUnder(batchN)(qScore), "query_id")
         .select(col("query_id"), col("id"),
           metric.score(col("qvec"), col("vec")).as("score"))
 
-    // layer 1: the first entryN ids in id order (the same rows IVF's
-    // sample-init picks as centroids — a fixed, replicable seed set),
-    // evaluated for every query
-    val entries = vecs.orderBy("id").limit(entryN).select("id")
-    val layer = score(entries.crossJoin(queries.select("query_id")))
-    var visited = (if (entryBeam > 0)
-      KnnSearch.topKOf(layer, entryBeam, metric.asc)
-        .select(col("query_id"), col("neighbor_id").as("id"), col("score"))
-    else layer).localCheckpoint(true)
-
-    for (_ <- 1 to rounds) {
-      // beam = top-`beam` of everything visited so far (scores are
+    def step(visited: DataFrame, edges: DataFrame, width: Int): DataFrame = {
+      // beam = top-`width` of everything visited so far (scores are
       // static, so this equals the classic beam ∪ new-candidates
       // re-selection), then expand one hop
-      val beamIds = KnnSearch.topKOf(visited, beam, metric.asc)
+      val beamIds = KnnSearch.topKOf(visited, width, metric.asc)
         .select(col("query_id"), col("neighbor_id").as("id"))
-      val cand = edges.join(broadcast(beamIds), "id")
+      val cand = edges.join(bcastIfUnder(batchN * width)(beamIds), "id")
         .select(col("query_id"), col("neighbor_id").as("id"))
         .distinct()
       // never re-score a visited node (and never let a duplicate
       // occupy two beam slots)
       val fresh = cand.join(visited.select("query_id", "id"),
         Seq("query_id", "id"), "left_anti")
-      visited = visited.unionByName(score(fresh)).localCheckpoint(true)
+      val next = visited
+        .unionByName(score(fresh, batchN * width * degEst))
+        .localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      visited.unpersist() // no-op on a driver-walk seed
+      next
     }
-
-    // the layer scan scored entryN rows per query regardless of how
-    // many seeded the walk — count it in the visited metric honestly
-    val visitedCounts = visited.groupBy("query_id")
-      .agg(count(lit(1)).as("n_visited"))
-      .withColumn("n_visited",
-        if (entryBeam > 0) col("n_visited") + lit((entryN - entryBeam).toLong)
-        else col("n_visited"))
-    (KnnSearch.topKOf(visited, k, metric.asc), visitedCounts)
   }
 
   /** HNSW's neighbor-selection heuristic (Malkov & Yashunin 2018,
@@ -131,8 +183,8 @@ object GraphSearch {
     * (distance, id); base: (id, vec). Returns the same shape,
     * re-ranked 1..≤m among survivors. Cost: one N·wk²/2 pair
     * self-join + three vector joins — linear in N at fixed wk.
-    */
-  /** `backfill` = the paper's keepPrunedConnections flag (Malkov &
+    *
+    * `backfill` = the paper's keepPrunedConnections flag (Malkov &
     * Yashunin Alg. 4): when the prune leaves fewer than m survivors,
     * refill the open slots with the closest PRUNED candidates —
     * survivors first, then pruned, both in candidate-rank order. The
@@ -246,49 +298,60 @@ object GraphSearch {
     */
   private val BcastRows = 1L << 22
 
-  /** Build the layer stack's edge lists: (layer, id, neighbor_id).
-    * Layer 0 is the base kNN graph at `baseDeg`; each upper layer
-    * 1..levels-1 is the kNN graph AMONG that layer's members at the
-    * cheaper `upperDeg` (upper layers only aim the descent, they
-    * never produce answers). `symmetric` SYMMETRIZES each layer
-    * (id→nb plus nb→id, deduped) — HNSW's bidirectional links: a
-    * directed kNN graph strands walks in basins whose members point
-    * inward but are pointed at by few, and reverse edges are what let
-    * a walk climb back out. Exact per-layer builds here (the upper
-    * layers cost a vanishing (N/2^l)^2 ≤ N^2/3 extra relative to the
-    * base build); at 100 TB every layer takes the NN-descent path
-    * (q27) — the stack shape is identical.
+  /** The one layered-stack skeleton: per layer 0..levels-1, the
+    * member filter (layer 0 is everyone), the layer's directed
+    * (id, neighbor_id) lists from `lists(l, members)`, and
+    * SYMMETRIZATION (id→nb plus nb→id, deduped) — HNSW's bidirectional
+    * links: a directed kNN graph strands walks in basins whose members
+    * point inward but are pointed at by few, and reverse edges are
+    * what let a walk climb back out. Returns (layer, id, neighbor_id).
+    * The three builders below differ only in `lists`.
     */
-  /** One exact layer's symmetrized edge list (see
-    * [[buildLayeredGraphs]] for the symmetrization rationale).
-    */
-  private def exactLayer(base: DataFrame, l: Int, deg: Int,
-      metric: VecMetric, symmetric: Boolean): DataFrame = {
-    val members =
-      if (l == 0) base else base.filter(inLayer(col("id"), l))
-    val knn = KnnSearch.bruteForceBlocked(members,
+  private def layerStack(base: DataFrame, levels: Int)(
+      lists: (Int, DataFrame) => DataFrame): DataFrame =
+    (0 until levels).map { l =>
+      val members =
+        if (l == 0) base else base.filter(inLayer(col("id"), l))
+      val knn = lists(l, members)
+      knn.unionByName(knn.select(col("neighbor_id").as("id"),
+        col("id").as("neighbor_id"))).distinct()
+        .select(lit(l).as("layer"), col("id"), col("neighbor_id"))
+    }.reduce(_ unionByName _)
+
+  /** Exact top-`deg` (id, neighbor_id) lists among `members`. */
+  private def exactLists(members: DataFrame, deg: Int,
+      metric: VecMetric): DataFrame =
+    KnnSearch.bruteForceBlocked(members,
       members.select(col("id").as("query_id"), col("vec").as("qvec")),
       deg, metric,
       pairFilter = Some(col("id") =!= col("query_id")))
       .select(col("query_id").as("id"), col("neighbor_id"))
-    val edges = if (symmetric)
-      knn.unionByName(knn.select(col("neighbor_id").as("id"),
-        col("id").as("neighbor_id"))).distinct()
-    else knn
-    edges.select(lit(l).as("layer"), col("id"), col("neighbor_id"))
-  }
 
+  /** Every layer's member count, for the NN-descent-tiered builders
+    * (one histogram job; a one-layer stack has no upper tier).
+    */
+  private def tierSizes(base: DataFrame, levels: Int): IndexedSeq[Long] =
+    if (levels <= 1) IndexedSeq.empty else layerMembers(base, levels)
+
+  /** Build the layer stack's edge lists: (layer, id, neighbor_id).
+    * Layer 0 is the base kNN graph at `baseDeg`; each upper layer
+    * 1..levels-1 is the kNN graph AMONG that layer's members at the
+    * cheaper `upperDeg` (upper layers only aim the descent, they
+    * never produce answers), each layer symmetrized ([[layerStack]]).
+    * Exact per-layer builds here (the upper layers cost a vanishing
+    * (N/2^l)^2 ≤ N^2/3 extra relative to the base build); at 100 TB
+    * every layer takes the NN-descent path (q27) — the stack shape is
+    * identical.
+    */
   def buildLayeredGraphs(
       base: DataFrame,
       levels: Int,
       baseDeg: Int,
       upperDeg: Int,
-      metric: VecMetric = VecMetric.Euclidean,
-      symmetric: Boolean = true): DataFrame =
-    (0 until levels).map { l =>
-      exactLayer(base, l, if (l == 0) baseDeg else upperDeg, metric,
-        symmetric)
-    }.reduce(_ unionByName _)
+      metric: VecMetric = VecMetric.Euclidean): DataFrame =
+    layerStack(base, levels) { (l, members) =>
+      exactLists(members, if (l == 0) baseDeg else upperDeg, metric)
+    }
 
   /** [[buildLayeredGraphs]] with NO N² anywhere — the 100 TB stack
     * build (buildLayeredGraphs documents "at 100 TB every layer takes
@@ -326,44 +389,35 @@ object GraphSearch {
       iters: Int,
       workingDegreeFactor: Int,
       exactCap: Int = 1 << 14): DataFrame = {
-    val layerSizes: IndexedSeq[Long] =
-      if (levels <= 1) IndexedSeq.empty else layerMembers(base, levels)
-    def nndLayer(l: Int, deg: Int, factor: Int): DataFrame = {
-      val members =
-        if (l == 0) base else base.filter(inLayer(col("id"), l))
-      val knn = NnDescent.build(members, deg, iters, factor,
-        nKnown = layerSizes.lift(l).getOrElse(-1L))
-        .select(col("id"), col("neighbor_id"))
-      knn.unionByName(knn.select(col("neighbor_id").as("id"),
-        col("id").as("neighbor_id"))).distinct()
-        .select(lit(l).as("layer"), col("id"), col("neighbor_id"))
+    val sizes = tierSizes(base, levels)
+    layerStack(base, levels) { (l, members) =>
+      if (l == 0 || sizes(l) > exactCap)
+        NnDescent.build(members, if (l == 0) baseDeg else upperDeg, iters,
+          workingDegreeFactor, nKnown = sizes.lift(l).getOrElse(-1L))
+          .select(col("id"), col("neighbor_id"))
+      else exactLists(members, upperDeg, VecMetric.Euclidean)
     }
-    (nndLayer(0, baseDeg, workingDegreeFactor) +:
-      (1 until levels).map { l =>
-        if (layerSizes(l) > exactCap) nndLayer(l, upperDeg, workingDegreeFactor)
-        else exactLayer(base, l, upperDeg, VecMetric.Euclidean,
-          symmetric = true)
-      }).reduce(_ unionByName _)
   }
 
   /** The COMPOSED HNSW build (Malkov & Yashunin 2018 §4 — the build
     * the reference's hnsw engines actually run, milvus-hnsw family):
     * candidate generation THEN SELECT-NEIGHBORS-HEURISTIC edge
-    * selection, with the paper's keepPrunedConnections backfill on by
-    * default. The heuristic runs on the NN-descent tier — the base
-    * layer and any upper layer over `exactCap` members (the no-N²
-    * path, [[buildLayeredGraphsNnd]]'s tiering; at 100 TB that is
-    * every layer): `baseCand`/`upperCand`-wide NND lists pruned by
+    * selection, with the paper's keepPrunedConnections backfill. The
+    * heuristic runs on the NN-descent tier — the base layer and any
+    * upper layer over `exactCap` members (the no-N² path,
+    * [[buildLayeredGraphsNnd]]'s tiering; at 100 TB that is every
+    * layer): `baseCand`/`upperCand`-wide NND lists pruned by
     * [[diversify]] to `baseM`/`upperM` and symmetrized. Exact-tier
-    * uppers (≤ `exactCap` members) keep their exact top-`upperM`
-    * lists unpruned — they only aim the descent and pruning their
-    * short exact lists measured strictly worse (see `layer` below).
-    * This retires the all-pairs candidate stage the standalone
-    * diversify entry (q54) uses: at any corpus size the candidate
-    * volume is NN-descent's structural n·(2wk)² bound, and the prune
-    * itself is one n·cand²/2 pair self-join — linear in n at fixed
-    * width. Deterministic end to end (NND's hash init, (dist, id)
-    * tie-breaks, the order-free prune + rank-ordered backfill), so
+    * uppers (≤ `exactCap` members, gate scales) keep their exact
+    * top-`upperM` lists unpruned: they only AIM the descent, their
+    * lists are short, and pruning them measured −0.02 recall vs +0.02
+    * from diversifying the base (sf0.01, equal degree and beam
+    * budget). This retires the all-pairs candidate stage the
+    * standalone diversify entry (q54) uses: at any corpus size the
+    * candidate volume is NN-descent's structural n·(2wk)² bound, and
+    * the prune itself is one n·cand²/2 pair self-join — linear in n at
+    * fixed width. Deterministic end to end (NND's hash init, (dist,
+    * id) tie-breaks, the order-free prune + rank-ordered backfill), so
     * oracle-replicable.
     */
   def buildLayeredGraphsDiversified(
@@ -375,41 +429,19 @@ object GraphSearch {
       upperM: Int,
       iters: Int,
       workingDegreeFactor: Int,
-      exactCap: Int = 1 << 14,
-      backfill: Boolean = true): DataFrame = {
-    val layerSizes: IndexedSeq[Long] =
-      if (levels <= 1) IndexedSeq.empty else layerMembers(base, levels)
-    def layer(l: Int, cand: Int, m: Int): DataFrame = {
-      val members =
-        if (l == 0) base else base.filter(inLayer(col("id"), l))
-      // the heuristic runs exactly where candidates are approximate
-      // and redundant — the NN-descent tier (base layer; any upper
-      // layer over exactCap, i.e. EVERY layer at 100 TB). Exact-tier
-      // uppers (≤ exactCap members, gate scales) keep their exact
-      // top-m lists as-is: they only AIM the descent, their lists are
-      // short, and pruning measured −0.02 recall vs +0.02 from
-      // diversifying the base (sf0.01, equal degree and beam budget).
-      val kept =
-        if (l == 0 || layerSizes(l) > exactCap)
-          diversify(
-            NnDescent.build(members, cand, iters, workingDegreeFactor,
-              nKnown = layerSizes.lift(l).getOrElse(-1L)),
-            members, m, backfill = backfill,
-            nKnown = layerSizes.lift(l).getOrElse(-1L))
-            .select(col("id"), col("neighbor_id"))
-        else
-          KnnSearch.bruteForceBlocked(members,
-            members.select(col("id").as("query_id"), col("vec").as("qvec")),
-            m, VecMetric.Euclidean,
-            pairFilter = Some(col("id") =!= col("query_id")))
-            .select(col("query_id").as("id"), col("neighbor_id"))
-      kept.unionByName(kept.select(col("neighbor_id").as("id"),
-        col("id").as("neighbor_id"))).distinct()
-        .select(lit(l).as("layer"), col("id"), col("neighbor_id"))
+      exactCap: Int = 1 << 14): DataFrame = {
+    val sizes = tierSizes(base, levels)
+    layerStack(base, levels) { (l, members) =>
+      val n = sizes.lift(l).getOrElse(-1L)
+      if (l == 0 || sizes(l) > exactCap)
+        diversify(
+          NnDescent.build(members, if (l == 0) baseCand else upperCand,
+            iters, workingDegreeFactor, nKnown = n),
+          members, if (l == 0) baseM else upperM, backfill = true,
+          nKnown = n)
+          .select(col("id"), col("neighbor_id"))
+      else exactLists(members, upperM, VecMetric.Euclidean)
     }
-    (layer(0, baseCand, baseM) +:
-      (1 until levels).map(l => layer(l, upperCand, upperM)))
-      .reduce(_ unionByName _)
   }
 
   /** Scalar twins of [[levelHash]]/[[inLayer]] for the driver-resident
@@ -440,33 +472,10 @@ object GraphSearch {
     * node carries layer-l edges); finally `rounds` steps of width
     * `beam` through the base graph. Every scored (query, node) pair
     * is scored exactly once — scores are static, so the visited set
-    * doubles as the best-so-far heap at every step.
+    * doubles as the best-so-far heap at every step. The walk itself
+    * is [[descend]], shared with [[insertBatch]].
     *
-    * Driver-resident top of stack (`driverTopRows`): layer sizes
-    * halve by construction, so the layers above the first one with
-    * ≤ driverTopRows members are DRIVER STATE — exactly how every
-    * HNSW serving process holds its upper layers in RAM while only
-    * the base layer lives on disk. Those upper steps run as plain
-    * Scala over the collected members/edges (one tiny membership-
-    * histogram job + two bounded collects, memoisable by the caller),
-    * eliminating a sequential Spark job per upper layer; the
-    * remaining lower layers and the base rounds keep the distributed
-    * join shape. When the WHOLE graph fits (members(0) = N ≤
-    * driverTopRows) the cut extends to the base layer and the base
-    * rounds run driver-side too — the fully-RAM-resident serving
-    * process small stores actually are; at corpus scale N exceeds
-    * the bound and the base rounds stay distributed, unchanged.
-    * Bit-identical to the all-distributed descent:
-    * [[VecMetric.localScore]] is the kernels' scalar twin, beam
-    * selection uses the heap's exact (score, id) order, and the
-    * handoff carries the full visited set (spec-gated equal at
-    * driverTopRows = 0 vs default). At 64k rows the driver holds
-    * ≤ ~20 MB of vectors+edges above the cut (≤ ~80 MB with the
-    * base layer's edge lists when the cut reaches 0) — the
-    * IVF-centroid budget class, never a corpus-sized one; set 0 to
-    * force the all-distributed path.
-    */
-  /** `tombstones`: optional (id) set of DELETED nodes — the HNSW
+    * `tombstones`: optional (id) set of DELETED nodes — the HNSW
     * delete contract (the reference's mutation workloads run delete
     * against hnsw engines; every real HNSW serves it as a tombstone,
     * not an edge surgery): tombstoned nodes KEEP their edges and keep
@@ -490,104 +499,10 @@ object GraphSearch {
       metric: VecMetric = VecMetric.Euclidean,
       driverTopRows: Int = 1 << 16,
       tombstones: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val vecs = base.select(col("id"), col("vec"))
-
-    def score(cand: DataFrame): DataFrame =
-      vecs.join(broadcast(cand), "id")
-        .join(broadcast(queries), "query_id")
-        .select(col("query_id"), col("id"),
-          metric.score(col("qvec"), col("vec")).as("score"))
-
-    def step(visited: DataFrame, layer: Int, width: Int): DataFrame = {
-      val beamIds = KnnSearch.topKOf(visited, width, metric.asc)
-        .select(col("query_id"), col("neighbor_id").as("id"))
-      val cand = graphs.filter(col("layer") === layer)
-        .join(broadcast(beamIds), "id")
-        .select(col("query_id"), col("neighbor_id").as("id"))
-        .distinct()
-      val fresh = cand.join(visited.select("query_id", "id"),
-        Seq("query_id", "id"), "left_anti")
-      visited.unionByName(score(fresh)).localCheckpoint(true)
-    }
-
-    // the driver cut: smallest layer L (0 when even the base layer
-    // fits) whose member count fits driverTopRows — one
-    // [[layerMembers]] histogram job
-    val cutL: Option[Int] =
-      if (driverTopRows <= 0) None
-      else Some(layerMembers(base, levels).indexWhere(_ <= driverTopRows))
-        .filter(_ >= 0)
-
-    var visited: DataFrame = null
-    var lowerFrom = levels - 1 // first distributed upper-layer step
-    cutL match {
-      case Some(cut) =>
-        // ---- driver phase: entry scan + layers levels-1..cut ----
-        val members: Map[Long, Array[Float]] =
-          vecs.filter(inLayer(col("id"), cut)).collect()
-            .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-        val edgesByLayer: Map[Int, Map[Long, Array[Long]]] =
-          graphs.filter(col("layer") >= cut && col("layer") < levels)
-            .select("layer", "id", "neighbor_id").collect()
-            .groupBy(_.getInt(0))
-            .map { case (l, rows) =>
-              l -> rows.groupBy(_.getLong(1))
-                .map { case (id, rs) => id -> rs.map(_.getLong(2)) }
-            }
-        val qArr = queries.select(col("query_id"), col("qvec")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-        val ord = rankOrder(metric.asc)
-        // the entry set is query-independent — hoist it (scanning all
-        // collected members once per query is O(members * batch))
-        val entryIds =
-          members.keysIterator.filter(inLayerLocal(_, levels)).toArray
-        val acc = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Double)] // (query_id, id, score)
-        qArr.foreach { case (qid, qv) =>
-          val vis = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
-          entryIds.foreach { id =>
-            vis(id) = metric.localScore(qv, members(id))
-          }
-          // one local beam expansion == one distributed step(): top
-          // `width` of visited, expand through layer-l edges, score
-          // the fresh ids
-          def expand(l: Int, width: Int): Unit = {
-            val beamIds = vis.iterator.map { case (id, s) => (s, id) }
-              .toArray.sorted(ord).take(width).map(_._2)
-            val edges = edgesByLayer.getOrElse(l, Map.empty)
-            // members.get, not members(_): the distributed path's
-            // score() INNER-joins candidates against the vector side,
-            // silently dropping edge targets with no vector row (q57
-            // walks a stack whose updated ids are excluded from the
-            // insert's base) — the driver twin must drop them too
-            beamIds.iterator
-              .flatMap(id => edges.getOrElse(id, Array.empty[Long]))
-              .toSet[Long].filterNot(vis.contains).foreach { id =>
-                members.get(id).foreach(v =>
-                  vis(id) = metric.localScore(qv, v))
-              }
-          }
-          for (l <- (levels - 1) to math.max(cut, 1) by -1)
-            expand(l, upperBeam)
-          // cut == 0: the base rounds run here too — same width/
-          // rounds schedule as the distributed loop below
-          if (cut == 0) for (_ <- 1 to rounds) expand(0, beam)
-          vis.foreach { case (id, s) => acc += ((qid, id, s)) }
-        }
-        import base.sparkSession.implicits._
-        visited = acc.toSeq.toDF("query_id", "id", "score")
-        lowerFrom = cut - 1
-      case None =>
-        val entries = vecs.filter(inLayer(col("id"), levels)).select("id")
-        visited = score(entries.crossJoin(queries.select("query_id")))
-          .localCheckpoint(true)
-    }
-    for (l <- lowerFrom to 1 by -1)
-      visited = step(visited, l, upperBeam)
-    if (!cutL.contains(0)) // cut == 0 already ran the base rounds
-      for (_ <- 1 to rounds)
-        visited = step(visited, 0, beam)
-
+    val (_, walked) = descend(base, graphs, queries, levels, upperBeam,
+      beam, rounds, metric, driverTopRows, batchRows = None,
+      degEst = EstFanout, (_, _, _, _, _) => (), (_, _) => ())
+    val visited = walked()
     val visitedCounts = visited.groupBy("query_id")
       .agg(count(lit(1)).as("n_visited"))
     // tombstoned nodes routed the walk above; they just cannot be
@@ -613,6 +528,176 @@ object GraphSearch {
     hierarchicalSearchWithVisited(base, graphs, queries, k, beam, rounds,
       levels, upperBeam, metric, driverTopRows, tombstones)._1
 
+  /** What the driver walk reports per query after each layer it
+    * walks: the layer, the query's id and vector, its visited
+    * (id → score) set, and the member vectors.
+    */
+  private type DriverHook = (Int, Long, Array[Float],
+    scala.collection.Map[Long, Double], Map[Long, Array[Float]]) => Unit
+
+  /** The `n` best visited ids in the heap's (score, id) order. */
+  private def bestFirst(vis: scala.collection.Map[Long, Double], n: Int,
+      ord: Ordering[(Double, Long)]): Array[Long] =
+    vis.iterator.map { case (id, s) => (s, id) }
+      .toArray.sorted(ord).take(n).map(_._2)
+
+  /** The one stack walk, shared by [[hierarchicalSearchWithVisited]]
+    * and [[insertBatch]]: the top-layer entry scan, one `upperBeam`
+    * step per upper layer, then `rounds` `beam`-wide base steps.
+    * Returns the driver cut and the final visited set
+    * (query_id, id, score), built on demand.
+    *
+    * Driver-resident top of stack (`driverTopRows`): layer sizes
+    * halve by construction, so the layers above the first one with
+    * ≤ driverTopRows members are DRIVER STATE — exactly how every
+    * HNSW serving process holds its upper layers in RAM while only
+    * the base layer lives on disk. Those upper steps run as plain
+    * Scala over the collected members/edges (one tiny membership-
+    * histogram job + three bounded collects), eliminating a
+    * sequential Spark job per upper layer (measured: 7 upper steps at
+    * sf0.1 cost more than the whole base phase); the remaining lower
+    * layers and the base rounds keep the distributed [[Walker]] step.
+    * When the WHOLE graph fits (members(0) = N ≤ driverTopRows) the
+    * cut extends to the base layer and the base rounds run
+    * driver-side too — the fully-RAM-resident serving process small
+    * stores actually are; at corpus scale N exceeds the bound and the
+    * base rounds stay distributed. The driver walks each query row,
+    * so a caller that knows its batch size (`batchRows`, the insert)
+    * keeps a batch past the bound on the all-distributed path.
+    * Bit-identical to the all-distributed descent:
+    * [[VecMetric.localScore]] is the kernels' scalar twin, beam
+    * selection uses the heap's exact (score, id) order, and the
+    * handoff carries the full visited set (spec-gated equal at a
+    * base cut, a mid-stack cut and driverTopRows = 0). At 64k rows
+    * the driver holds ≤ ~20 MB of vectors+edges above the cut
+    * (≤ ~80 MB with the base layer's edge lists when the cut reaches
+    * 0) — the IVF-centroid budget class, never a corpus-sized one;
+    * set 0 to force the all-distributed path.
+    *
+    * `atDriver` runs per query after each driver-walked layer (the
+    * base layer only when the cut is 0); `atStep` runs after each
+    * distributed upper-layer step, before the next step unpersists
+    * that visited set.
+    */
+  private def descend(
+      base: DataFrame,
+      graphs: DataFrame,
+      queries: DataFrame,
+      levels: Int,
+      upperBeam: Int,
+      beam: Int,
+      rounds: Int,
+      metric: VecMetric,
+      driverTopRows: Int,
+      batchRows: Option[Long],
+      degEst: Int,
+      atDriver: DriverHook,
+      atStep: (Int, DataFrame) => Unit): (Option[Int], () => DataFrame) = {
+    val vecs = base.select(col("id"), col("vec"))
+    // the driver cut: smallest layer L (0 when even the base layer
+    // fits) whose member count fits driverTopRows — one
+    // [[layerMembers]] histogram job
+    val cut: Option[Int] =
+      if (driverTopRows <= 0 || batchRows.exists(_ > driverTopRows)) None
+      else Some(layerMembers(vecs, levels).indexWhere(_ <= driverTopRows))
+        .filter(_ >= 0)
+    val walkedAtDriver = cut.map { c =>
+      driverWalk(vecs, graphs, queries, c, levels, upperBeam, beam,
+        rounds, metric, atDriver)
+    }
+    def driverRows: DataFrame = {
+      import base.sparkSession.implicits._
+      walkedAtDriver.get._1.toSeq.toDF("query_id", "id", "score")
+    }
+    if (cut.contains(0)) return (cut, () => driverRows)
+
+    val w = new Walker(vecs, queries, metric,
+      () => batchRows.orElse(walkedAtDriver.map(_._2.toLong))
+        .getOrElse(queries.count()), degEst)
+    var visited =
+      if (cut.isDefined) driverRows
+      else w.score(vecs.filter(inLayer(col("id"), levels)).select("id")
+          .crossJoin(queries.select("query_id")), w.batchN * EstFanout)
+        .localCheckpoint(true)
+    for (l <- cut.getOrElse(levels) - 1 to 1 by -1) {
+      visited = w.step(visited, graphs.filter(col("layer") === l),
+        upperBeam)
+      atStep(l, visited)
+    }
+    for (_ <- 1 to rounds)
+      visited = w.step(visited, graphs.filter(col("layer") === 0), beam)
+    val last = visited
+    (cut, () => last)
+  }
+
+  /** The driver-resident phase of [[descend]]: collects the members
+    * of layer `cut`, the edges of layers cut..levels-1 and the query
+    * batch, walks every query from the top-layer entry down to `cut`
+    * (and through the base rounds when `cut` is 0), and returns the
+    * visited rows (query_id, id, score) with the batch size.
+    */
+  private def driverWalk(vecs: DataFrame, graphs: DataFrame,
+      queries: DataFrame, cut: Int, levels: Int, upperBeam: Int,
+      beam: Int, rounds: Int, metric: VecMetric,
+      atDriver: DriverHook)
+      : (scala.collection.Seq[(Long, Long, Double)], Int) = {
+    val members: Map[Long, Array[Float]] =
+      vecs.filter(inLayer(col("id"), cut)).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    val edgesByLayer: Map[Int, Map[Long, Array[Long]]] =
+      graphs.filter(col("layer") >= cut && col("layer") < levels)
+        .select("layer", "id", "neighbor_id").collect()
+        .groupBy(_.getInt(0))
+        .map { case (l, rows) =>
+          l -> rows.groupBy(_.getLong(1))
+            .map { case (id, rs) => id -> rs.map(_.getLong(2)) }
+        }
+    val qArr = queries.select(col("query_id"), col("qvec")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val ord = rankOrder(metric.asc)
+    // the entry set is query-independent — hoist it (scanning all
+    // collected members once per query is O(members * batch))
+    val entryIds =
+      members.keysIterator.filter(inLayerLocal(_, levels)).toArray
+    val acc = scala.collection.mutable.ArrayBuffer
+      .empty[(Long, Long, Double)] // (query_id, id, score)
+    qArr.foreach { case (qid, qv) =>
+      val vis = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
+      entryIds.foreach { id =>
+        vis(id) = metric.localScore(qv, members(id))
+      }
+      // one local beam expansion == one distributed Walker.step: top
+      // `width` of visited, expand through layer-l edges, score the
+      // fresh ids
+      def expand(l: Int, width: Int): Unit = {
+        val edges = edgesByLayer.getOrElse(l, Map.empty)
+        // members.get, not members(_): the distributed step's score
+        // INNER-joins candidates against the vector side, silently
+        // dropping edge targets with no vector row (q57 walks a stack
+        // whose updated ids are excluded from the insert's base) —
+        // the driver twin must drop them too
+        bestFirst(vis, width, ord).iterator
+          .flatMap(id => edges.getOrElse(id, Array.empty[Long]))
+          .toSet[Long].filterNot(vis.contains).foreach { id =>
+            members.get(id).foreach(v =>
+              vis(id) = metric.localScore(qv, v))
+          }
+      }
+      for (l <- (levels - 1) to math.max(cut, 1) by -1) {
+        expand(l, upperBeam)
+        atDriver(l, qid, qv, vis, members)
+      }
+      // cut == 0: the base rounds run here too — same width/rounds
+      // schedule as the distributed loop
+      if (cut == 0) {
+        for (_ <- 1 to rounds) expand(0, beam)
+        atDriver(0, qid, qv, vis, members)
+      }
+      vis.foreach { case (id, s) => acc += ((qid, id, s)) }
+    }
+    (acc, qArr.length)
+  }
+
   /** HNSW INSERT (Malkov & Yashunin 2018 Alg. 1), batch-shaped: add
     * new rows to a BUILT layer stack without rebuilding it — the
     * graph-family twin of q28's IVF upsert (the reference's mutation
@@ -624,7 +709,7 @@ object GraphSearch {
     * stack as a QUERY, and at each layer ≤ its level link it to the
     * nearest nodes the search visited (heuristic-pruned at the base),
     * adding the reverse edges too. This operator runs that descent
-    * for the WHOLE batch at once — the same shared per-round joins as
+    * for the WHOLE batch at once — [[descend]], the same walk as
     * [[hierarchicalSearchWithVisited]] (each round is one edge-list
     * scan + one vector scan for ALL queries, so the per-batch cost is
     * O(rounds × (|E| + N)) scans and O(batch · beam · degree) link
@@ -678,227 +763,75 @@ object GraphSearch {
       rounds: Int,
       upperBeam: Int,
       metric: VecMetric = VecMetric.Euclidean,
-      backfill: Boolean = true,
       driverTopRows: Int = 1 << 16): DataFrame = {
-    val vecs = base.select(col("id"), col("vec"))
     val queries = batch.select(col("id").as("query_id"),
       col("vec").as("qvec"))
-    // The scoring copy gets FRESH attribute ids (each Alias mints a
-    // new exprId): `visited` is seeded from `queries` and then
-    // localCheckpoint'ed, and a checkpoint PRESERVES output attribute
-    // ids — so joining the original `queries` onto any
-    // post-checkpoint visited set puts the same exprId on both sides
-    // of a join between two DIFFERENT relations, which
-    // DeduplicateRelations cannot rewrite ("conflicting references"
-    // analysis failure). The broadcast-hinted small-batch join
-    // happened to dodge it; the un-hinted bulk join (batch > 64k,
-    // first driven by the 100k insert-at-scale run) did not.
-    val qScore = queries.select(col("query_id").as("query_id"),
-      col("qvec").as("qvec"))
-
-    // A search batch is ~100 queries; an insert batch is whatever the
-    // mutation cadence delivers. The broadcast ceiling is CANDIDATE
-    // volume, not batch rows: a base step's candidate set carries
-    // ~batch × beam × degree rows, so even a sub-64k batch can put a
-    // multi-10M-row HashedRelation on the build side (measured: the
-    // 50k insert-at-scale run at beam 32 carried ~38M candidate
-    // rows, whose pinned broadcast starved every HashAggregate's
-    // first 256 KB page and OOM'd a 48 GB heap), while the beam side
-    // is only batch × width. Each join therefore guards on its OWN
-    // estimated row count against the repo's standard 4M-row
-    // broadcast ceiling ([[BcastRows]]), degree
-    // bounded conservatively by the symmetrized base discipline
-    // (~2 × baseCand). Join strategy only, never results
-    // (spec-gated: bulk path == broadcast-path halves bit-for-bit).
-    // The QUERY side is degree-free (one row per batch member) so it
-    // stays broadcast to the same ceiling.
-    lazy val batchN = batch.count()
-    def bcastIfUnder(estRows: Long)(df: DataFrame): DataFrame =
-      if (estRows > BcastRows) df else broadcast(df)
-    val qSide =
-      if (batchN > BcastRows) qScore else broadcast(qScore)
-
-    def score(cand: DataFrame, estRows: Long): DataFrame =
-      vecs.join(bcastIfUnder(estRows)(cand), "id")
-        .join(qSide, "query_id")
-        .select(col("query_id"), col("id"),
-          metric.score(col("qvec"), col("vec")).as("score"))
-
-    // The visited set is checkpointed per step and grows to
-    // ~batch × (visited-per-query) rows — hundreds of millions for a
-    // bulk batch. Two disciplines keep that bounded on a
-    // serving-sized heap (measured: the 100k insert-at-scale run at
-    // 48 GB died re-caching spilled DESERIALIZED checkpoint blocks
-    // with ~25 of them still registered): blocks are stored
-    // SERIALIZED (no deserialized re-cache on read-back), and each
-    // step unpersists the checkpoint it just superseded — only the
-    // newest (plus the one being built) is ever live. The superseded
-    // set has no remaining consumers because the per-layer link rows
-    // are eagerly materialized before the next step runs.
-    def step(visited: DataFrame, layer: Int, width: Int): DataFrame = {
-      val beamIds = KnnSearch.topKOf(visited, width, metric.asc)
-        .select(col("query_id"), col("neighbor_id").as("id"))
-      val cand = graphs.filter(col("layer") === layer)
-        .join(bcastIfUnder(batchN * width)(beamIds), "id")
-        .select(col("query_id"), col("neighbor_id").as("id"))
-        .distinct()
-      val fresh = cand.join(visited.select("query_id", "id"),
-        Seq("query_id", "id"), "left_anti")
-      val next = visited
-        .unionByName(score(fresh, batchN * width * 2 * baseCand))
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      visited.unpersist() // no-op on the unpersisted driver-top seed
-      next
-    }
-
-    // Driver-resident top of stack, exactly as the search side
-    // ([[hierarchicalSearchWithVisited]]): the layers above the first
-    // ≤ driverTopRows one run as plain Scala — an HNSW serving
-    // process keeps its upper layers in RAM, and a distributed step
-    // per tiny layer is pure job-launch overhead (measured: 7 upper
-    // steps at sf0.1 cost more than the whole base phase). Guarded on
-    // the BATCH size too: the driver walks each batch row, so a bulk
-    // batch past the bound keeps the all-distributed path (an insert
-    // batch is caller-bounded, unlike the corpus). Bit-identical
-    // either way (spec-gated): localScore twins, the heap's
-    // (score, id) order, same link rule.
-    val cutL: Option[Int] =
-      if (driverTopRows <= 0 || batchN > driverTopRows) None
-      // 0: the whole base fits — the walk, the base rounds AND the
-      // link rule run driver-side (see the search twin's scaladoc)
-      else Some(layerMembers(vecs, levels).indexWhere(_ <= driverTopRows))
-        .filter(_ >= 0)
-
+    val ord = rankOrder(metric.asc)
     // upper-layer links are captured mid-descent: after the layer-l
     // step the visited set is exactly the layer-l candidate pool
     // (every expansion so far went through a layer ≥ l, and
     // membership nests), and only batch nodes whose level reaches l
     // link there
-    var visited: DataFrame = null
-    var lowerFrom = levels - 1
+    val atDriver = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, Long, Long)] // (layer, id, neighbor_id)
+    def driverLinks(l: Int, qid: Long, qv: Array[Float],
+        vis: scala.collection.Map[Long, Double],
+        members: Map[Long, Array[Float]]): Unit =
+      if (l > 0) {
+        if (inLayerLocal(qid, l))
+          bestFirst(vis, upperDeg, ord).foreach(id =>
+            atDriver += ((l, qid, id)))
+      } else {
+        // the base link rule on the driver (cut 0): the exact local
+        // twin of the distributed tail's [[diversify]] — the same
+        // (score, id) candidate rank, strict better-than prune against
+        // ALL lower-ranked candidates, backfill ordering (un-pruned
+        // first, then pruned, each by rank), take baseM
+        val cands = bestFirst(vis, baseCand, ord)
+        val cvecs = cands.map(members(_))
+        val toQ = cvecs.map(v => metric.localScore(qv, v))
+        def betterL(a: Double, b: Double): Boolean =
+          if (metric.asc) a < b else a > b
+        val pruned = Array.tabulate(cands.length) { i =>
+          (0 until i).exists(j =>
+            betterL(metric.localScore(cvecs(i), cvecs(j)), toQ(i)))
+        }
+        cands.indices.sortBy(i => (pruned(i), i)).take(baseM)
+          .foreach(i => atDriver += ((0, qid, cands(i))))
+      }
     var links = List.empty[DataFrame]
-    cutL match {
-      case Some(cut) =>
-        val members: Map[Long, Array[Float]] =
-          vecs.filter(inLayer(col("id"), cut)).collect()
-            .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-        val edgesByLayer: Map[Int, Map[Long, Array[Long]]] =
-          graphs.filter(col("layer") >= cut && col("layer") < levels)
-            .select("layer", "id", "neighbor_id").collect()
-            .groupBy(_.getInt(0))
-            .map { case (l, rows) =>
-              l -> rows.groupBy(_.getLong(1))
-                .map { case (id, rs) => id -> rs.map(_.getLong(2)) }
-            }
-        val qArr = queries.select(col("query_id"), col("qvec")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-        val ord = rankOrder(metric.asc)
-        val acc = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, Double)]
-        val lnk = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, Long, Long)]
-        // entry set hoisted as in the search twin — a 50k insert
-        // batch otherwise rescans all collected members per row
-        val entryIds =
-          members.keysIterator.filter(inLayerLocal(_, levels)).toArray
-        qArr.foreach { case (qid, qv) =>
-          val vis = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
-          entryIds.foreach { id =>
-            vis(id) = metric.localScore(qv, members(id))
-          }
-          def expand(l: Int, width: Int): Unit = {
-            val beamIds = vis.iterator.map { case (id, s) => (s, id) }
-              .toArray.sorted(ord).take(width).map(_._2)
-            val edges = edgesByLayer.getOrElse(l, Map.empty)
-            // members.get, not members(_): the distributed path's
-            // score() INNER-joins candidates against the vector side,
-            // silently dropping edge targets with no vector row (q57
-            // walks a stack whose updated ids are excluded from the
-            // insert's base) — the driver twin must drop them too
-            beamIds.iterator
-              .flatMap(id => edges.getOrElse(id, Array.empty[Long]))
-              .toSet[Long].filterNot(vis.contains).foreach { id =>
-                members.get(id).foreach(v =>
-                  vis(id) = metric.localScore(qv, v))
-              }
-          }
-          for (l <- (levels - 1) to math.max(cut, 1) by -1) {
-            expand(l, upperBeam)
-            if (inLayerLocal(qid, l))
-              vis.iterator.map { case (id, s) => (s, id) }
-                .toArray.sorted(ord).take(upperDeg)
-                .foreach { case (_, id) => lnk += ((l, qid, id)) }
-          }
-          if (cut == 0) {
-            // base rounds, then the base link rule — both the exact
-            // local twins of the distributed tail below ([[diversify]]
-            // with the same (score, id) candidate rank, strict
-            // better-than prune against ALL lower-ranked candidates,
-            // backfill ordering (un-pruned first, then pruned, each
-            // by rank), take baseM)
-            for (_ <- 1 to rounds) expand(0, beam)
-            val cands = vis.iterator.map { case (id, s) => (s, id) }
-              .toArray.sorted(ord).take(baseCand).map(_._2)
-            val cvecs = cands.map(members(_))
-            val toQ = cvecs.map(v => metric.localScore(qv, v))
-            def betterL(a: Double, b: Double): Boolean =
-              if (metric.asc) a < b else a > b
-            val pruned = Array.tabulate(cands.length) { i =>
-              (0 until i).exists(j =>
-                betterL(metric.localScore(cvecs(i), cvecs(j)), toQ(i)))
-            }
-            val keptIdx =
-              if (backfill)
-                cands.indices.sortBy(i => (pruned(i), i)).take(baseM)
-              else cands.indices.filter(i => !pruned(i)).take(baseM)
-            keptIdx.foreach(i => lnk += ((0, qid, cands(i))))
-          }
-          vis.foreach { case (id, s) => acc += ((qid, id, s)) }
-        }
-        import base.sparkSession.implicits._
-        if (cut == 0) {
-          // every link was derived locally: symmetrize + dedup here
-          // and return — the distributed tail below never runs
-          val fwdL = lnk.toSeq
-          val symL = (fwdL ++ fwdL.map { case (l, a, b) => (l, b, a) })
-            .distinct
-          return symL.toDF("layer", "id", "neighbor_id")
-        }
-        visited = acc.toSeq.toDF("query_id", "id", "score")
-        if (lnk.nonEmpty)
-          links ::= lnk.toSeq.toDF("layer", "id", "neighbor_id")
-        lowerFrom = cut - 1
-      case None =>
-        val entries = vecs.filter(inLayer(col("id"), levels)).select("id")
-        // levelsFor targets ~16 top-layer members; 64 is a safe
-        // estimate factor for the seed's broadcast guard
-        visited = score(entries.crossJoin(queries.select("query_id")),
-          batchN * 64)
-          .localCheckpoint(true)
+    // the step's candidate estimate bounds degree by the symmetrized
+    // base discipline (~2 × baseCand)
+    val (cut, walked) = descend(base, graphs, queries, levels, upperBeam,
+      beam, rounds, metric, driverTopRows, Some(batch.count()),
+      degEst = 2 * baseCand, driverLinks,
+      (l, visited) =>
+        // eager: the link rows must not lazily reference a visited
+        // checkpoint the NEXT step will unpersist. Small by
+        // construction (~batch/2^l nodes × upperDeg rows)
+        links ::= KnnSearch.topKOf(
+          visited.filter(inLayer(col("query_id"), l)), upperDeg, metric.asc)
+          .select(lit(l).as("layer"), col("query_id").as("id"),
+            col("neighbor_id"))
+          .localCheckpoint(true))
+    import base.sparkSession.implicits._
+    if (cut.contains(0)) {
+      // every link was derived on the driver: symmetrize + dedup here
+      val sym = (atDriver ++ atDriver.map { case (l, a, b) => (l, b, a) })
+        .distinct
+      return sym.toSeq.toDF("layer", "id", "neighbor_id")
     }
-    for (l <- lowerFrom to 1 by -1) {
-      visited = step(visited, l, upperBeam)
-      // eager: the link rows must not lazily reference a visited
-      // checkpoint the NEXT step will unpersist. Small by
-      // construction (~batch/2^l nodes × upperDeg rows)
-      links ::= KnnSearch.topKOf(
-        visited.filter(inLayer(col("query_id"), l)), upperDeg, metric.asc)
-        .select(lit(l).as("layer"), col("query_id").as("id"),
-          col("neighbor_id"))
-        .localCheckpoint(true)
-    }
-    for (_ <- 1 to rounds)
-      visited = step(visited, 0, beam)
+    if (atDriver.nonEmpty)
+      links :+= atDriver.toSeq.toDF("layer", "id", "neighbor_id")
     // base layer: candidate list from the finished walk, pruned by
     // the heuristic — the prune scores candidate-candidate distances
     // AND node-candidate distances, so the vector side must cover the
     // batch ids too (they are the `id` column of the candidate lists)
-    val cand0 = KnnSearch.topKOf(visited, baseCand, metric.asc)
+    val cand0 = KnnSearch.topKOf(walked(), baseCand, metric.asc)
       .select(col("query_id").as("id"), col("rank"), col("neighbor_id"))
-    val allVecs = vecs.unionByName(batch.select(col("id"), col("vec")))
-    val kept0 = diversify(cand0, allVecs, baseM, metric,
-      backfill = backfill)
+    val allVecs = base.select(col("id"), col("vec"))
+      .unionByName(batch.select(col("id"), col("vec")))
+    val kept0 = diversify(cand0, allVecs, baseM, metric, backfill = true)
       .select(lit(0).as("layer"), col("id"), col("neighbor_id"))
     val fwd = (kept0 :: links).reduce(_ unionByName _)
     fwd.unionByName(fwd.select(col("layer"),

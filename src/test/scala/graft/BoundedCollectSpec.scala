@@ -33,14 +33,15 @@ class BoundedCollectSpec extends AnyFunSuite {
         "own limit(localRows + 1) — " +
         "corpus-scale dedup keeps the distributed propagation"),
     "operators/GraphSearch.scala" ->
-      (7, "one layer-membership histogram (<= levels + 1 rows), " +
-        "shared by the two layered builds and the two descents; " +
-        "2x top-of-stack vectors+edges above a histogram-sized cut " +
-        "(<= driverTopRows = 64k member rows by construction — the " +
-        "cut may reach the base layer ONLY when the whole graph " +
-        "fits that bound, edges then <= 64k x 2 deg); <= nq query " +
-        "batch; insertBatch's mutation batch (<= driverTopRows by " +
-        "its own guard — bulk batches keep the all-distributed path)"),
+      (4, "one layer-membership histogram (<= levels + 1 rows), " +
+        "shared by the two tiered builds and the one stack walk; " +
+        "the driver walk's top-of-stack vectors+edges above a " +
+        "histogram-sized cut (<= driverTopRows = 64k member rows by " +
+        "construction — the cut may reach the base layer ONLY when " +
+        "the whole graph fits that bound, edges then <= 64k x 2 " +
+        "deg) and its query batch (<= nq search queries; an insert " +
+        "batch <= driverTopRows by its own guard — bulk batches keep " +
+        "the all-distributed path)"),
     "operators/NnDescent.scala" ->
       (1, "driver-resident build's member collect: <= localRows " +
         "(64k default) rows by build()'s own guard — corpus-scale " +

@@ -214,8 +214,8 @@ class IndexSpec extends AnyFunSuite {
     val stack = GraphSearch.buildLayeredGraphs(base, levels,
       IQ.GraphDeg, IQ.UpperDeg, VecMetric.Euclidean).localCheckpoint(true)
     val flat = eval(GraphSearch.beamSearchWithVisited(base, flatGraph,
-      queries, 10, IQ.Beam, IQ.BeamRounds, 16,
-      VecMetric.Euclidean, IQ.EntryBeam))
+      queries, 10, IQ.Beam, IQ.BeamRounds, 16, IQ.EntryBeam,
+      VecMetric.Euclidean))
     val hier = eval(GraphSearch.hierarchicalSearchWithVisited(base, stack,
       queries, 10, IQ.HierBeam, IQ.HierRounds, levels, IQ.UpperBeam))
     (flat, hier)
@@ -648,8 +648,8 @@ class IndexSpec extends AnyFunSuite {
     def recall(g: org.apache.spark.sql.DataFrame): Double =
       GraphSearch.beamSearch(base, g, queries, 10,
         graft.queries.IndexQueries.Beam,
-        graft.queries.IndexQueries.BeamRounds, 16, VecMetric.Euclidean,
-        graft.queries.IndexQueries.EntryBeam)
+        graft.queries.IndexQueries.BeamRounds, 16,
+        graft.queries.IndexQueries.EntryBeam, VecMetric.Euclidean)
         .select("query_id", "neighbor_id")
         .intersect(exact).count().toDouble / exact.count()
     val (rDiv, rPlain) = (recall(div8), recall(plain8))
@@ -776,6 +776,28 @@ class IndexSpec extends AnyFunSuite {
     val (distT, distV) = run(0)      // forced all-distributed
     assert(fastT == distT, "topk diverged between driver and distributed")
     assert(fastV == distV, "n_visited diverged")
+    // a cut strictly inside the stack: layers lv-1..2 walk on the
+    // driver, then layer 1 and the base rounds run distributed from
+    // the handed-off visited set
+    val mid = midStackRows(base, lv)
+    val (midT, midV) = run(mid)
+    assert(midT == distT, s"topk diverged at the layer-2 cut ($mid rows)")
+    assert(midV == distV, s"n_visited diverged at the layer-2 cut ($mid rows)")
+  }
+
+  /** A driverTopRows value whose driver cut is layer 2 — strictly
+    * between the top layer and the base: layer 2's member count, when
+    * layer 1 has more (the cut is the smallest layer whose member count
+    * fits the bound).
+    */
+  private def midStackRows(base: org.apache.spark.sql.DataFrame,
+      lv: Int): Int = {
+    val sizes = (0 to lv).map(l =>
+      base.filter(GraphSearch.inLayer(col("id"), l)).count())
+    val mid = sizes(2)
+    assert(lv > 2 && sizes(1) > mid && sizes.indexWhere(_ <= mid) == 2,
+      s"layer sizes $sizes give no layer-2 cut")
+    mid.toInt
   }
 
   test("localScore twins match the codegen'd kernels bit-for-bit") {
@@ -839,6 +861,17 @@ class IndexSpec extends AnyFunSuite {
     assert(dist.exceptAll(full).count() == 0 &&
       full.exceptAll(dist).count() == 0,
       "driver-top insert diverged from all-distributed")
+    // the same at a layer-2 cut: the upper links come from the driver
+    // walk, layer 1's and the base links from the distributed steps
+    // (the batch fits the bound, so its guard keeps the cut)
+    val mid = midStackRows(kept, lv)
+    assert(batch.count() <= mid)
+    val midCut = GraphSearch.insertBatch(kept, stack, batch, lv, GraphDeg,
+      DivM, UpperDeg, HierBeam, HierRounds, UpperBeam,
+      driverTopRows = mid)
+    assert(midCut.exceptAll(full).count() == 0 &&
+      full.exceptAll(midCut).count() == 0,
+      s"layer-2-cut insert diverged from the base cut ($mid rows)")
     // the post-insert graph must SERVE: (a) each inserted vector
     // finds itself (the reference's insert-then-retrieve check,
     // module.py insert contract); (b) held-out recall over the

@@ -247,7 +247,9 @@ class NnDescentSpec extends AnyFunSuite {
       .localCheckpoint(true)
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
-    val a = NnDescent.build(base, k = 5)
+    // localRows = 0: sf0.001's rows would otherwise take buildLocal,
+    // which returns before build sets (and restores) the width
+    val a = NnDescent.build(base, k = 5, localRows = 0L)
       .select("id", "rank", "neighbor_id").localCheckpoint(true)
     assert(spark.conf.get(key) == before,
       "build must restore the session shuffle width it overrides")
@@ -257,7 +259,7 @@ class NnDescentSpec extends AnyFunSuite {
     // at any derived width
     spark.conf.set(key, "7")
     try {
-      val b = NnDescent.build(base, k = 5)
+      val b = NnDescent.build(base, k = 5, localRows = 0L)
         .select("id", "rank", "neighbor_id").localCheckpoint(true)
       assert(b.exceptAll(a).count() == 0 && a.exceptAll(b).count() == 0,
         "shuffle width changed the graph")
