@@ -11,11 +11,11 @@ in <dumpDir>/<name>/:
   - the rows, sorted NULL-safely (NULLs and NaNs compare equal to each
     other and sort first) and compared value for value.
 
-DuckDB runs under a memory cap and spills to a capped temp directory.
+DuckDB runs with a 4 GB memory limit and 2 threads, and spills to a
+fresh temp directory capped at 20 GB and removed at exit.
 
 Usage:
   python3 scripts/check_queries.py <sfDir> <dumpDir> [name ...]
-      [--memory-limit 4GB] [--threads 2] [--temp-dir DIR] [--max-temp 20GB]
 
 Prints one line per entry (MATCH / MISMATCH / ERROR / MISSING) and a
 summary, and exits 1 on any mismatch, any query error, or any oracle
@@ -27,13 +27,16 @@ import json
 import math
 import os
 import shutil
-import signal
 import sys
 import tempfile
 import time
 
 import duckdb
 import pandas as pd
+
+MEMORY_LIMIT = "4GB"
+THREADS = 2
+MAX_TEMP = "20GB"
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -102,38 +105,22 @@ def main():
     ap.add_argument("dump_dir")
     ap.add_argument("names", nargs="*",
                     help="entries to check (default: every oracle entry)")
-    ap.add_argument("--memory-limit", default="4GB")
-    ap.add_argument("--threads", type=int, default=2)
-    ap.add_argument("--temp-dir", default=None,
-                    help="DuckDB spill directory (default: a fresh one "
-                         "under the system temp dir, removed at exit)")
-    ap.add_argument("--max-temp", default="20GB",
-                    help="cap on the spill directory's size")
     args = ap.parse_args()
 
     oracle = json.load(open(os.path.join(args.dump_dir, "oracle_sql.json")))
     names = args.names or sorted(oracle)
-    own_temp = args.temp_dir is None
-    temp_dir = tempfile.mkdtemp(prefix="graft_duckdb_") if own_temp \
-        else args.temp_dir
-
-    def killed(*_):  # exit at once, but not without removing our spill
-        if own_temp:
-            shutil.rmtree(temp_dir, ignore_errors=True)
-        os._exit(1)
-    signal.signal(signal.SIGTERM, killed)
+    temp_dir = tempfile.mkdtemp(prefix="graft_duckdb_")
     con = duckdb.connect()
-    con.execute(f"SET memory_limit = '{args.memory_limit}'")
-    con.execute(f"SET threads = {args.threads}")
-    con.execute(f"SET temp_directory = '{temp_dir}'")
-    con.execute(f"SET max_temp_directory_size = '{args.max_temp}'")
-    for t in TABLES:
-        path = os.path.join(args.sf_dir, f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-
     start = time.time()
     bad = []
     try:
+        con.execute(f"SET memory_limit = '{MEMORY_LIMIT}'")
+        con.execute(f"SET threads = {THREADS}")
+        con.execute(f"SET temp_directory = '{temp_dir}'")
+        con.execute(f"SET max_temp_directory_size = '{MAX_TEMP}'")
+        for t in TABLES:
+            path = os.path.join(args.sf_dir, f"{t}.parquet")
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
         for name in names:
             if name not in oracle:
                 status, detail = "ERROR", "no oracle SQL for this entry"
@@ -147,8 +134,7 @@ def main():
                 bad.append(name)
     finally:
         con.close()
-        if own_temp:
-            shutil.rmtree(temp_dir, ignore_errors=True)
+        shutil.rmtree(temp_dir, ignore_errors=True)
     n = len(names)
     print(f"{n - len(bad)}/{n} MATCH in {time.time() - start:.1f} s"
           + (f"; not matching: {', '.join(bad)}" if bad else ""))

@@ -122,9 +122,11 @@ object GraphSearch {
     * The visited set grows to ~batch × visited-per-query rows —
     * hundreds of millions for a bulk insert (measured: a 100k insert
     * at 48 GB died re-caching spilled DESERIALIZED checkpoint blocks
-    * with ~25 of them registered). So blocks are stored SERIALIZED and
-    * each step unpersists the set it superseded; callers materialise
-    * anything they derive from a visited set before the next step.
+    * with ~25 of them registered). So each step unpersists the set it
+    * superseded, and a step whose candidate side is too large to
+    * broadcast stores its blocks SERIALIZED; a search-sized step keeps
+    * localCheckpoint's default level. Callers materialise anything they
+    * derive from a visited set before the next step.
     */
   private final class Walker(base: DataFrame, queries: DataFrame,
       metric: VecMetric, batchRows: () => Long, degEst: Int) {
@@ -156,10 +158,12 @@ object GraphSearch {
       // occupy two beam slots)
       val fresh = cand.join(visited.select("query_id", "id"),
         Seq("query_id", "id"), "left_anti")
-      val next = visited
-        .unionByName(score(fresh, batchN * width * degEst))
-        .localCheckpoint(true,
+      val candRows = batchN * width * degEst
+      val grown = visited.unionByName(score(fresh, candRows))
+      val next =
+        if (candRows > BcastRows) grown.localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        else grown.localCheckpoint(true)
       visited.unpersist() // no-op on a driver-walk seed
       next
     }
