@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftshim.Shim
 
 import graft.functions._
+import graft.operators.KnnTopK
 
 /** Session factory + SQL surface registration. `create()` gives the
   * tuned local session; `registerFunctions` exposes the custom
@@ -40,17 +41,19 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ObjectHashAggregate (collect_list/collect_topk folds) falls
-      // back to SORT-BASED aggregation once a task's hash map holds
-      // 128 groups (the conservative default) — an external sort of
-      // every input row. Every object agg in this engine keeps
-      // bounded per-group state (collect_topk is O(k); the BM25/
-      // substring/shingle folds are bounded by terms-per-doc), so the
-      // map is small even at 64k groups and the fallback is pure
-      // overhead: measured at sf0.1/local[32], t06 1.82->1.63 s and
-      // q41 3.63->3.09 s min-of-5. Scale-safe for the same reason —
-      // per-group payloads stay KB-sized at any corpus size; override
-      // per-session if an unbounded-group aggregate is ever added.
+      // ObjectHashAggregate (the collect_list folds, and collect_topk
+      // over scored rows: BM25, shingle, IVF-cell and graph scans)
+      // falls back to SORT-BASED aggregation once a task's hash map
+      // holds 128 groups (the conservative default) — an external
+      // sort of every input row. Every object agg in this engine
+      // keeps bounded per-group state (collect_topk is O(k); the
+      // BM25/substring/shingle folds are bounded by terms-per-doc),
+      // so the map is small even at 64k groups and the fallback is
+      // pure overhead: measured at sf0.1/local[32], t06 (BM25)
+      // 1.82->1.63 s and q41 (hybrid search) 3.63->3.09 s min-of-5.
+      // Scale-safe for the same reason — per-group payloads stay
+      // KB-sized at any corpus size; override per-session if an
+      // unbounded-group aggregate is ever added.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "65536")
       // Spark 4.1: InferFiltersFromConstraints substitutes alias-
@@ -87,9 +90,18 @@ object GraftSession {
     ("pq_adc", es => PqAdc(es(0), es(1))),
     ("rolling_hash_windows", RollingHashWindows.fromArgs))
 
-  /** Register the vector/text kernels as SQL functions. */
-  def registerFunctions(spark: SparkSession): Unit =
+  /** Register the vector/text kernels as SQL functions and the fused
+    * kNN operator's planner strategy — the per-session twin of
+    * [[GraftExtensions]]. Call it once per session, before any query
+    * runs: it is the only writer of the session's extra strategies, so
+    * concurrent `KnnSearch.bruteForce` calls only ever read them.
+    */
+  def registerFunctions(spark: SparkSession): Unit = {
     sqlFunctions.foreach { case (name, builder) =>
       Shim.registerFunction(spark, name, builder)
     }
+    val exp = spark.experimental
+    if (!exp.extraStrategies.contains(KnnTopK.Strategy))
+      exp.extraStrategies = exp.extraStrategies :+ KnnTopK.Strategy
+  }
 }

@@ -166,7 +166,8 @@ final class TopKHeap(k: Int, asc: Boolean) {
     if (asc) s1 > s2 || (s1 == s2 && i1 > i2)
     else s1 < s2 || (s1 == s2 && i1 > i2)
 
-  def insert(s: Double, id: Long): Unit = {
+  /** Offer (s, id); true when the heap kept it. */
+  def insert(s: Double, id: Long): Boolean = {
     if (n < k) {
       var i = n
       scores(i) = s; ids(i) = id; n += 1
@@ -175,12 +176,14 @@ final class TopKHeap(k: Int, asc: Boolean) {
         val p = (i - 1) >> 1
         if (worse(scores(i), ids(i), scores(p), ids(p))) {
           swap(i, p); i = p
-        } else return
+        } else return true
       }
+      true
     } else if (worse(scores(0), ids(0), s, id)) {
       scores(0) = s; ids(0) = id
       siftDown(0)
-    }
+      true
+    } else false
   }
 
   @inline private def swap(i: Int, j: Int): Unit = {

@@ -74,10 +74,11 @@ object VecMetric {
 /** Exact batch kNN, the Spark-shaped `BaseANN.query`/`batch_query`
   * (/root/reference/bigvectorbench/algorithms/base/module.py:88-127).
   *
-  * Plan shape (the 100 TB story): the query batch is broadcast, the
-  * base table streams through a BroadcastNestedLoopJoin into a
-  * codegen'd distance expression, and CollectTopK partial-aggregates
-  * per partition — one full scan, no N x Q shuffle, no sort.
+  * Plan shape (the 100 TB story): the query batch is broadcast and the
+  * base table streams once through [[KnnTopKExec]], which scores each
+  * base row against the whole batch and keeps one k-sized heap per
+  * query and partition; CollectTopK merges those partial heaps — one
+  * full scan, no N x Q rows, no shuffle of the base, no sort.
   */
 object KnnSearch {
 
@@ -87,9 +88,9 @@ object KnnSearch {
     * `preFilter` is a base-only predicate (pushed into the scan);
     * `pairFilter` may reference BOTH sides — the reference's per-query
     * compound filter workload (runner.py:62-88), where each query
-    * carries its own threshold tuple. Catalyst folds it into the
-    * BroadcastNestedLoopJoin condition, so non-qualifying pairs die
-    * with the scan stream before any distance is computed.
+    * carries its own threshold tuple. [[KnnTopKExec]] evaluates it on
+    * each (base row, query) pair before scoring, so non-qualifying
+    * pairs die with the scan stream before any distance is computed.
     */
   def bruteForce(
       base: DataFrame,
@@ -103,14 +104,8 @@ object KnnSearch {
       preFilter: Option[Column] = None,
       pairFilter: Option[Column] = None): DataFrame = {
     val filtered = preFilter.map(base.filter).getOrElse(base)
-    val joined = filtered.crossJoin(broadcast(queries))
-    val kept = pairFilter.map(joined.filter).getOrElse(joined)
-    val scored = kept
-      .select(
-        col(qidCol).as("query_id"),
-        metric.score(col(qvecCol), col(vecCol)).as("score"),
-        col(idCol).as("id"))
-    topKOf(scored, k, metric.asc)
+    topKOf(KnnTopK.scan(filtered, queries, k, metric, col(idCol),
+      col(vecCol), col(qidCol), col(qvecCol), pairFilter), k, metric.asc)
   }
 
   /** Batch kNN for UNBOUNDED query sets (the reference's whole-table

@@ -82,8 +82,9 @@ object VectorQueries {
     * tuple, and a conjunctive `label_i <= t_i` evaluated with the
     * scan. The labels/thresholds here are derived deterministically
     * from existing columns (so the DuckDB oracle rebuilds them), but
-    * the operator shape is the general one: the predicate lives in
-    * the BNLJ join condition, one scan, no per-query jobs. Queries
+    * the operator shape is the general one: the fused kNN scan
+    * evaluates the predicate on each (base row, query) pair before
+    * scoring it, one scan, no per-query jobs. Queries
     * whose filter keeps fewer than k rows return fewer rows — the
     * reference semantics.
     */

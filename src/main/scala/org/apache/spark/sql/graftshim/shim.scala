@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Bridge into `private[sql]` Spark internals (Spark 4 made
   * `Column(expr)` implementation-agnostic; the classic converter is
@@ -14,6 +15,11 @@ object Shim {
 
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** A DataFrame over a logical plan built outside the Dataset API. */
+  def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Register a raw Expression builder as a SQL function. */
   def registerFunction(

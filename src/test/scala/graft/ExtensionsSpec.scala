@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.{KnnSearch, KnnTopKExec, VecMetric}
 
 class ExtensionsSpec extends AnyFunSuite {
 
@@ -57,5 +61,21 @@ class ExtensionsSpec extends AnyFunSuite {
     GraftSession.registerFunctions(fresh)
     assert(listed -- before == names.toSet,
       "registerFunctions installed a different set than the table")
+  }
+
+  test("a session built only with GraftExtensions plans bruteForce as KnnTopKExec") {
+    withExtensionsSession { spark =>
+      import spark.implicits._
+      assert(spark.experimental.extraStrategies.isEmpty)
+      val base = (0L until 40L).map(i => (i, Array(i.toFloat, -i.toFloat)))
+        .toDF("id", "vec")
+      val queries = Seq((7L, Array(3.2f, -3.2f))).toDF("query_id", "qvec")
+      val df = KnnSearch.bruteForce(base, queries, 2, VecMetric.Euclidean)
+      assert(df.select("neighbor_id").as[Long].collect().toSeq == Seq(3L, 4L))
+      val nodes = new AdaptiveSparkPlanHelper {}
+        .collect(df.queryExecution.executedPlan) { case p => p.getClass }
+      assert(nodes.contains(classOf[KnnTopKExec]), nodes)
+      assert(!nodes.contains(classOf[BroadcastNestedLoopJoinExec]), nodes)
+    }
   }
 }

@@ -96,17 +96,19 @@ class IndexSpec extends AnyFunSuite {
       (2L, Array(9f, 9f)), (3L, Array(9.5f, 9f))).toDF("id", "vec")
     val cents = Array(Array(0.0, 0.0), Array(9.0, 9.0))
     val p = java.nio.file.Files.createTempDirectory("graft_ups_test").toString
-    IvfIndex.persistIndex(IvfIndex.assign(vecs, "vec", cents), p)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(p, "cluster=1")))
-    // delete BOTH members of cell 1, upsert nothing
-    val deletes = Seq(2L, 3L).toDF("id")
-    val noUpserts = Seq.empty[(Long, Array[Float])].toDF("id", "vec")
-    IvfIndex.upsertPersisted(spark, p,
-      IvfIndex.assign(noUpserts, "vec", cents), deletes)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p, "cluster=1")),
-      "emptied cell directory must be dropped")
-    val left = spark.read.parquet(p).select("id").as[Long].collect().toSet
-    assert(left == Set(0L, 1L))
+    try {
+      IvfIndex.persistIndex(IvfIndex.assign(vecs, "vec", cents), p)
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(p, "cluster=1")))
+      // delete BOTH members of cell 1, upsert nothing
+      val deletes = Seq(2L, 3L).toDF("id")
+      val noUpserts = Seq.empty[(Long, Array[Float])].toDF("id", "vec")
+      IvfIndex.upsertPersisted(spark, p,
+        IvfIndex.assign(noUpserts, "vec", cents), deletes)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p, "cluster=1")),
+        "emptied cell directory must be dropped")
+      val left = spark.read.parquet(p).select("id").as[Long].collect().toSet
+      assert(left == Set(0L, 1L))
+    } finally graft.streaming.Checkpoints.deleteRecursively(p)
   }
 
   test("persisted upsert rewrites a touched cell as one file") {
@@ -116,19 +118,21 @@ class IndexSpec extends AnyFunSuite {
     val vecs = (0L until 8L).map(i => (i, Array(i * 0.1f, 0f))) ++
       (8L until 12L).map(i => (i, Array(9f, i * 0.1f)))
     val p = java.nio.file.Files.createTempDirectory("graft_ups_files").toString
-    IvfIndex.persistIndex(IvfIndex.assign(
-      vecs.toDF("id", "vec").repartition(4), "vec", cents), p)
-    def files(cell: Int): Long = java.nio.file.Files
-      .list(java.nio.file.Paths.get(p, s"cluster=$cell"))
-      .filter(_.toString.endsWith(".parquet")).count()
-    assert(files(0) > 1, "the initial layout should split cell 0")
-    val ups = Seq((3L, Array(0.2f, 0.1f)), (20L, Array(0.1f, 0.2f)))
-      .toDF("id", "vec")
-    IvfIndex.upsertPersisted(spark, p, IvfIndex.assign(ups, "vec", cents),
-      Seq(5L).toDF("id"))
-    assert(files(0) == 1)
-    val left = spark.read.parquet(p).select("id").as[Long].collect().toSet
-    assert(left == (0L until 12L).toSet - 5L + 20L)
+    try {
+      IvfIndex.persistIndex(IvfIndex.assign(
+        vecs.toDF("id", "vec").repartition(4), "vec", cents), p)
+      def files(cell: Int): Long = java.nio.file.Files
+        .list(java.nio.file.Paths.get(p, s"cluster=$cell"))
+        .filter(_.toString.endsWith(".parquet")).count()
+      assert(files(0) > 1, "the initial layout should split cell 0")
+      val ups = Seq((3L, Array(0.2f, 0.1f)), (20L, Array(0.1f, 0.2f)))
+        .toDF("id", "vec")
+      IvfIndex.upsertPersisted(spark, p, IvfIndex.assign(ups, "vec", cents),
+        Seq(5L).toDF("id"))
+      assert(files(0) == 1)
+      val left = spark.read.parquet(p).select("id").as[Long].collect().toSet
+      assert(left == (0L until 12L).toSet - 5L + 20L)
+    } finally graft.streaming.Checkpoints.deleteRecursively(p)
   }
 
   test("q29 persisted upsert returns exactly q28's merged-index results") {
@@ -155,31 +159,33 @@ class IndexSpec extends AnyFunSuite {
     val cents = IvfIndex.sampleCentroids(base, "vec", 16)
     val idxPath = java.nio.file.Files
       .createTempDirectory("graft_compact").toString
-    // reproduce the streaming append shape: 6 micro-batch-sized
-    // slices, each appended separately -> ~6 files per touched cell
-    val assigned = IvfIndex.assign(base, "vec", cents).localCheckpoint(true)
-    for (slice <- 0 until 6)
-      assigned.filter(pmod(col("id"), lit(6)) === slice)
-        .write.mode("append").partitionBy("cluster").parquet(idxPath)
-    def parquetFiles(): Int = {
-      def walk(f: java.io.File): Int =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) 1 else 0
-      walk(new java.io.File(idxPath))
-    }
-    val before = parquetFiles()
-    val preSearch = IvfIndex.searchPersisted(spark, idxPath, queries, cents,
-      10, 6, VecMetric.Euclidean)
-      .select("query_id", "rank", "neighbor_id").collect().toSet
-    val nCompacted = VectorIngest.compactIndex(spark, idxPath,
-      maxFilesPerCell = 2)
-    val after = parquetFiles()
-    assert(nCompacted > 0, "no cell was fragmented enough to compact")
-    assert(after < before, s"file count did not drop: $before -> $after")
-    val postSearch = IvfIndex.searchPersisted(spark, idxPath, queries, cents,
-      10, 6, VecMetric.Euclidean)
-      .select("query_id", "rank", "neighbor_id").collect().toSet
-    assert(postSearch == preSearch, "compaction changed search results")
+    try {
+      // reproduce the streaming append shape: 6 micro-batch-sized
+      // slices, each appended separately -> ~6 files per touched cell
+      val assigned = IvfIndex.assign(base, "vec", cents).localCheckpoint(true)
+      for (slice <- 0 until 6)
+        assigned.filter(pmod(col("id"), lit(6)) === slice)
+          .write.mode("append").partitionBy("cluster").parquet(idxPath)
+      def parquetFiles(): Int = {
+        def walk(f: java.io.File): Int =
+          if (f.isDirectory) f.listFiles().map(walk).sum
+          else if (f.getName.endsWith(".parquet")) 1 else 0
+        walk(new java.io.File(idxPath))
+      }
+      val before = parquetFiles()
+      val preSearch = IvfIndex.searchPersisted(spark, idxPath, queries, cents,
+        10, 6, VecMetric.Euclidean)
+        .select("query_id", "rank", "neighbor_id").collect().toSet
+      val nCompacted = VectorIngest.compactIndex(spark, idxPath,
+        maxFilesPerCell = 2)
+      val after = parquetFiles()
+      assert(nCompacted > 0, "no cell was fragmented enough to compact")
+      assert(after < before, s"file count did not drop: $before -> $after")
+      val postSearch = IvfIndex.searchPersisted(spark, idxPath, queries, cents,
+        10, 6, VecMetric.Euclidean)
+        .select("query_id", "rank", "neighbor_id").collect().toSet
+      assert(postSearch == preSearch, "compaction changed search results")
+    } finally graft.streaming.Checkpoints.deleteRecursively(idxPath)
   }
 
   test("q19 graph beam search recall@10 >= 0.75 (measured 0.83 held-out)") {
@@ -444,12 +450,15 @@ class IndexSpec extends AnyFunSuite {
     }
     val fDir = java.nio.file.Files.createTempDirectory("graft_sz_f")
     val cDir = java.nio.file.Files.createTempDirectory("graft_sz_c")
-    emb.write.mode("overwrite").parquet(fDir.toString)
-    emb.select(col("id"), transform(Sq8Index.encode(col("vec"), sq),
-        c => (c - lit(128)).cast("tinyint")).as("codes"))
-      .write.mode("overwrite").parquet(cDir.toString)
-    val (fB, cB) = (dirBytes(fDir), dirBytes(cDir))
-    assert(cB * 2 < fB, s"codes $cB bytes vs floats $fB bytes")
+    try {
+      emb.write.mode("overwrite").parquet(fDir.toString)
+      emb.select(col("id"), transform(Sq8Index.encode(col("vec"), sq),
+          c => (c - lit(128)).cast("tinyint")).as("codes"))
+        .write.mode("overwrite").parquet(cDir.toString)
+      val (fB, cB) = (dirBytes(fDir), dirBytes(cDir))
+      assert(cB * 2 < fB, s"codes $cB bytes vs floats $fB bytes")
+    } finally Seq(fDir, cDir).foreach(d =>
+      graft.streaming.Checkpoints.deleteRecursively(d.toString))
   }
 
   test("q49 at nprobe = nlist reproduces brute-force q07 exactly") {

@@ -12,29 +12,34 @@ class SourcesSpec extends AnyFunSuite {
   test("jsonl round-trip is content-faithful") {
     val docs = Tables.documents(spark, sf)
     val p = java.nio.file.Files.createTempDirectory("graft_jsonl_t").toString
-    TextSources.writeJsonl(docs, p)
-    val back = TextSources.readJsonl(spark, p, docs.schema)
-    assert(back.count() == docs.count())
-    val a = docs.select(col("doc_id"), md5(col("text"))).collect().toSet
-    val b = back.select(col("doc_id"), md5(col("text"))).collect().toSet
-    assert(a == b)
+    try {
+      TextSources.writeJsonl(docs, p)
+      val back = TextSources.readJsonl(spark, p, docs.schema)
+      assert(back.count() == docs.count())
+      val a = docs.select(col("doc_id"), md5(col("text"))).collect().toSet
+      val b = back.select(col("doc_id"), md5(col("text"))).collect().toSet
+      assert(a == b)
+    } finally graft.streaming.Checkpoints.deleteRecursively(p)
   }
 
   test("jsonl reader: corrupt lines null out PERMISSIVE, fail FAILFAST") {
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType)))
     val dir = java.nio.file.Files.createTempDirectory("graft_bad_jsonl")
-    java.nio.file.Files.writeString(dir.resolve("part.json"),
-      """{"doc_id": 1, "text": "ok"}
-        |this is not json
-        |{"doc_id": 2, "text": "also ok"}
-        |""".stripMargin)
-    val permissive = TextSources.readJsonl(spark, dir.toString, schema)
-    assert(permissive.count() == 3)
-    assert(permissive.filter(col("doc_id").isNull).count() == 1)
-    val strict = TextSources.readJsonl(spark, dir.toString, schema,
-      mode = "FAILFAST")
-    assertThrows[org.apache.spark.SparkException](strict.collect())
+    try {
+      java.nio.file.Files.writeString(dir.resolve("part.json"),
+        """{"doc_id": 1, "text": "ok"}
+          |this is not json
+          |{"doc_id": 2, "text": "also ok"}
+          |""".stripMargin)
+      val permissive = TextSources.readJsonl(spark, dir.toString, schema)
+      assert(permissive.count() == 3)
+      assert(permissive.filter(col("doc_id").isNull).count() == 1)
+      val strict = TextSources.readJsonl(spark, dir.toString, schema,
+        mode = "FAILFAST")
+      assertThrows[org.apache.spark.SparkException](strict.collect())
+    } finally
+      graft.streaming.Checkpoints.deleteRecursively(dir.toString)
   }
 
   test("s04 binaryFile ingest: real files on disk, glob-pruned, decoded") {
@@ -65,15 +70,17 @@ class SourcesSpec extends AnyFunSuite {
       .select(col("event_id"), EventTime.tsUs(evRaw).as("ts_us"),
         col("user_id"), col("event_type"), col("value"))
     val p = java.nio.file.Files.createTempDirectory("graft_csv_t").toString
-    TextSources.writeCsv(ev, p)
-    val back = TextSources.readCsv(spark, p, ev.schema)
-    // summing epoch-µs can overflow long; min/max + cent-sum pin the
-    // round-trip just as tightly
-    val fid = Seq(min(col("ts_us")), max(col("ts_us")),
-      sum(round(col("value") * 100).cast("long")))
-    val a = ev.agg(fid.head, fid.tail: _*).head()
-    val b = back.agg(fid.head, fid.tail: _*).head()
-    assert(a == b)
-    assert(back.count() == ev.count())
+    try {
+      TextSources.writeCsv(ev, p)
+      val back = TextSources.readCsv(spark, p, ev.schema)
+      // summing epoch-µs can overflow long; min/max + cent-sum pin the
+      // round-trip just as tightly
+      val fid = Seq(min(col("ts_us")), max(col("ts_us")),
+        sum(round(col("value") * 100).cast("long")))
+      val a = ev.agg(fid.head, fid.tail: _*).head()
+      val b = back.agg(fid.head, fid.tail: _*).head()
+      assert(a == b)
+      assert(back.count() == ev.count())
+    } finally graft.streaming.Checkpoints.deleteRecursively(p)
   }
 }

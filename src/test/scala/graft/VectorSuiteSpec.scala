@@ -20,6 +20,7 @@ object TestSpark {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    GraftSession.registerFunctions(s)
     s
   }
   val sf = "/root/testdata/sf0.001"
@@ -81,7 +82,9 @@ class VectorSuiteSpec extends AnyFunSuite {
   test("knn plan broadcasts queries and avoids sort-based topk") {
     val plan = SparkEntry.queries("q01_knn_euclidean")(spark, sf)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin"))
+    assert(plan.contains("KnnTopK"), plan)
+    assert(plan.contains("BroadcastExchange IdentityBroadcastMode"), plan)
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.toLowerCase.contains("window"))
   }
 
@@ -113,15 +116,17 @@ class VectorSuiteSpec extends AnyFunSuite {
     assert(words.length == 3) // ceil(130/64)
   }
 
-  test("q14 compound filter is evaluated in the join condition, not above it") {
+  test("q14 compound filter is evaluated inside the fused kNN scan, not above it") {
     val df = SparkEntry.queries("q14_knn_filtered_compound")(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
-    val bnlj = plan.linesIterator.find(_.contains("BroadcastNestedLoopJoin"))
-    assert(bnlj.isDefined, s"no BNLJ in plan:\n$plan")
-    // the per-query threshold conjunction rides in the join condition,
+    val scan = plan.linesIterator.find(_.contains("KnnTopK"))
+    assert(scan.isDefined, s"no KnnTopK in plan:\n$plan")
+    // the per-query threshold conjunction rides in the scan operator,
     // so pairs die before any distance evaluation
-    assert(bnlj.get.contains("l0") && bnlj.get.contains("t0"),
-      s"compound predicate not in join condition: ${bnlj.get}")
+    assert(scan.get.contains("l0") && scan.get.contains("t0"),
+      s"compound predicate not in the kNN scan: ${scan.get}")
+    assert(!plan.linesIterator.exists(l => l.contains("Filter") &&
+      l.contains("t0")), s"compound predicate above the scan:\n$plan")
     assert(df.count() > 0)
   }
 
