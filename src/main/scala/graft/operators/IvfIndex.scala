@@ -1,9 +1,12 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.functions._
 
@@ -14,8 +17,13 @@ import graft.functions._
   * probes its nprobe nearest cells, so the scan touches
   * ~nprobe/nlist of the data.
   *
+  * Search is one streamed pass: the driver ranks the centroids for the
+  * query batch it broadcasts anyway ([[probedQueries]], Q × nlist
+  * distances), and [[KnnTopKExec]] scores each base row against only
+  * the probe rows of its own cell, into per-query heaps.
+  *
   * 100 TB shape: persist the assigned table partitioned/bucketed by
-  * `cluster` — the probe join then becomes partition pruning and the
+  * `cluster` — the probed cells then become partition pruning and the
   * per-query work is a few cells, not the corpus. KMeans trains on a
   * driver-bounded sample; centroid count stays in the thousands.
   */
@@ -75,84 +83,83 @@ object IvfIndex {
       cents: Array[Array[Double]]): DataFrame =
     df.withColumn("cluster", nearestCluster(col(vecCol), cents))
 
-  /** (query_id, cluster) pairs: each query's nprobe nearest cells,
-    * computed as a tiny top-k over queries x centroids (Q x nlist
-    * rows — driver-free, no giant centroid literals in the probe
-    * expression tree).
+  /** The nprobe cells nearest to `vecs`, nearest first: the L2
+    * distance to every centroid (VecL2's float→double widening and
+    * index-ordered sum) ranked by (distance, cell) as collect_topk
+    * ranks. Several vectors share one ranking over all their distances,
+    * as the rows of one query id do. The one probe routine: the batch
+    * worklists below and the single-vector serving path pick their
+    * cells here.
     */
-  def probes(
-      queries: DataFrame,
-      cents: Array[Array[Double]],
-      nprobe: Int): DataFrame =
-    probesRanked(queries, cents, nprobe).select("query_id", "cluster")
+  def nearestCells(vecs: Seq[Array[Double]], cents: Array[Array[Double]],
+      nprobe: Int): Array[Int] = {
+    val heap = new TopKHeap(nprobe, asc = true)
+    val l2 = PairKernel(VecMetric.Euclidean)
+    for (v <- vecs; i <- cents.indices)
+      heap.insert(l2.one(v, cents(i), math.min(v.length, cents(i).length)), i)
+    heap.sortedBestFirst.map(_._2.toInt)
+  }
 
-  /** [[probes]] keeping each cell's probe rank `rn` (1 = nearest) —
-    * lets one scan serve a whole nprobe sweep (cells probed at nprobe
-    * np are exactly those with rn <= np).
+  /** The query batch collected to the driver — Q rows, the batch the
+    * cell scan broadcasts anyway — as (query id, its rows, their cells)
+    * in first-seen order, Q × nlist × dim multiply-adds. A row with a
+    * null id probes nothing; a null vector adds no distances.
+    */
+  private def probeGroups(queries: DataFrame, cents: Array[Array[Double]],
+      nprobe: Int): Seq[(Any, Seq[Row], Array[Int])] = {
+    val qi = queries.schema.fieldIndex("query_id")
+    val vi = queries.schema.fieldIndex("qvec")
+    val rows = queries.collect().toSeq.filterNot(_.isNullAt(qi))
+    val byId = rows.groupBy(_.get(qi))
+    rows.map(_.get(qi)).distinct.map { id =>
+      val group = byId(id)
+      val vecs = group.filterNot(_.isNullAt(vi)).map(_.getSeq[Any](vi)
+        .map { case x: java.lang.Number => x.doubleValue; case _ => 0.0 }
+        .toArray)
+      (id, group, nearestCells(vecs, cents, nprobe))
+    }
+  }
+
+  /** (query_id, cluster, rn): each query's probed cells with their
+    * probe rank `rn` (1 = nearest) — lets one scan serve a whole nprobe
+    * sweep (cells probed at nprobe np are exactly those with
+    * rn <= np). A LocalRelation built on the driver.
     */
   def probesRanked(
       queries: DataFrame,
       cents: Array[Array[Double]],
       nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centsDf = cents.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster", "centroid")
-    val scored = queries.crossJoin(broadcast(centsDf))
-      .select(col("query_id"),
-        vec_l2(col("qvec"), col("centroid")).as("score"),
-        col("cluster").cast("long").as("id"))
-    KnnSearch.topKOf(scored, nprobe, asc = true)
-      .select(col("query_id"), col("neighbor_id").cast("int").as("cluster"),
-        col("rank").as("rn"))
+    val schema = StructType(Seq(queries.schema("query_id"),
+      StructField("cluster", IntegerType, nullable = false),
+      StructField("rn", IntegerType, nullable = false)))
+    val rows = probeGroups(queries, cents, nprobe).flatMap {
+      case (id, _, cells) => cells.indices.map(r => Row(id, cells(r), r + 1))
+    }
+    queries.sparkSession.createDataFrame(rows.asJava, schema)
   }
 
-  /** (query_id, cluster, qvec) — the probe worklist with the query
-    * vector attached, eagerly materialised (Q x nprobe rows, tiny by
-    * contract). Materialising matters beyond the shuffle savings: it
-    * makes the broadcast side of the big probe-join a plain
-    * LogicalRDD, so constraint inference can't push a predicate
-    * built from the *assignment* expression (which references the
-    * base scan) into a re-resolved copy of the same scan — a
-    * self-join constraint-propagation hazard on Spark 4.1.
+  /** The probe worklist (query_id, cluster, then the other columns of
+    * `queries` in order): one row per query row and probed cell, Q ×
+    * nprobe rows. A LocalRelation built on the driver, so the scan
+    * broadcasts it without a job, and no predicate inferred from the
+    * base's cell assignment can reach a re-resolved copy of the base
+    * scan through it (the self-join constraint hazard of a worklist
+    * planned from the queries' lineage).
     */
   def probedQueries(
       queries: DataFrame,
       cents: Array[Array[Double]],
-      nprobe: Int): DataFrame =
-    probes(queries, cents, nprobe)
-      .join(queries, "query_id")
-      .localCheckpoint(true)
-
-  /** [[probedQueries]] for a DRIVER-LOCAL query batch — the serving
-    * fast path: probe selection is plain Scala over the in-memory
-    * centroids (which already live on the driver), so a single-vector
-    * query spends ZERO Spark jobs picking its cells; only the
-    * probed-cell scan itself is distributed. The returned frame is a
-    * LocalRelation, which also sidesteps the self-join
-    * constraint-propagation hazard the eager materialisation above
-    * exists for. Bit-identical to [[probedQueries]]: the same
-    * float→double widened, index-ordered L2 loop as [[VecL2]] and the
-    * same (distance, cluster) tie-break.
-    */
-  def probedQueriesLocal(
-      spark: org.apache.spark.sql.SparkSession,
-      queries: Seq[(Long, Array[Float])],
-      cents: Array[Array[Double]],
       nprobe: Int): DataFrame = {
-    import spark.implicits._
-    queries.flatMap { case (qid, v) =>
-      val scored = cents.zipWithIndex.map { case (c, i) =>
-        var acc = 0.0
-        var j = 0
-        val m = math.min(v.length, c.length)
-        while (j < m) { val d = v(j).toDouble - c(j); acc += d * d; j += 1 }
-        (math.sqrt(acc), i)
-      }
-      scored.sortBy { case (d, i) => (d, i) }.take(nprobe)
-        .map { case (_, i) => (qid, i, v) }
-    }.toDF("query_id", "cluster", "qvec")
+    val qi = queries.schema.fieldIndex("query_id")
+    val rest = queries.schema.fields.indices.filter(_ != qi)
+    val schema = StructType(queries.schema("query_id") +:
+      StructField("cluster", IntegerType, nullable = false) +:
+      rest.map(queries.schema.fields(_)))
+    val rows = probeGroups(queries, cents, nprobe).flatMap {
+      case (id, group, cells) => for (r <- group; c <- cells)
+        yield Row.fromSeq(id +: c +: rest.map(r.get))
+    }
+    queries.sparkSession.createDataFrame(rows.asJava, schema)
   }
 
   /** Persist the assigned table partitioned by cell — at 100 TB this
@@ -211,8 +218,8 @@ object IvfIndex {
     }
   }
 
-  /** Search a persisted index: the probe set prunes partitions at the
-    * scan, then the per-query probe join restricts candidate pairs.
+  /** Search a persisted index: the probed cells prune partitions at
+    * the scan, then [[searchProbed]] scores them.
     */
   def searchPersisted(
       spark: org.apache.spark.sql.SparkSession,
@@ -229,27 +236,21 @@ object IvfIndex {
       .collect().map(_.getInt(0)).toSeq
     val scan = graft.Tables.parquetAt(spark, indexPath)
       .filter(col("cluster").isin(cells: _*))
-    val scored = scan
-      .join(broadcast(probed), "cluster")
-      .select(
-        col("query_id"),
-        metric.score(col("qvec"), col("vec")).as("score"),
-        col("id"))
-    KnnSearch.topKOf(scored, k, metric.asc)
+    searchProbed(scan, probed, k, metric)
   }
 
-  /** IVF search: probe-join + exact distance inside probed cells.
+  /** IVF search: exact distance inside each query's probed cells.
     * assigned: (id, vec, cluster); queries: (query_id, qvec).
     * Returns (query_id, rank, neighbor_id, score).
     *
     * `pairFilter` (filtered ANN, post-filter strategy): a predicate
-    * over base attributes x per-query thresholds, evaluated ON the
-    * probe join BEFORE scoring — non-qualifying candidates never reach
-    * the distance kernel or the top-k heaps, so the filter rides the
-    * same scan the search already does (no second pass, no per-query
-    * jobs). Queries whose filter survives fewer than k candidates in
-    * the probed cells return fewer rows, mirroring the reference's
-    * filtered-query semantics.
+    * over base attributes x per-query thresholds, evaluated on each
+    * (base row, probe row) pair of a cell BEFORE scoring —
+    * non-qualifying candidates never reach the distance kernel or the
+    * top-k heaps, so the filter rides the same scan the search already
+    * does (no second pass, no per-query jobs). Queries whose filter
+    * survives fewer than k candidates in the probed cells return fewer
+    * rows, mirroring the reference's filtered-query semantics.
     */
   def search(
       assigned: DataFrame,
@@ -262,21 +263,19 @@ object IvfIndex {
     searchProbed(assigned, probedQueries(queries, cents, nprobe), k,
       metric, pairFilter)
 
-  /** [[search]] with the probe worklist supplied — lets the serving
-    * path substitute [[probedQueriesLocal]] for a driver-local batch.
+  /** [[search]] with the probe worklist supplied. One streamed pass:
+    * [[KnnTopKExec]] keyed on `cluster` scores each base row against
+    * the broadcast probe rows of its own cell, and [[KnnSearch.topKOf]]
+    * merges the per-partition heaps.
     */
   def searchProbed(
       assigned: DataFrame,
       probed: DataFrame,
       k: Int,
       metric: VecMetric,
-      pairFilter: Option[Column] = None): DataFrame = {
-    val joined = assigned.join(broadcast(probed), "cluster")
-    val scored = pairFilter.fold(joined)(joined.filter)
-      .select(
-        col("query_id"),
-        metric.score(col("qvec"), col("vec")).as("score"),
-        col("id"))
-    KnnSearch.topKOf(scored, k, metric.asc)
-  }
+      pairFilter: Option[Column] = None): DataFrame =
+    KnnSearch.topKOf(KnnTopK.scan(assigned, probed, k, metric,
+      assigned("id"), assigned("vec"), probed("query_id"), probed("qvec"),
+      pairFilter, Some((assigned("cluster"), probed("cluster")))),
+      k, metric.asc)
 }

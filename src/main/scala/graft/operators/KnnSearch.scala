@@ -16,8 +16,8 @@ sealed trait VecMetric {
   /** Driver-side scalar twin of [[score]]: the SAME float→double
     * widening and index-ordered accumulation as the codegen'd kernels
     * (VectorExpressions), so a driver-resident search phase is
-    * bit-identical to the distributed one — the contract
-    * IvfIndex.probedQueriesLocal established for the serving path.
+    * bit-identical to the distributed one — the contract the
+    * collection's driver-resident serving path rests on.
     */
   def localScore(q: Array[Float], v: Array[Float]): Double
 }

@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,16 +18,23 @@ import org.apache.spark.sql.types._
 
 import graft.functions.TopKHeap
 
-/** Fused distance + top-k scan: the exact-kNN operator behind
-  * [[KnnSearch.bruteForce]].
+/** Fused distance + top-k scan: the operator behind
+  * [[KnnSearch.bruteForce]] and the IVF cell scan
+  * ([[IvfIndex.searchProbed]]).
   *
   * `left` is the base (`baseId`, `baseVec`, whatever `pairFilter`
-  * reads), `right` the query batch (`queryId`, `queryVec`). The output
-  * is PARTIAL: per base partition, each query's best k as
-  * (query_id, score, id) rows — at most partitions × Q × k rows, which
-  * [[KnnSearch.topKOf]] merges. The Q×N scored pairs never become
-  * rows (FuseME's cuboid-fused operator, SIGMOD 2022, applied to
-  * score + top-k).
+  * reads), `right` the query batch (`queryId`, `queryVec`). With a cell
+  * key pair (`baseCell`, `queryCell`) a base row is scored only against
+  * the query rows whose cell equals its own, an equi-join on the cell;
+  * without one, against every query row. The output is PARTIAL: per
+  * base partition, each query id's best k as (query_id, score, id)
+  * rows — at most partitions × Q × k rows, which [[KnnSearch.topKOf]]
+  * merges. The scored pairs never become rows (FuseME's cuboid-fused
+  * operator, SIGMOD 2022, applied to score + top-k).
+  *
+  * The keys are plain fields, not a pair: the optimizer finds a node's
+  * references among its fields of type Expression and Option, and
+  * would prune a key column it cannot see.
   */
 case class KnnTopK(
     left: LogicalPlan,
@@ -34,6 +44,8 @@ case class KnnTopK(
     queryId: Expression,
     queryVec: Expression,
     pairFilter: Option[Expression],
+    baseCell: Option[Expression],
+    queryCell: Option[Expression],
     metric: VecMetric,
     k: Int,
     output: Seq[Attribute]) extends BinaryNode {
@@ -49,8 +61,9 @@ object KnnTopK {
   /** The partial top-k frame (query_id, score, id) of `queries` against
     * `base`. The column arguments are resolved exactly as
     * `base.crossJoin(queries).select(...)` resolves them, so a
-    * `pairFilter` may name columns of either side. Each child is
-    * pruned to the columns the scan reads.
+    * `pairFilter` may name columns of either side; `cells`, when given,
+    * is the (base, query) cell-key pair, each key reading only its own
+    * side. Each child is pruned to the columns the scan reads.
     */
   def scan(
       base: DataFrame,
@@ -61,10 +74,13 @@ object KnnTopK {
       vec: Column,
       qid: Column,
       qvec: Column,
-      pairFilter: Option[Column]): DataFrame = {
+      pairFilter: Option[Column],
+      cells: Option[(Column, Column)] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    val keys = cells.toSeq.flatMap { case (b, q) => Seq(b, q) }
     val probe = base.crossJoin(queries)
-      .select(id, vec, qid, qvec, pairFilter.getOrElse(lit(true)))
+      .select(Seq(id, vec, qid, qvec, pairFilter.getOrElse(lit(true))) ++
+        keys: _*)
     val (exprs, join) = probe.queryExecution.analyzed match {
       case Project(ps, j: Join) => (ps.map {
         case a: Alias => a.child
@@ -72,7 +88,7 @@ object KnnTopK {
       }, j)
       case p => throw new IllegalStateException(s"unexpected probe plan $p")
     }
-    val Seq(bid, bvec, q, qv, pf) = exprs
+    val Seq(bid, bvec, q, qv, pf) = exprs.take(5)
     Seq(bvec, qv).foreach(e => require(e.dataType match {
       case ArrayType(FloatType | DoubleType, _) => true
       case _ => false
@@ -81,15 +97,21 @@ object KnnTopK {
     require(bid.dataType == LongType,
       s"kNN ids must be bigint, got ${bid.dataType.catalogString}")
     val filter = pairFilter.map(_ => pf)
+    val bcell = cells.map(_ => exprs(5))
+    val qcell = cells.map(_ => exprs(6))
+    // boxed keys of different types never compare equal
+    for (b <- bcell; c <- qcell) require(b.dataType == c.dataType,
+      s"cell keys differ in type: ${b.dataType.catalogString} vs " +
+        c.dataType.catalogString)
     def pruned(child: LogicalPlan, used: Seq[Expression]): LogicalPlan = {
       val refs = AttributeSet(used.flatMap(_.references))
       val keep = child.output.filter(refs.contains)
       if (keep.length == child.output.length) child else Project(keep, child)
     }
     val node = KnnTopK(
-      pruned(join.left, Seq(bid, bvec) ++ filter),
-      pruned(join.right, Seq(q, qv) ++ filter),
-      bid, bvec, q, qv, filter, metric, k,
+      pruned(join.left, Seq(bid, bvec) ++ filter ++ bcell),
+      pruned(join.right, Seq(q, qv) ++ filter ++ qcell),
+      bid, bvec, q, qv, filter, bcell, qcell, metric, k,
       Seq(AttributeReference("query_id", q.dataType, q.nullable)(),
         AttributeReference("score", DoubleType, nullable = false)(),
         AttributeReference("id", LongType, nullable = false)()))
@@ -108,8 +130,8 @@ object KnnTopK {
     def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
       case n: KnnTopK =>
         KnnTopKExec(planLater(n.left), planLater(n.right), n.baseId,
-          n.baseVec, n.queryId, n.queryVec, n.pairFilter, n.metric, n.k,
-          n.output) :: Nil
+          n.baseVec, n.queryId, n.queryVec, n.pairFilter, n.baseCell,
+          n.queryCell, n.metric, n.k, n.output) :: Nil
       case _ => Nil
     }
   }
@@ -118,16 +140,21 @@ object KnnTopK {
 /** Physical [[KnnTopK]]. The query batch is broadcast (as
   * BroadcastNestedLoopJoinExec broadcasts its build side) and each
   * base partition streams through once:
-  *   - a base row whose id or vector is null is skipped, as is a
-  *     query whose vector is null (the score would be null);
+  *   - each task widens every distinct query vector to double once and
+  *     keeps one [[TopKHeap]] per distinct query id; a query row whose
+  *     vector is null is dropped (its score would be null);
+  *   - with a cell key, the task maps each cell to the query rows of
+  *     that cell, and a base row meets only its own cell's rows;
+  *   - a base row whose id, vector or cell is null is skipped;
   *   - the base vector is widened to double once per row;
   *   - `pairFilter`, a predicate over the joined (base, query) row,
-  *     picks the queries the row is scored against;
-  *   - the kernel scores the row against those queries four at a time;
-  *   - one [[TopKHeap]] per query keeps the partition's best k.
-  * A task holds Q × k heap entries besides the broadcast batch itself,
-  * the memory bound the broadcast already implies; unbounded query
-  * sets go through [[KnnSearch.bruteForceBlocked]].
+  *     picks the query rows the base row is scored against;
+  *   - the kernel scores the row against those queries four at a time,
+  *     each score going to its query id's heap.
+  * A task holds the widened distinct query vectors and Q × k heap
+  * entries besides the broadcast batch itself, the memory bound the
+  * broadcast already implies; unbounded query sets go through
+  * [[KnnSearch.bruteForceBlocked]].
   */
 case class KnnTopKExec(
     left: SparkPlan,
@@ -137,6 +164,8 @@ case class KnnTopKExec(
     queryId: Expression,
     queryVec: Expression,
     pairFilter: Option[Expression],
+    baseCell: Option[Expression],
+    queryCell: Option[Expression],
     metric: VecMetric,
     k: Int,
     output: Seq[Attribute]) extends BinaryExecNode {
@@ -166,6 +195,9 @@ case class KnnTopKExec(
     val vec = BindReferences.bindReference(baseVec, left.output)
     val qid = BindReferences.bindReference(queryId, right.output)
     val qvec = BindReferences.bindReference(queryVec, right.output)
+    val bcell = baseCell.map(BindReferences.bindReference(_, left.output))
+      .orNull
+    val qcell = queryCell.map(BindReferences.bindReference(_, right.output))
     val vecIsFloat = KnnTopKExec.isFloat(baseVec)
     val qvecIsFloat = KnnTopKExec.isFloat(queryVec)
     val kernel = PairKernel(metric)
@@ -178,18 +210,26 @@ case class KnnTopKExec(
       if (!rows.hasNext) Iterator.empty
       else {
         val qRows = batch.value
-        val nq = qRows.length
-        val qvs = qRows.map(r => Option(qvec.eval(r).asInstanceOf[ArrayData])
-          .map(KnnTopKExec.widen(_, qvecIsFloat, null)).orNull)
-        val qaux = qvs.map(q => if (q == null) 0.0 else kernel.aux(q, q.length))
-        val live = qvs.indices.filter(qvs(_) != null).toArray
+        val qs = new KnnTopKExec.Queries(qRows, qid, qvec, qvecIsFloat,
+          kernel, kk, asc)
+        // every base row meets `all`, or the rows of its cell
+        val all = qRows.indices.filter(qs.vecOf(_) >= 0).toArray
+        val byCell = qcell.map { c =>
+          val mp = new java.util.HashMap[Any, Array[Int]]()
+          all.groupBy(j => c.eval(qRows(j))).foreach { case (key, js) =>
+            if (key != null) mp.put(key, js)
+          }
+          mp
+        }
+        val widest = byCell.fold(all.length)(mp =>
+          mp.values.iterator.asScala.map(_.length).foldLeft(0)(math.max))
         val pred = cond.map { c =>
           val p = Predicate.create(c, joinedOutput); p.initialize(part); p
-        }
+        }.orNull
         val joined = new JoinedRow
-        val sel = if (pred.isEmpty) live else new Array[Int](live.length)
-        val scores = new Array[Double](live.length)
-        val heaps = Array.fill(nq)(new TopKHeap(kk, asc))
+        val sel = new Array[Int](widest)
+        val hp = new Array[Int](widest)
+        val scores = new Array[Double](widest)
         var vbuf = new Array[Double](0)
         var nEvals = 0L
         var nInserts = 0L
@@ -197,29 +237,31 @@ case class KnnTopKExec(
           val row = rows.next()
           val idv = id.eval(row)
           val va = vec.eval(row).asInstanceOf[ArrayData]
-          if (idv != null && va != null) {
-            val m = pred match {
-              case None => live.length
-              case Some(p) =>
-                joined.withLeft(row)
-                var m = 0; var j = 0
-                while (j < live.length) {
-                  if (p.eval(joined.withRight(qRows(live(j))))) {
-                    sel(m) = live(j); m += 1
-                  }
-                  j += 1
-                }
-                m
+          val group =
+            if (idv == null || va == null) null
+            else byCell match {
+              case None => all
+              case Some(mp) => mp.get(bcell.eval(row))
+            }
+          if (group != null) {
+            if (pred != null) joined.withLeft(row)
+            var m = 0; var j = 0
+            while (j < group.length) {
+              val p = group(j)
+              if (pred == null || pred.eval(joined.withRight(qRows(p)))) {
+                sel(m) = qs.vecOf(p); hp(m) = qs.heapOf(p); m += 1
+              }
+              j += 1
             }
             if (m > 0) {
               vbuf = KnnTopKExec.widen(va, vecIsFloat, vbuf)
               val vlen = va.numElements()
-              kernel.scoreRow(qvs, qaux, sel, m, vbuf, vlen,
+              kernel.scoreRow(qs.vecs, qs.aux, sel, m, vbuf, vlen,
                 kernel.aux(vbuf, vlen), scores)
               val idl = idv.asInstanceOf[Long]
-              var j = 0
+              j = 0
               while (j < m) {
-                if (heaps(sel(j)).insert(scores(j), idl)) nInserts += 1
+                if (qs.heaps(hp(j)).insert(scores(j), idl)) nInserts += 1
                 j += 1
               }
               nEvals += m
@@ -231,10 +273,10 @@ case class KnnTopKExec(
         val proj = UnsafeProjection.create(
           Array[DataType](qidType, DoubleType, LongType))
         val out = new GenericInternalRow(3)
-        (0 until nq).iterator.flatMap { j =>
-          val best = heaps(j).sortedBestFirst
+        qs.heaps.indices.iterator.flatMap { h =>
+          val best = qs.heaps(h).sortedBestFirst
           outRows += best.length
-          out.update(0, qid.eval(qRows(j)))
+          out.update(0, qs.ids(h))
           best.iterator.map { case (s, i) =>
             out.setDouble(1, s); out.setLong(2, i)
             proj(out): InternalRow
@@ -261,6 +303,34 @@ object KnnTopKExec {
     if (isFloat) while (i < n) { out(i) = a.getFloat(i).toDouble; i += 1 }
     else while (i < n) { out(i) = a.getDouble(i); i += 1 }
     out
+  }
+
+  /** One task's view of the broadcast query rows: row j's vector is
+    * `vecs(vecOf(j))` (-1 when null), widened once per distinct vector,
+    * and its scores go to `heaps(heapOf(j))`, one heap per distinct
+    * query id `ids(heapOf(j))`.
+    */
+  private final class Queries(rows: Array[InternalRow], qid: Expression,
+      qvec: Expression, isFloat: Boolean, kernel: PairKernel, k: Int,
+      asc: Boolean) {
+    val vecOf = new Array[Int](rows.length)
+    val heapOf = new Array[Int](rows.length)
+    private val vecIdx = new java.util.HashMap[ArrayData, Integer]()
+    private val idIdx = new java.util.HashMap[Any, Integer]()
+    private val vs = ArrayBuffer.empty[Array[Double]]
+    private val is = ArrayBuffer.empty[Any]
+    rows.indices.foreach { j =>
+      val qv = qvec.eval(rows(j)).asInstanceOf[ArrayData]
+      vecOf(j) = if (qv == null) -1 else vecIdx.computeIfAbsent(qv, _ => {
+        vs += widen(qv, isFloat, null); vs.length - 1
+      })
+      val q = qid.eval(rows(j))
+      heapOf(j) = idIdx.computeIfAbsent(q, _ => { is += q; is.length - 1 })
+    }
+    val vecs: Array[Array[Double]] = vs.toArray
+    val aux: Array[Double] = vecs.map(v => kernel.aux(v, v.length))
+    val ids: Array[Any] = is.toArray
+    val heaps: Array[TopKHeap] = Array.fill(ids.length)(new TopKHeap(k, asc))
   }
 }
 

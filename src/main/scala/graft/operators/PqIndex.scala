@@ -121,8 +121,10 @@ object PqIndex {
       .groupBy("query_id")
       .agg(collect_topk(col("adc"), col("id"), k * rerank, asc = true).as("topk"))
       .select(col("query_id"), explode(col("topk.id")).as("id"))
-    val exact = cands
-      .join(encoded.select(col("id"), col("vec")), "id")
+    // the <= Q x k x rerank candidates broadcast to the encoded scan,
+    // which then never shuffles
+    val exact = encoded.select(col("id"), col("vec"))
+      .join(broadcast(cands), "id")
       .join(broadcast(queries), "query_id")
       .select(col("query_id"), vec_l2(col("qvec"), col("vec")).as("score"), col("id"))
     KnnSearch.topKOf(exact, k, asc = true)

@@ -79,7 +79,7 @@ class VectorCollection(
     * above the bound or for quantized modes (their scans stay
     * distributed) — so a corpus-scale collection never pays or holds
     * it. Serving from it is bit-identical to the distributed probed
-    * scan: same probe cells (probedQueriesLocal math), localScore
+    * scan: same probe cells ([[IvfIndex.nearestCells]]), localScore
     * twins, (score, id) top-k ties — spec-gated against a 1-row
     * batchQuery.
     */
@@ -160,11 +160,14 @@ class VectorCollection(
     require(indexed, "createIndex() must run before queries")
 
   /** Reference single-vector query: top-n ids, optional filter.
-    * Serving fast path: probe selection runs as driver math over the
-    * in-memory centroids ([[IvfIndex.probedQueriesLocal]]), so the
-    * call spends exactly ONE distributed job — the probed-cell scan —
-    * instead of the probe-topk + checkpoint jobs the batch path pays.
-    * Results are bit-identical to a 1-row [[batchQuery]] (spec gate).
+    * Probe selection is driver math over the in-memory centroids
+    * ([[IvfIndex.nearestCells]]). Up to [[ServeLocalRows]] entities an
+    * unfiltered query runs no Spark job at all; above it, or with a
+    * filter, the call runs the batch search on a one-row batch (three
+    * jobs for the flat scan: the worklist broadcast, the fused cell
+    * scan and the top-k merge) and sorts the ≤ n ranked ids on the
+    * driver. Results are bit-identical to a 1-row [[batchQuery]] (spec
+    * gate).
     */
   def query(v: Array[Float], n: Int,
       filterExpr: Option[Column] = None): Seq[Long] = {
@@ -176,12 +179,8 @@ class VectorCollection(
     // distributed scan carries, so a filtered query keeps that path.
     if (filterExpr.isEmpty) localServe() match {
       case Some(cells) =>
-        val probeIdx = cents.zipWithIndex.map { case (c, i) =>
-          var acc = 0.0; var j = 0
-          val m = math.min(v.length, c.length)
-          while (j < m) { val d = v(j).toDouble - c(j); acc += d * d; j += 1 }
-          (math.sqrt(acc), i)
-        }.sortBy { case (d, i) => (d, i) }.take(nprobe).map(_._2)
+        val probeIdx = IvfIndex.nearestCells(Seq(v.map(_.toDouble)), cents,
+          nprobe)
         val ord: Ordering[(Double, Long)] =
           if (metric.asc) Ordering.Tuple2(Ordering.Double.TotalOrdering,
             Ordering.Long)
@@ -193,16 +192,14 @@ class VectorCollection(
           .toArray.sorted(ord).take(n).map(_._2).toSeq
       case None => ()
     }
-    val probed = IvfIndex.probedQueriesLocal(spark, Seq((0L, v)),
-      cents, nprobe)
+    val q = Seq((0L, v)).toDF("query_id", "qvec")
+    val probed = IvfIndex.probedQueries(q, cents, nprobe)
     val base = filterExpr.map(table.filter).getOrElse(table)
     val ranked = if (quantization == "none")
       IvfIndex.searchProbed(base, probed, n, metric)
-    else {
-      val q = Seq((0L, v)).toDF("query_id", "qvec")
-      quantSearch(base, q, n, None, probed)
-    }
-    ranked.orderBy("rank").select("neighbor_id").as[Long].collect().toSeq
+    else quantSearch(base, q, n, None, probed)
+    ranked.select("rank", "neighbor_id").collect()
+      .sortBy(_.getInt(0)).map(_.getLong(1)).toSeq
   }
 
   /** Reference batch_query: (query_id, qvec) DataFrame in, ranked
@@ -236,10 +233,10 @@ class VectorCollection(
 
   /** Quantized in-cell scan: probe cells, score CODES (never the
     * floats) inside probed cells, and for PQ recover recall with an
-    * exact re-rank over the top n*rerank ADC candidates only.
-    * `probed` is the caller's probe worklist — the batch path passes
-    * [[IvfIndex.probedQueries]], the single-vector serving path the
-    * driver-local equivalent.
+    * exact re-rank over the top n*rerank ADC candidates only. The
+    * re-rank broadcasts those ≤ Q × n × rerank candidate rows to the
+    * stored table's scan, which then never shuffles. `probed` is the
+    * caller's [[IvfIndex.probedQueries]] worklist.
     */
   private def quantSearch(base: DataFrame, queries: DataFrame, n: Int,
       pairFilter: Option[Column], probed: DataFrame): DataFrame = {
@@ -265,8 +262,8 @@ class VectorCollection(
           .agg(graft.functions.collect_topk(col("adc"), col("id"),
             n * rerank, adcAsc).as("topk"))
           .select(col("query_id"), explode(col("topk.id")).as("id"))
-        val exact = cands
-          .join(base.select(col("id"), col("vec")), "id")
+        val exact = base.select(col("id"), col("vec"))
+          .join(broadcast(cands), "id")
           .join(broadcast(queries.select("query_id", "qvec")), "query_id")
           .select(col("query_id"),
             metric.score(col("qvec"), col("vec")).as("score"), col("id"))

@@ -160,8 +160,8 @@ object IndexQueries {
     }
     val assigned = IvfIndex.assign(base, "vec", cents)
       .withColumn("codes", PqIndex.encode(col("vec"), pq))
-    // probe worklist materialised with qvec; ADC table derived from it
-    // post-checkpoint so no further join touches the base scan
+    // the driver-built probe worklist carries qvec; the ADC table is
+    // derived from it, so no further join touches the base scan
     val probed = IvfIndex.probedQueries(queries, cents, NProbe)
       .withColumn("tbl", PqIndex.distTable(col("qvec"), pq))
       .select("query_id", "cluster", "tbl")
@@ -173,8 +173,9 @@ object IndexQueries {
       .agg(graft.functions.collect_topk(col("adc"), col("id"), K * Rerank,
         asc = true).as("topk"))
       .select(col("query_id"), explode(col("topk.id")).as("id"))
-    val exact = cands
-      .join(base, "id")
+    // the <= NQ x K x Rerank candidates broadcast to the base scan, so
+    // the re-rank never shuffles the base
+    val exact = base.join(broadcast(cands), "id")
       .join(broadcast(queries), "query_id")
       .select(col("query_id"),
         graft.functions.vec_l2(col("qvec"), col("vec")).as("score"), col("id"))
@@ -211,8 +212,7 @@ object IndexQueries {
       .agg(graft.functions.collect_topk(col("adc"), col("id"), K * Rerank,
         asc = false).as("topk"))
       .select(col("query_id"), explode(col("topk.id")).as("id"))
-    val exact = cands
-      .join(base, "id")
+    val exact = base.join(broadcast(cands), "id")
       .join(broadcast(queries), "query_id")
       .select(col("query_id"),
         graft.functions.vec_dot(col("qvec"), col("vec")).as("score"),

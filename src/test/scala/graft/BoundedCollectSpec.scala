@@ -47,8 +47,10 @@ class BoundedCollectSpec extends AnyFunSuite {
         "(64k default) rows by build()'s own guard — corpus-scale " +
         "builds keep the distributed path"),
     "operators/IvfIndex.scala" ->
-      (4, "centroids (nlist <= 4096 rows); 3x probed cell-id lists " +
-        "(<= nprobe x queries ints)"),
+      (5, "centroids (nlist <= 4096 rows); the probe worklist's query " +
+        "batch (Q rows, the batch the cell scan broadcasts anyway; " +
+        "the driver probe then does Q x nlist x dim multiply-adds); " +
+        "3x probed cell-id lists (<= nprobe x queries ints)"),
     "operators/IvfTree.scala" ->
       (1, "two-level tree centroids: nlist1 + nlist1*nlist2 rows"),
     "operators/LshIndex.scala" ->

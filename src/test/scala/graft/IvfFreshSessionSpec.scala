@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * used to die with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND — constraint
   * inference pushed the cluster-assignment expression (which
   * references the base scan) across the probes/queries self-join
-  * before relation dedup renamed the second scan. Fixed by
-  * materialising the probe worklist (IvfIndex.probedQueries).
+  * before relation dedup renamed the second scan. The probe worklist
+  * (IvfIndex.probedQueries) is now a LocalRelation built on the
+  * driver, so no plan joins the queries' lineage with the base scan.
   */
 class IvfFreshSessionSpec extends AnyFunSuite {
   import TestSpark._

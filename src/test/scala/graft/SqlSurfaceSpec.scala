@@ -53,18 +53,27 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("the IVF scan's distance projection stays inside whole-stage codegen") {
-    // exact kNN scores inside KnnTopKExec (KnnTopKSpec); the IVF cell
-    // scan still scores through the codegen'd vec_l2 expression
-    val df = SparkEntry.queries("q20_ivf_flat")(spark, sf)
+    // q20's flat cell scan scores inside the fused KnnTopKExec
+    // (IvfScanSpec); the IVF range scan (q52) still scores through the
+    // codegen'd vec_l2 expression
+    val fused = SparkEntry.queries("q20_ivf_flat")(spark, sf)
+    fused.collect()
+    val fusedPlan = fused.queryExecution.executedPlan.toString
+    assert(fusedPlan.contains("KnnTopK") &&
+      !fusedPlan.contains("BroadcastHashJoin"),
+      s"q20's cell scan is not the fused operator:\n$fusedPlan")
+    val df = SparkEntry.queries("q52_ivf_range")(spark, sf)
     df.collect() // AQE only finalises (and shows) codegen stages on execution
     val plan = df.queryExecution.executedPlan.toString
-    // the distance projection must carry the *(n) whole-stage-codegen
-    // marker — an interpreted fallback would print it unstarred
-    val projLine = plan.linesIterator
-      .find(l => l.contains("Project") && l.contains("vecl2"))
-    assert(projLine.isDefined, s"distance kernel not in plan:\n$plan")
-    assert(projLine.get.matches(""".*\*\(\d+\) Project.*"""),
-      s"distance projection not codegen'd: ${projLine.get}")
+    // the scoring vecl2(qvec, vec) — the radius test rides in the
+    // probe join's condition — must carry the *(n) whole-stage-codegen
+    // marker; an interpreted fallback would print it unstarred. (The
+    // cell assignment's vecl2 sits in a higher-order transform, which
+    // never codegens.)
+    val scoreLine = plan.linesIterator.find(_.contains("vecl2(qvec"))
+    assert(scoreLine.isDefined, s"distance kernel not in plan:\n$plan")
+    assert(scoreLine.get.matches(""".*\*\(\d+\) .*"""),
+      s"distance kernel not codegen'd: ${scoreLine.get}")
   }
 
   test("SQL users can run a full knn query over parquet with vec functions") {
