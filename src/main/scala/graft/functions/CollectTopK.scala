@@ -5,7 +5,7 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, TernaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -233,5 +233,170 @@ object TopKHeap {
     var i = 0
     while (i < m) { h.insert(bb.getDouble, bb.getLong); i += 1 }
     h
+  }
+}
+
+/** The re-rank merge of a PQ search ([[graft.operators.PqIndex.search]]):
+  * rows (approximate score, id, exact score) in, the top k by exact
+  * score out. Per group it keeps the `cands` best rows by (approximate
+  * score, id) — `asc` as in [[CollectTopK]] — exactly the candidate set
+  * a `collect_topk` over every approximately scored row keeps, since
+  * each of those is in its own partition's best `cands`. It then ranks
+  * the kept rows with a non-null exact score as `collect_topk(exact,
+  * id, k, asc)` would, into the same array<struct<id, score>>.
+  */
+case class CollectRerank(
+    first: Expression,  // approximate score: Double
+    second: Expression, // id: Long
+    third: Expression,  // exact score: Double, null when unscored
+    cands: Int,
+    k: Int,
+    asc: Boolean,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[CandidateHeap]
+    with TernaryLike[Expression] {
+
+  override def createAggregationBuffer(): CandidateHeap =
+    new CandidateHeap(cands, asc)
+
+  override def update(buf: CandidateHeap, input: InternalRow): CandidateHeap = {
+    val s = first.eval(input)
+    val id = second.eval(input)
+    if (s != null && id != null) {
+      val sd = s.asInstanceOf[Double]
+      val idl = id.asInstanceOf[Long]
+      if (buf.admits(sd, idl))
+        buf.insert(sd, idl, third.eval(input).asInstanceOf[AnyRef])
+    }
+    buf
+  }
+
+  override def merge(buf: CandidateHeap, other: CandidateHeap): CandidateHeap = {
+    var i = 0
+    while (i < other.size) {
+      if (buf.admits(other.score(i), other.id(i)))
+        buf.insert(other.score(i), other.id(i), other.payload(i))
+      i += 1
+    }
+    buf
+  }
+
+  override def eval(buf: CandidateHeap): Any = {
+    val best = new TopKHeap(k, asc)
+    var i = 0
+    while (i < buf.size) {
+      buf.payload(i) match {
+        case e: java.lang.Double => best.insert(e.doubleValue, buf.id(i))
+        case _ => ()
+      }
+      i += 1
+    }
+    new GenericArrayData(best.sortedBestFirst.map { case (s, id) =>
+      InternalRow(id, s)
+    })
+  }
+
+  override def serialize(buf: CandidateHeap): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + buf.size * 25)
+    bb.putInt(buf.size)
+    var i = 0
+    while (i < buf.size) {
+      bb.putDouble(buf.score(i)); bb.putLong(buf.id(i))
+      buf.payload(i) match {
+        case e: java.lang.Double => bb.put(1: Byte); bb.putDouble(e)
+        case _ => bb.put(0: Byte); bb.putDouble(0.0)
+      }
+      i += 1
+    }
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): CandidateHeap = {
+    val bb = ByteBuffer.wrap(bytes)
+    val h = new CandidateHeap(cands, asc)
+    var i = bb.getInt
+    while (i > 0) {
+      val s = bb.getDouble; val id = bb.getLong
+      val has = bb.get() == 1; val e = bb.getDouble
+      h.insert(s, id, if (has) java.lang.Double.valueOf(e) else null)
+      i -= 1
+    }
+    h
+  }
+
+  override def dataType: DataType = ArrayType(
+    StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false))),
+    containsNull = false)
+  override def nullable: Boolean = false
+
+  override def withNewMutableAggBufferOffset(o: Int): CollectRerank =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): CollectRerank =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(
+      a: Expression, b: Expression, c: Expression): CollectRerank =
+    copy(first = a, second = b, third = c)
+  override def prettyName: String = "collect_rerank"
+}
+
+/** [[TopKHeap]]'s bounded (score, id) heap with one payload per entry:
+  * the PQ scan keeps each candidate's vector for its exact re-rank,
+  * the re-rank merge its exact score. Callers insert only what
+  * [[admits]] accepts, so a payload is built only for a kept entry.
+  */
+final class CandidateHeap(k: Int, asc: Boolean) {
+  private val scores = new Array[Double](k)
+  private val ids = new Array[Long](k)
+  private val payloads = new Array[AnyRef](k)
+  private var n = 0
+
+  def size: Int = n
+  def score(i: Int): Double = scores(i)
+  def id(i: Int): Long = ids(i)
+  def payload(i: Int): AnyRef = payloads(i)
+
+  /** a strictly worse than b? (worse = later in final ranking) */
+  @inline private def worse(s1: Double, i1: Long, s2: Double, i2: Long): Boolean =
+    if (asc) s1 > s2 || (s1 == s2 && i1 > i2)
+    else s1 < s2 || (s1 == s2 && i1 > i2)
+
+  /** Would the heap keep (s, id)? */
+  def admits(s: Double, id: Long): Boolean =
+    n < k || worse(scores(0), ids(0), s, id)
+
+  /** Keep (s, id, p), evicting the worst when full; only after
+    * [[admits]] said yes.
+    */
+  def insert(s: Double, id: Long, p: AnyRef): Unit = {
+    if (n < k) {
+      var i = n
+      scores(i) = s; ids(i) = id; payloads(i) = p; n += 1
+      while (i > 0) {
+        val q = (i - 1) >> 1
+        if (worse(scores(i), ids(i), scores(q), ids(q))) {
+          swap(i, q); i = q
+        } else return
+      }
+    } else {
+      scores(0) = s; ids(0) = id; payloads(0) = p
+      var i = 0
+      while (true) {
+        val l = 2 * i + 1; val r = l + 1
+        var w = i
+        if (l < n && worse(scores(l), ids(l), scores(w), ids(w))) w = l
+        if (r < n && worse(scores(r), ids(r), scores(w), ids(w))) w = r
+        if (w == i) return
+        swap(i, w); i = w
+      }
+    }
+  }
+
+  @inline private def swap(i: Int, j: Int): Unit = {
+    val ts = scores(i); scores(i) = scores(j); scores(j) = ts
+    val ti = ids(i); ids(i) = ids(j); ids(j) = ti
+    val tp = payloads(i); payloads(i) = payloads(j); payloads(j) = tp
   }
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types._
 
@@ -226,4 +226,99 @@ case class VecSignHamming(left: Expression, right: Expression)
     })
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(left = l, right = r)
+}
+
+/** Index of the nearest centroid — the IVF cell assignment — as one
+  * codegen'd pass: each centroid's distance is VecL2's (float→double
+  * widening, index-ordered sum over the shorter length, then sqrt),
+  * and the first minimum wins under Spark's double ordering (NaN
+  * above every number), which is what
+  * `array_position(d, array_min(d)) - 1` over the distance array `d`
+  * returns. Null for a null vector or no centroids.
+  */
+case class NearestCentroid(child: Expression, cents: Array[Array[Double]])
+    extends UnaryExpression with Serializable {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<float|double>, got ${t.catalogString}")
+  }
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+  // the centroids would print as an array reference
+  override def stringArgs: Iterator[Any] = Iterator(child)
+
+  private def isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override def nullSafeEval(a: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val fl = isFloat
+    var best = -1
+    var bestD = 0.0
+    var c = 0
+    while (c < cents.length) {
+      val ce = cents(c)
+      var acc = 0.0
+      var i = 0
+      val n = math.min(x.numElements(), ce.length)
+      while (i < n) {
+        val d = (if (fl) x.getFloat(i).toDouble else x.getDouble(i)) - ce(i)
+        acc += d * d; i += 1
+      }
+      val dist = math.sqrt(acc)
+      if (best < 0 || SQLOrderingUtil.compareDoubles(dist, bestD) < 0) {
+        best = c; bestD = dist
+      }
+      c += 1
+    }
+    if (best < 0) null else best
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
+    nullSafeCodeGen(ctx, ev, a => {
+      val n = ctx.freshName("n")
+      val v = ctx.freshName("v")
+      val best = ctx.freshName("best")
+      val bestD = ctx.freshName("bestD")
+      val c = ctx.freshName("c")
+      val ce = ctx.freshName("ce")
+      val m = ctx.freshName("m")
+      val acc = ctx.freshName("acc")
+      val i = ctx.freshName("i")
+      val d = ctx.freshName("d")
+      val dist = ctx.freshName("dist")
+      s"""
+       |int $n = $a.numElements();
+       |double[] $v = new double[$n];
+       |for (int $i = 0; $i < $n; $i++) {
+       |  $v[$i] = ${if (isFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"};
+       |}
+       |int $best = -1;
+       |double $bestD = 0.0;
+       |for (int $c = 0; $c < $centsRef.length; $c++) {
+       |  double[] $ce = $centsRef[$c];
+       |  int $m = java.lang.Math.min($n, $ce.length);
+       |  double $acc = 0.0;
+       |  for (int $i = 0; $i < $m; $i++) {
+       |    double $d = $v[$i] - $ce[$i];
+       |    $acc += $d * $d;
+       |  }
+       |  double $dist = java.lang.Math.sqrt($acc);
+       |  if ($best < 0 || org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+       |      .compareDoubles($dist, $bestD) < 0) {
+       |    $best = $c; $bestD = $dist;
+       |  }
+       |}
+       |if ($best < 0) { ${ev.isNull} = true; } else { ${ev.value} = $best; }
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+  override def prettyName: String = "nearest_centroid"
 }

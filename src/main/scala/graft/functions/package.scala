@@ -21,6 +21,10 @@ package object functions {
   def vec_angular(a: Column, b: Column): Column =
     Shim.column(VecCosineSim(Shim.expression(a), Shim.expression(b))) * -1 + 1
 
+  /** Index of the nearest of `cents` by VecL2 (first minimum). */
+  def nearest_centroid(vec: Column, cents: Array[Array[Double]]): Column =
+    Shim.column(NearestCentroid(Shim.expression(vec), cents))
+
   def vec_sign_hamming(a: Column, b: Column): Column =
     Shim.column(VecSignHamming(Shim.expression(a), Shim.expression(b)))
 
@@ -104,4 +108,14 @@ package object functions {
     Shim.column(
       CollectTopK(Shim.expression(score), Shim.expression(id), k, asc)
         .toAggregateExpression())
+
+  /** The PQ re-rank merge: of each group's `cands` best rows by
+    * (approximate score, id), the top k by exact score, as
+    * array<struct<id,score>> best-first (see CollectRerank).
+    */
+  def collect_rerank(approx: Column, id: Column, exact: Column, cands: Int,
+      k: Int, asc: Boolean): Column =
+    Shim.column(
+      CollectRerank(Shim.expression(approx), Shim.expression(id),
+        Shim.expression(exact), cands, k, asc).toAggregateExpression())
 }

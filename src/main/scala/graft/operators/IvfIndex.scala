@@ -61,22 +61,15 @@ object IvfIndex {
       .select(col(vecCol).cast("array<double>"))
       .collect().map(_.getSeq[Double](0).toArray)
 
-  /** Column: distances from `vec` to every centroid (array<double>).
-    * vec_l2 (not l2sq): the sqrt'd value is what DuckDB list_distance
-    * computes, and oracle parity needs the compared doubles to be
-    * bit-identical, not merely order-equivalent (two distinct squared
-    * distances can round to the same sqrt).
+  /** Column: index of the nearest centroid (first-min tie-break), one
+    * codegen'd pass ([[NearestCentroid]]). The distance is vec_l2 (not
+    * l2sq): the sqrt'd value is what DuckDB list_distance computes, and
+    * oracle parity needs the compared doubles to be bit-identical, not
+    * merely order-equivalent (two distinct squared distances can round
+    * to the same sqrt).
     */
-  private def centroidDists(vec: Column, cents: Array[Array[Double]]): Column = {
-    val cb = typedlit(cents.map(_.toSeq).toSeq)
-    transform(cb, c => vec_l2(vec, c))
-  }
-
-  /** Column: index of the nearest centroid (first-min tie-break). */
-  def nearestCluster(vec: Column, cents: Array[Array[Double]]): Column = {
-    val d = centroidDists(vec, cents)
-    (array_position(d, array_min(d)) - 1).cast("int")
-  }
+  def nearestCluster(vec: Column, cents: Array[Array[Double]]): Column =
+    nearest_centroid(vec, cents)
 
   /** Assign every row to its cell. */
   def assign(df: DataFrame, vecCol: String,

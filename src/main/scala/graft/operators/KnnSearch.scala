@@ -174,8 +174,14 @@ object KnnSearch {
 
   /** (query_id, score, id) -> ranked top-k per query. */
   def topKOf(scored: DataFrame, k: Int, asc: Boolean): DataFrame =
+    ranked(scored, collect_topk(col("score"), col("id"), k, asc))
+
+  /** `scored` grouped by query_id and folded by `topk`, an aggregate
+    * returning array<struct<id, score>> best-first, into ranked rows.
+    */
+  private[operators] def ranked(scored: DataFrame, topk: Column): DataFrame =
     scored.groupBy("query_id")
-      .agg(collect_topk(col("score"), col("id"), k, asc).as("topk"))
+      .agg(topk.as("topk"))
       .select(col("query_id"), posexplode(col("topk")))
       .select(
         col("query_id"),

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -9,41 +7,25 @@ import graft.functions._
 
 /** Product quantization — the reference's milvus-ivfpq compression
   * leg. The vector is split into m subspaces; each gets a small
-  * KMeans codebook; a vector is stored as m small codes (8-32x
-  * smaller scan at 100 TB — the quantized scan is the answer to
-  * scan-bound brute force). Search is an ADC scan: the query
-  * precomputes a (m x k*) distance table, each row's approximate
-  * distance is m table lookups summed — no vector math per row.
+  * codebook; a vector is stored as m small codes (8-32x smaller scan
+  * at 100 TB — the quantized scan is the answer to scan-bound brute
+  * force). Search is an ADC scan: the query precomputes an (m x k*)
+  * distance table, each row's approximate distance is m table lookups
+  * summed — no vector math per row — and the best n·rerank candidates
+  * per query are re-ranked by exact distance. [[search]] does both in
+  * one pass over the stored table.
   */
 object PqIndex {
 
-  case class Model(m: Int, subDim: Int, codebook: Array[Array[Array[Double]]])
-
-  def train(base: DataFrame, vecCol: String, m: Int, kStar: Int,
-      seed: Long = 42L): Model = {
-    val dim = base.select(size(col(vecCol))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val subDim = dim / m
-    // codebooks are approximations whose error the exact re-rank
-    // absorbs — train cheaply: bounded sample, random init (skips the
-    // k-means|| init jobs), few iterations. One cached pass
-    // materialises every subspace column for the m fits.
-    val subs = base.limit(4096).select((0 until m).map(s =>
-      array_to_vector(slice(col(vecCol), s * subDim + 1, subDim)
-        .cast("array<double>")).as(s"__f$s")): _*).cache()
-    val codebook = (0 until m).map { s =>
-      new KMeans().setK(kStar).setSeed(seed + s).setFeaturesCol(s"__f$s")
-        .setPredictionCol("__pred").setMaxIter(3).setInitMode("random")
-        .fit(subs).clusterCenters.map(_.toArray)
-    }.toArray
-    subs.unpersist()
-    Model(m, subDim, codebook)
+  case class Model(m: Int, subDim: Int, codebook: Array[Array[Array[Double]]]) {
+    // plans print the model; an array prints as its address
+    override def toString: String =
+      s"Model(m=$m, subDim=$subDim, k*=${codebook.headOption.fold(0)(_.length)})"
   }
 
   /** Deterministic codebooks: subvectors of the kStar vectors with
     * smallest id (sample init, engine-portable — the DuckDB oracle
     * rebuilds the identical codebook as ORDER BY id LIMIT kStar).
-    * The KMeans [[train]] stays as the recall-tuned alternative.
     */
   def sampleModel(base: DataFrame, vecCol: String, m: Int, kStar: Int,
       idCol: String = "id"): Model = {
@@ -97,36 +79,44 @@ object PqIndex {
     })
   }
 
-  /** ADC approximate distance: m table lookups, fused. */
-  def adcDistance(codes: Column, table: Column, m: Int): Column =
-    pq_adc(codes, table)
-
-  /** PQ search with optional exact re-rank of the top rerank*k ADC
-    * candidates (the standard recall recovery).
-    * encoded: (id, vec, codes); queries: (query_id, qvec).
+  /** PQ search with exact re-rank, in one streamed pass:
+    * [[KnnTopKExec]] scores each base row's `codes` against each query's
+    * ADC table (the L2 table for Euclidean, the dot table for
+    * InnerProduct) into per-query heaps of n·rerank candidates per
+    * partition, and scores the kept candidates exactly from their
+    * `vec`; `collect_rerank` then keeps each query's global n·rerank by
+    * (ADC score, id) and ranks them by (exact score, id). The rows equal
+    * the plan of an ADC `collect_topk` over every scored row, a join of
+    * its candidates back to the base and `topKOf` over their exact
+    * scores, for distinct base ids.
+    *
+    * base: (id, vec, codes[, cluster]); queries: (query_id, qvec[,
+    * cluster]), one row per query id — per cell when `keyed`, as the
+    * [[IvfIndex.probedQueries]] worklist has it (the scan fails on a
+    * query id with several rows). `keyed` scores a base row only
+    * against the query rows of its cell; `pairFilter` is evaluated on
+    * each (base row, query row) pair before scoring. Returns (query_id,
+    * rank, neighbor_id, score).
     */
   def search(
-      encoded: DataFrame,
+      base: DataFrame,
       queries: DataFrame,
       model: Model,
-      k: Int,
-      rerank: Int = 10): DataFrame = {
-    val q = queries.withColumn("tbl", distTable(col("qvec"), model))
-    val scored = encoded.crossJoin(broadcast(q))
-      .select(
-        col("query_id"), col("qvec"), col("id"), col("vec"),
-        adcDistance(col("codes"), col("tbl"), model.m).as("adc"))
-    // keep rerank*k ADC candidates per query, then exact re-rank
-    val cands = scored
-      .groupBy("query_id")
-      .agg(collect_topk(col("adc"), col("id"), k * rerank, asc = true).as("topk"))
-      .select(col("query_id"), explode(col("topk.id")).as("id"))
-    // the <= Q x k x rerank candidates broadcast to the encoded scan,
-    // which then never shuffles
-    val exact = encoded.select(col("id"), col("vec"))
-      .join(broadcast(cands), "id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), vec_l2(col("qvec"), col("vec")).as("score"), col("id"))
-    KnnSearch.topKOf(exact, k, asc = true)
+      n: Int,
+      rerank: Int,
+      metric: VecMetric,
+      pairFilter: Option[Column] = None,
+      keyed: Boolean = false): DataFrame = {
+    require(n >= 1 && rerank >= 1,
+      s"PQ search needs n >= 1 and rerank >= 1, got n=$n rerank=$rerank")
+    require(model.codebook.map(_.length).distinct.length <= 1,
+      "every PQ subspace needs the same number of codewords")
+    val cands = n * rerank
+    val scanned = KnnTopK.scan(base, queries, cands, metric, base("id"),
+      base("vec"), queries("query_id"), queries("qvec"), pairFilter,
+      Option.when(keyed)((base("cluster"), queries("cluster"))),
+      Some((base("codes"), model)))
+    KnnSearch.ranked(scanned, collect_rerank(col("adc"), col("id"),
+      col("exact"), cands, n, metric.asc))
   }
 }

@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   *  - `"sq8"`    — int8 affine codes, distance fused over codes
   *                 (IVF_SQ8); Euclidean.
   *  - `"pq"`     — product-quantization ADC scan + exact re-rank
-  *                 (IVF_PQ); Euclidean.
+  *                 (IVF_PQ) in one pass over the stored table;
+  *                 Euclidean.
   *  - `"pq_aniso"` — SCANN-family score-aware codes, MIPS ADC +
-  *                 exact re-rank; InnerProduct.
+  *                 exact re-rank in the same one pass; InnerProduct.
   *
   * Quantization models are trained once in `createIndex` and FROZEN,
   * like the centroids: every mutation batch is encoded against the
@@ -197,7 +198,7 @@ class VectorCollection(
     val base = filterExpr.map(table.filter).getOrElse(table)
     val ranked = if (quantization == "none")
       IvfIndex.searchProbed(base, probed, n, metric)
-    else quantSearch(base, q, n, None, probed)
+    else quantSearch(base, n, None, probed)
     ranked.select("rank", "neighbor_id").collect()
       .sortBy(_.getInt(0)).map(_.getLong(1)).toSeq
   }
@@ -211,7 +212,7 @@ class VectorCollection(
     val base = filterExpr.map(table.filter).getOrElse(table)
     if (quantization == "none")
       IvfIndex.search(base, queries, cents, n, nprobe, metric)
-    else quantSearch(base, queries, n, None,
+    else quantSearch(base, n, None,
       IvfIndex.probedQueries(queries, cents, nprobe))
   }
 
@@ -227,18 +228,19 @@ class VectorCollection(
     if (quantization == "none")
       IvfIndex.search(table, queries, cents, n, nprobe, metric,
         pairFilter = Some(pairFilter))
-    else quantSearch(table, queries, n, Some(pairFilter),
+    else quantSearch(table, n, Some(pairFilter),
       IvfIndex.probedQueries(queries, cents, nprobe))
   }
 
-  /** Quantized in-cell scan: probe cells, score CODES (never the
-    * floats) inside probed cells, and for PQ recover recall with an
-    * exact re-rank over the top n*rerank ADC candidates only. The
-    * re-rank broadcasts those ≤ Q × n × rerank candidate rows to the
-    * stored table's scan, which then never shuffles. `probed` is the
-    * caller's [[IvfIndex.probedQueries]] worklist.
+  /** Quantized in-cell scan: probe cells and score CODES (never the
+    * floats) inside probed cells. For PQ, [[PqIndex.search]] keyed on
+    * the cell recovers recall in the same pass: the n*rerank best ADC
+    * candidates per query are re-ranked by exact distance from their
+    * stored vectors, so the stored table is scanned once (the query
+    * batch needs distinct query ids). `probed` is the caller's
+    * [[IvfIndex.probedQueries]] worklist.
     */
-  private def quantSearch(base: DataFrame, queries: DataFrame, n: Int,
+  private def quantSearch(base: DataFrame, n: Int,
       pairFilter: Option[Column], probed: DataFrame): DataFrame = {
     quantization match {
       case "sq8" =>
@@ -249,25 +251,9 @@ class VectorCollection(
             sq.mins, sq.scales).as("score"),
           col("id"))
         KnnSearch.topKOf(scored, n, asc = true)
-      case _ => // pq | pq_aniso
-        val adcAsc = metric.asc // L2 table ascends, dot table descends
-        val tbl =
-          if (metric == VecMetric.Euclidean) PqIndex.distTable(col("qvec"), pq)
-          else PqIndex.dotTable(col("qvec"), pq)
-        val joined = base.join(broadcast(probed.withColumn("tbl", tbl)), "cluster")
-        val kept = pairFilter.map(joined.filter).getOrElse(joined)
-        val cands = kept.select(col("query_id"), col("id"),
-            graft.functions.pq_adc(col("codes"), col("tbl")).as("adc"))
-          .groupBy("query_id")
-          .agg(graft.functions.collect_topk(col("adc"), col("id"),
-            n * rerank, adcAsc).as("topk"))
-          .select(col("query_id"), explode(col("topk.id")).as("id"))
-        val exact = base.select(col("id"), col("vec"))
-          .join(broadcast(cands), "id")
-          .join(broadcast(queries.select("query_id", "qvec")), "query_id")
-          .select(col("query_id"),
-            metric.score(col("qvec"), col("vec")).as("score"), col("id"))
-        KnnSearch.topKOf(exact, n, metric.asc)
+      case _ => // pq (L2 table) | pq_aniso (dot table)
+        PqIndex.search(base, probed, pq, n, rerank, metric, pairFilter,
+          keyed = true)
     }
   }
 

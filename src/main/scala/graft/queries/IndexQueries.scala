@@ -150,7 +150,10 @@ object IndexQueries {
 
   /** IVF cell pruning + PQ ADC scan + exact re-rank (the milvus-ivfpq
     * shape; sample-init codebooks on raw vectors — recall recovered
-    * by the re-rank, build replicable by the oracle).
+    * by the re-rank, build replicable by the oracle). One pass over
+    * the assigned table: [[PqIndex.search]] keyed on the cell scores
+    * the codes of each probed row and re-ranks its best K*Rerank ADC
+    * candidates per query from their vectors.
     */
   def ivfPq(s: SparkSession, dir: String): DataFrame = {
     val (base, queries) = baseAndQueries(s, dir)
@@ -160,26 +163,9 @@ object IndexQueries {
     }
     val assigned = IvfIndex.assign(base, "vec", cents)
       .withColumn("codes", PqIndex.encode(col("vec"), pq))
-    // the driver-built probe worklist carries qvec; the ADC table is
-    // derived from it, so no further join touches the base scan
-    val probed = IvfIndex.probedQueries(queries, cents, NProbe)
-      .withColumn("tbl", PqIndex.distTable(col("qvec"), pq))
-      .select("query_id", "cluster", "tbl")
-    val adc = assigned
-      .join(broadcast(probed), "cluster")
-      .select(col("query_id"), col("id"), col("vec"),
-        PqIndex.adcDistance(col("codes"), col("tbl"), pq.m).as("adc"))
-    val cands = adc.groupBy("query_id")
-      .agg(graft.functions.collect_topk(col("adc"), col("id"), K * Rerank,
-        asc = true).as("topk"))
-      .select(col("query_id"), explode(col("topk.id")).as("id"))
-    // the <= NQ x K x Rerank candidates broadcast to the base scan, so
-    // the re-rank never shuffles the base
-    val exact = base.join(broadcast(cands), "id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"),
-        graft.functions.vec_l2(col("qvec"), col("vec")).as("score"), col("id"))
-    ranked(KnnSearch.topKOf(exact, K, asc = true))
+    ranked(PqIndex.search(assigned,
+      IvfIndex.probedQueries(queries, cents, NProbe), pq, K, Rerank,
+      VecMetric.Euclidean, keyed = true))
   }
 
   /** q46: SCANN-family anisotropic quantization (the reference's
@@ -191,10 +177,11 @@ object IndexQueries {
     * eta times the orthogonal component. The scan is the MIPS ADC
     * form: per-query dot tables, approximate inner product = m
     * lookups summed, top K*Rerank by approximate dot DESC, exact
-    * max-inner-product rerank. Flat scan (the compressed-scan leg is
-    * the object under test); IVF pruning composes as in q21 — the
-    * composed probed-cell path is served (and recall-gated) by
-    * VectorCollection's quantization="pq_aniso" mode.
+    * max-inner-product rerank — [[PqIndex.search]] unkeyed, one pass.
+    * Flat scan (the compressed-scan leg is the object under test);
+    * IVF pruning composes as in q21 — the composed probed-cell path is
+    * served (and recall-gated) by VectorCollection's
+    * quantization="pq_aniso" mode.
     */
   def scannAniso(s: SparkSession, dir: String): DataFrame = {
     val (base, queries) = baseAndQueries(s, dir)
@@ -203,21 +190,8 @@ object IndexQueries {
     }
     val encoded = base
       .withColumn("codes", PqIndex.encodeAniso(col("vec"), pq, Eta))
-    val q = queries.withColumn("tbl", PqIndex.dotTable(col("qvec"), pq))
-      .select("query_id", "tbl")
-    val adc = encoded.crossJoin(broadcast(q))
-      .select(col("query_id"), col("id"),
-        graft.functions.pq_adc(col("codes"), col("tbl")).as("adc"))
-    val cands = adc.groupBy("query_id")
-      .agg(graft.functions.collect_topk(col("adc"), col("id"), K * Rerank,
-        asc = false).as("topk"))
-      .select(col("query_id"), explode(col("topk.id")).as("id"))
-    val exact = base.join(broadcast(cands), "id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"),
-        graft.functions.vec_dot(col("qvec"), col("vec")).as("score"),
-        col("id"))
-    ranked(KnnSearch.topKOf(exact, K, asc = false))
+    ranked(PqIndex.search(encoded, queries, pq, K, Rerank,
+      VecMetric.InnerProduct))
   }
 
   /** IVF pruning + SQ8 quantized scan. */

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
@@ -10,7 +13,7 @@ import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.vec_l2
+import graft.functions.{NearestCentroid, vec_l2}
 import graft.operators.{IvfIndex, KnnSearch, KnnTopKExec, VecMetric}
 
 /** `IvfIndex.search` (the driver probe worklist + the cell-keyed
@@ -229,5 +232,64 @@ class IvfScanSpec extends AnyFunSuite {
     q20.collect() // AQE settles the final plan on execution
     val q20Nodes = nodesOf(q20.queryExecution.executedPlan)
     assert(q20Nodes.map(_.getClass) == Seq(classOf[KnnTopKExec]), q20Nodes)
+  }
+
+  /** The cell assignment before [[NearestCentroid]]: the distance to
+    * every centroid through a higher-order transform, then the
+    * position of its minimum.
+    */
+  private def transformAssign(vec: Column,
+      cents: Array[Array[Double]]): Column = {
+    val d = transform(typedlit(cents.map(_.toSeq).toSeq), c => vec_l2(vec, c))
+    (array_position(d, array_min(d)) - 1).cast("int")
+  }
+
+  test("cell assignment equals the transform expression it replaced") {
+    // NaN components make NaN distances, which rank above every number
+    val elemN = Gen.frequency(8 -> elem, 1 -> Gen.const(Double.NaN))
+    def vec(d: Int): Gen[Seq[Double]] = for {
+      len <- Gen.frequency(6 -> Gen.const(d), 1 -> Gen.const(math.max(1, d - 1)),
+        1 -> Gen.const(d + 1))
+      v <- Gen.listOfN(len, elemN)
+    } yield v
+    val cases = for {
+      d <- Gen.choose(1, 5)
+      nlist <- Gen.frequency(1 -> Gen.const(0), 8 -> Gen.choose(1, 6))
+      // duplicate centroids tie their distances
+      distinct <- Gen.listOfN(math.max(nlist, 1), vec(d))
+      cents <- Gen.listOfN(nlist, Gen.oneOf(distinct))
+      rows <- Gen.listOfN(20, maybe(Gen.frequency(3 -> vec(d),
+        1 -> Gen.oneOf(distinct))))
+      isFloat <- Gen.oneOf(true, false)
+    } yield (cents.map(_.toArray).toArray, rows, isFloat)
+    def check(cents: Array[Array[Double]], rows: Seq[Option[Seq[Double]]],
+        isFloat: Boolean): Unit = {
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(v => Row(vecValue(v, isFloat))), 3),
+        StructType(Seq(StructField("vec", vecType(isFloat)))))
+      val got = df.select(IvfIndex.nearestCluster(col("vec"), cents),
+        transformAssign(col("vec"), cents)).collect()
+      got.foreach(r => assert(r.get(0) == r.get(1),
+        s"${r.get(0)} != ${r.get(1)} for ${cents.map(_.toSeq).toSeq}"))
+      // the interpreted path agrees with the generated one
+      val e = NearestCentroid(BoundReference(0, vecType(isFloat), true), cents)
+      rows.zip(got).foreach { case (v, r) =>
+        val arr = v.map(xs => new GenericArrayData(
+          if (isFloat) xs.map(x => x.toFloat: Any) else xs.map(x => x: Any)))
+        assert(e.eval(InternalRow(arr.orNull)) == r.get(1))
+      }
+    }
+    val p = Seq(Seq(1.0, -0.3), Seq(0.1, 3.0))
+    check(Array(p(0).toArray, p(0).toArray, p(1).toArray),
+      Seq(Some(p(0)), Some(p(1)), None, Some(Seq(Double.NaN, 0.1)),
+        Some(Seq(0.5)), Some(Seq(0.5, 1.0, 3.0))), isFloat = true)
+    check(Array(Array(Double.NaN, 1.0), p(1).toArray),
+      Seq(Some(p(0)), Some(Seq(Double.NaN, Double.NaN))), isFloat = false)
+    check(Array.empty, Seq(Some(p(0)), None), isFloat = false)
+    val prop = Prop.forAll(cases) { case (c, rows, fl) => check(c, rows, fl); true }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(40)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261023L)), prop)
+    assert(res.passed, Pretty.pretty(res))
   }
 }

@@ -55,7 +55,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
   test("the IVF scan's distance projection stays inside whole-stage codegen") {
     // q20's flat cell scan scores inside the fused KnnTopKExec
     // (IvfScanSpec); the IVF range scan (q52) still scores through the
-    // codegen'd vec_l2 expression
+    // codegen'd vec_l2 expression, after the codegen'd cell assignment
     val fused = SparkEntry.queries("q20_ivf_flat")(spark, sf)
     fused.collect()
     val fusedPlan = fused.queryExecution.executedPlan.toString
@@ -66,14 +66,16 @@ class SqlSurfaceSpec extends AnyFunSuite {
     df.collect() // AQE only finalises (and shows) codegen stages on execution
     val plan = df.queryExecution.executedPlan.toString
     // the scoring vecl2(qvec, vec) — the radius test rides in the
-    // probe join's condition — must carry the *(n) whole-stage-codegen
-    // marker; an interpreted fallback would print it unstarred. (The
-    // cell assignment's vecl2 sits in a higher-order transform, which
-    // never codegens.)
-    val scoreLine = plan.linesIterator.find(_.contains("vecl2(qvec"))
-    assert(scoreLine.isDefined, s"distance kernel not in plan:\n$plan")
-    assert(scoreLine.get.matches(""".*\*\(\d+\) .*"""),
-      s"distance kernel not codegen'd: ${scoreLine.get}")
+    // probe join's condition — and the cell assignment
+    // nearest_centroid(...) must each carry the *(n)
+    // whole-stage-codegen marker; an interpreted fallback would print
+    // them unstarred
+    for (expr <- Seq("vecl2(qvec", "nearest_centroid(")) {
+      val line = plan.linesIterator.find(_.contains(expr))
+      assert(line.isDefined, s"$expr not in plan:\n$plan")
+      assert(line.get.matches(""".*\*\(\d+\) .*"""),
+        s"$expr not codegen'd: ${line.get}")
+    }
   }
 
   test("SQL users can run a full knn query over parquet with vec functions") {
