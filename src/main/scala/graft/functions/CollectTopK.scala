@@ -161,10 +161,8 @@ final class TopKHeap(k: Int, asc: Boolean) {
   /** Elements currently held (≤ k) — the merge fan-in unit. */
   def size: Int = n
 
-  /** a strictly worse than b? (worse = later in final ranking) */
   @inline private def worse(s1: Double, i1: Long, s2: Double, i2: Long): Boolean =
-    if (asc) s1 > s2 || (s1 == s2 && i1 > i2)
-    else s1 < s2 || (s1 == s2 && i1 > i2)
+    TopKHeap.worse(asc, s1, i1, s2, i2)
 
   /** Offer (s, id); true when the heap kept it. */
   def insert(s: Double, id: Long): Boolean = {
@@ -208,13 +206,9 @@ final class TopKHeap(k: Int, asc: Boolean) {
     while (i < other.n) { insert(other.scores(i), other.ids(i)); i += 1 }
   }
 
-  def sortedBestFirst: Array[(Double, Long)] = {
-    val out = Array.tabulate(n)(i => (scores(i), ids(i)))
-    val ord: Ordering[(Double, Long)] =
-      if (asc) Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-      else Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.Long)
-    out.sorted(ord)
-  }
+  def sortedBestFirst: Array[(Double, Long)] =
+    Array.tabulate(n)(i => (scores(i), ids(i)))
+      .sortWith((a, b) => TopKHeap.worse(asc, b._1, b._2, a._1, a._2))
 
   def toBytes: Array[Byte] = {
     val bb = ByteBuffer.allocate(4 + n * 16)
@@ -226,6 +220,18 @@ final class TopKHeap(k: Int, asc: Boolean) {
 }
 
 object TopKHeap {
+  /** Is (s1, i1) strictly worse than (s2, i2), i.e. later in the final
+    * ranking? Scores compare by their total order (NaN above every
+    * number, -0.0 below 0.0) and ties break toward the smaller id: the
+    * order a heap keeps by and [[TopKHeap.sortedBestFirst]] sorts by,
+    * so a heap keeps the same set whatever order its rows arrive in.
+    */
+  @inline def worse(asc: Boolean, s1: Double, i1: Long, s2: Double,
+      i2: Long): Boolean = {
+    val c = java.lang.Double.compare(s1, s2)
+    (if (asc) c > 0 else c < 0) || (c == 0 && i1 > i2)
+  }
+
   def fromBytes(bytes: Array[Byte], k: Int, asc: Boolean): TopKHeap = {
     val bb = ByteBuffer.wrap(bytes)
     val m = bb.getInt
@@ -358,10 +364,8 @@ final class CandidateHeap(k: Int, asc: Boolean) {
   def id(i: Int): Long = ids(i)
   def payload(i: Int): AnyRef = payloads(i)
 
-  /** a strictly worse than b? (worse = later in final ranking) */
   @inline private def worse(s1: Double, i1: Long, s2: Double, i2: Long): Boolean =
-    if (asc) s1 > s2 || (s1 == s2 && i1 > i2)
-    else s1 < s2 || (s1 == s2 && i1 > i2)
+    TopKHeap.worse(asc, s1, i1, s2, i2)
 
   /** Would the heap keep (s, id)? */
   def admits(s: Double, id: Long): Boolean =

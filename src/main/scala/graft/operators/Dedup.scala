@@ -261,30 +261,6 @@ object Dedup {
       .select("doc_a", "doc_b").distinct()
   }
 
-  /** d05: embedding-cosine near-dup pairs, EXACT, via a block-grid
-    * self-join (the distributed triangle join): rows are hashed into
-    * `nb` blocks, each unordered block pair (i <= j) is one equi-join
-    * key, each row is emitted once per pair containing its block, and
-    * the cosine is verified inside the join. Properties at 100 TB:
-    *
-    *  - No CartesianProduct / BroadcastNestedLoopJoin node: the plan is
-    *    a shuffled equi-join on (bi, bj), so work spreads evenly over
-    *    nb*(nb+1)/2 keys and per-task memory is bounded by two blocks
-    *    (`blockRows` vectors each), independent of N.
-    *  - Shuffle volume is N*(nb+1) vector copies — the communication
-    *    floor of an exact all-pairs join; pick blockRows to trade
-    *    shuffle against per-task compute (B^2 pair evaluations).
-    *  - The O(N^2) distance evaluations are INHERENT to exactness at a
-    *    low threshold. Measured on this corpus (sf0.1): qualifying
-    *    pairs sit at cos 0.4501 vs tau 0.45 with a continuum below —
-    *    zero margin — so RHP sign-band bucketing cannot reach recall
-    *    1.0, and at a 63° threshold per-band collision probability is
-    *    so high that LSH candidate volume exceeds N^2 (2-bit bands x
-    *    24 tables ≈ 6*N^2 candidates). LSH is the right tool only for
-    *    high-tau near-dup regimes; for the exact-pairs semantics the
-    *    reference implies (distance.py:32-47) this blocked join is the
-    *    scale path.
-    */
   /** Approximate embedding near-dup pairs via RHP sign-band bucketing
     * — the sub-quadratic path for the HIGH-tau regime (true near-dups,
     * tau >= ~0.9), where [[embeddingNearDups]]' exact O(N^2) scan is
@@ -621,25 +597,38 @@ object Dedup {
         col("n_members"))
   }
 
+  /** d05: embedding-cosine near-dup pairs, EXACT, via a block-grid
+    * self-join (the distributed triangle join): rows are hashed into
+    * `nb` blocks, each unordered block pair (i <= j) is one equi-join
+    * key, each row is emitted once per pair containing its block, and
+    * the cosine is verified inside the join. Properties at 100 TB:
+    *
+    *  - No CartesianProduct / BroadcastNestedLoopJoin node: the plan is
+    *    a shuffled equi-join on (bi, bj), so work spreads evenly over
+    *    nb*(nb+1)/2 keys and per-task memory is bounded by two blocks
+    *    (`blockRows` vectors each), independent of N.
+    *  - Shuffle volume is N*(nb+1) vector copies — the communication
+    *    floor of an exact all-pairs join; pick blockRows to trade
+    *    shuffle against per-task compute (B^2 pair evaluations).
+    *  - The O(N^2) distance evaluations are INHERENT to exactness at a
+    *    low threshold. Measured on this corpus (sf0.1): qualifying
+    *    pairs sit at cos 0.4501 vs tau 0.45 with a continuum below —
+    *    zero margin — so RHP sign-band bucketing cannot reach recall
+    *    1.0, and at a 63° threshold per-band collision probability is
+    *    so high that LSH candidate volume exceeds N^2 (2-bit bands x
+    *    24 tables ≈ 6*N^2 candidates). LSH is the right tool only for
+    *    high-tau near-dup regimes; for the exact-pairs semantics the
+    *    reference implies (distance.py:32-47) this blocked join is the
+    *    scale path.
+    */
   def embeddingNearDups(emb: DataFrame, tau: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       blockRows: Int = 8192): DataFrame = {
     val p = emb.sparkSession.sessionState.conf.numShufflePartitions
-    // grid size from plan STATISTICS, never a count() job (the same
-    // fix KnnSearch.bruteForceBlocked got: block counts only shape
-    // the grid — the pair set is identical for any grid — so an
-    // estimate is safe and a blocking pre-scan is not). When stats
-    // carry no rowCount, size by bytes at ~1 KiB per embedding row.
-    val stats = emb.queryExecution.optimizedPlan.stats
-    val byRows = stats.rowCount
-      .map(n => ((n.toLong + blockRows - 1) / blockRows))
-    val byBytes =
-      (stats.sizeInBytes / (blockRows.toLong * 1024L)).min(1 << 24)
-    // enough blocks that (a) blocks fit in a task and (b) the grid has
-    // at least ~2*P keys of parallelism even for small inputs
-    val nb = math.max(
-      byRows.getOrElse(byBytes.toLong).min(1 << 24).toInt,
-      math.ceil(math.sqrt(2.0 * p)).toInt).max(1)
+    // the pair set is identical for any grid; at least ~2*P keys of
+    // parallelism even for small inputs
+    val nb = KnnSearch.gridBlocks(emb, blockRows,
+      math.ceil(math.sqrt(2.0 * p)).toInt)
     val e = emb.select(col(idCol).as("id"), col(vecCol).as("v"),
       pmod(xxhash64(col(idCol)), lit(nb)).cast("int").as("blk"))
     // row in block b joins as the "a" side for keys (b, j>=b) and as

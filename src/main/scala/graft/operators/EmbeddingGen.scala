@@ -51,16 +51,4 @@ object EmbeddingGen {
     val nrm = sqrt(vec_dot(vec, vec))
     transform(vec, x => x.cast("double") / nrm)
   }
-
-  /** End-to-end reference workflow: embed -> index(flat) -> query.
-    * Query docs (id < nq) search the corpus by cosine over generated
-    * embeddings.
-    */
-  def embedAndSearch(docs: DataFrame, nq: Int, k: Int): DataFrame = {
-    val emb = tfidf(docs)
-    val base = emb.select(col("doc_id").as("id"), col("embedding").as("vec"))
-    val queries = emb.filter(col("doc_id") < nq)
-      .select(col("doc_id").as("query_id"), col("embedding").as("qvec"))
-    KnnSearch.bruteForce(base, queries, k, VecMetric.Cosine)
-  }
 }

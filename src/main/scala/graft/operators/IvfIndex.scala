@@ -81,8 +81,8 @@ object IvfIndex {
     * index-ordered sum) ranked by (distance, cell) as collect_topk
     * ranks. Several vectors share one ranking over all their distances,
     * as the rows of one query id do. The one probe routine: the batch
-    * worklists below and the single-vector serving path pick their
-    * cells here.
+    * worklists below, the single-vector serving path and each level of
+    * [[IvfTree]]'s descent pick their cells here.
     */
   def nearestCells(vecs: Seq[Array[Double]], cents: Array[Array[Double]],
       nprobe: Int): Array[Int] = {
@@ -95,11 +95,13 @@ object IvfIndex {
 
   /** The query batch collected to the driver — Q rows, the batch the
     * cell scan broadcasts anyway — as (query id, its rows, their cells)
-    * in first-seen order, Q × nlist × dim multiply-adds. A row with a
-    * null id probes nothing; a null vector adds no distances.
+    * in first-seen order, the cells picked by `probe` from the id's
+    * vectors (Q × nlist × dim multiply-adds for [[nearestCells]]). A
+    * row with a null id probes nothing; a null vector adds no distances.
     */
-  private def probeGroups(queries: DataFrame, cents: Array[Array[Double]],
-      nprobe: Int): Seq[(Any, Seq[Row], Array[Int])] = {
+  private def probeGroups(queries: DataFrame,
+      probe: Seq[Array[Double]] => Array[Int])
+      : Seq[(Any, Seq[Row], Array[Int])] = {
     val qi = queries.schema.fieldIndex("query_id")
     val vi = queries.schema.fieldIndex("qvec")
     val rows = queries.collect().toSeq.filterNot(_.isNullAt(qi))
@@ -109,7 +111,7 @@ object IvfIndex {
       val vecs = group.filterNot(_.isNullAt(vi)).map(_.getSeq[Any](vi)
         .map { case x: java.lang.Number => x.doubleValue; case _ => 0.0 }
         .toArray)
-      (id, group, nearestCells(vecs, cents, nprobe))
+      (id, group, probe(vecs))
     }
   }
 
@@ -125,7 +127,7 @@ object IvfIndex {
     val schema = StructType(Seq(queries.schema("query_id"),
       StructField("cluster", IntegerType, nullable = false),
       StructField("rn", IntegerType, nullable = false)))
-    val rows = probeGroups(queries, cents, nprobe).flatMap {
+    val rows = probeGroups(queries, nearestCells(_, cents, nprobe)).flatMap {
       case (id, _, cells) => cells.indices.map(r => Row(id, cells(r), r + 1))
     }
     queries.sparkSession.createDataFrame(rows.asJava, schema)
@@ -142,13 +144,21 @@ object IvfIndex {
   def probedQueries(
       queries: DataFrame,
       cents: Array[Array[Double]],
-      nprobe: Int): DataFrame = {
+      nprobe: Int): DataFrame =
+    probedQueries(queries, nearestCells(_, cents, nprobe))
+
+  /** [[probedQueries]] with the cells of each query id picked by
+    * `probe` from the id's vectors.
+    */
+  def probedQueries(
+      queries: DataFrame,
+      probe: Seq[Array[Double]] => Array[Int]): DataFrame = {
     val qi = queries.schema.fieldIndex("query_id")
     val rest = queries.schema.fields.indices.filter(_ != qi)
     val schema = StructType(queries.schema("query_id") +:
       StructField("cluster", IntegerType, nullable = false) +:
       rest.map(queries.schema.fields(_)))
-    val rows = probeGroups(queries, cents, nprobe).flatMap {
+    val rows = probeGroups(queries, probe).flatMap {
       case (id, group, cells) => for (r <- group; c <- cells)
         yield Row.fromSeq(id +: c +: rest.map(r.get))
     }
@@ -223,13 +233,19 @@ object IvfIndex {
       nprobe: Int,
       metric: VecMetric): DataFrame = {
     val probed = probedQueries(queries, cents, nprobe)
-    // the distinct probed cells are at most Q x nprobe ints — safe to
-    // collect; isin() on the partition column prunes directories
+    searchProbed(probedCells(spark, indexPath, probed), probed, k, metric)
+  }
+
+  /** The cell-partitioned index persisted at `path`, read only in the
+    * cells of the `probed` worklist: isin() on the partition column
+    * prunes directories. The distinct probed cells are at most
+    * Q × nprobe ints.
+    */
+  def probedCells(spark: org.apache.spark.sql.SparkSession, path: String,
+      probed: DataFrame): DataFrame = {
     val cells = probed.select("cluster").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val scan = graft.Tables.parquetAt(spark, indexPath)
-      .filter(col("cluster").isin(cells: _*))
-    searchProbed(scan, probed, k, metric)
+    graft.Tables.parquetAt(spark, path).filter(col("cluster").isin(cells: _*))
   }
 
   /** IVF search: exact distance inside each query's probed cells.
@@ -271,4 +287,21 @@ object IvfIndex {
       assigned("id"), assigned("vec"), probed("query_id"), probed("qvec"),
       pairFilter, Some((assigned("cluster"), probed("cluster")))),
       k, metric.asc)
+
+  /** Range search inside the probed cells: every (query_id, score,
+    * neighbor_id) of a `probed` row and a base row of its cell with
+    * score <= `radius` (an ascending metric). No aggregate: the reduce
+    * is a scan-local filter, so nprobe == nlist is the exact range
+    * search.
+    */
+  def rangeProbed(
+      assigned: DataFrame,
+      probed: DataFrame,
+      radius: Double,
+      metric: VecMetric): DataFrame =
+    assigned.join(broadcast(probed), "cluster")
+      .select(col("query_id"),
+        metric.score(col("qvec"), col("vec")).as("score"),
+        col("id").as("neighbor_id"))
+      .filter(col("score") <= radius)
 }

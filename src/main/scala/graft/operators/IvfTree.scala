@@ -22,10 +22,10 @@ import graft.functions._
   * assignments are pure column projections against broadcast
   * centroid literals — no shuffle in the build beyond the write.
   *
-  * Search descends: rank L1 cells by query distance, keep p1; rank
-  * the surviving cells' sub-centroids, keep p2 leaves; scan only
-  * those leaves. The scanned fraction is ~(p2 / (l1 * sub)) with
-  * two fanout-sized rankings as the only overhead per query.
+  * Search descends on the driver: rank L1 cells by query distance,
+  * keep p1; rank the surviving cells' sub-centroids, keep p2 leaves;
+  * scan only those leaves. The scanned fraction is ~(p2 / (l1 * sub))
+  * with two fanout-sized rankings as the only overhead per query.
   */
 object IvfTree {
 
@@ -34,7 +34,12 @@ object IvfTree {
     * `sub` members).
     */
   final case class Model(l1: Array[Array[Double]],
-      sub: Array[Array[Array[Double]]])
+      sub: Array[Array[Array[Double]]]) {
+    /** The widest cell's sub-centroid count: leaf (l1, l2) has id
+      * l1 · fanout + l2.
+      */
+    val fanout: Int = sub.map(_.length).foldLeft(1)(math.max)
+  }
 
   /** Deterministic sample-init build: L1 = first `l1` vectors by id;
     * each cell's sub-centroids = its first `sub` member vectors by id.
@@ -88,50 +93,31 @@ object IvfTree {
     a1.withColumn("l2", nearestSub(col(vecCol), col("l1"), m))
   }
 
-  /** Per-query probe leaves: top-p1 L1 cells by centroid distance,
-    * then top-p2 of their sub-centroids, ties (dist, l1, l2).
+  /** The `p2` leaves nearest to `vecs`, nearest first, as leaf ids
+    * l1 · fanout + l2: [[IvfIndex.nearestCells]] picks the `p1` nearest
+    * L1 centroids, then ranks those cells' sub-centroids by the same L2
+    * into one heap, so ties break by (distance, l1, l2). The rows of one
+    * query id share both rankings, and an L1 cell picked twice (by two
+    * of its rows) offers its sub-centroids twice.
     */
-  def probes(queries: DataFrame, m: Model, p1: Int, p2: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val maxSub = m.sub.map(_.length).max.max(1)
-    val l1Df = m.l1.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toSeq.toDF("l1", "cv")
-    val subDf = m.sub.zipWithIndex.flatMap { case (cs, i) =>
-      cs.zipWithIndex.map { case (c, j) => (i, j, c.toSeq) }
-    }.toSeq.toDF("l1", "l2", "cv")
-    val top1 = KnnSearch.topKOf(
-      queries.crossJoin(broadcast(l1Df))
-        .select(col("query_id"), vec_l2(col("qvec"), col("cv")).as("score"),
-          col("l1").cast("long").as("id")),
-      p1, asc = true)
-      .select(col("query_id"), col("neighbor_id").cast("int").as("l1"))
-    // encode (l1, l2) as one id so the top-k tie-break is (dist, l1, l2)
-    val top2 = KnnSearch.topKOf(
-      top1.join(broadcast(subDf), "l1")
-        .join(queries, "query_id")
-        .select(col("query_id"), vec_l2(col("qvec"), col("cv")).as("score"),
-          (col("l1") * maxSub + col("l2")).cast("long").as("id")),
-      p2, asc = true)
-    top2.select(col("query_id"),
-      (col("neighbor_id") / maxSub).cast("int").as("l1"),
-      (col("neighbor_id") % maxSub).cast("int").as("l2"))
+  def leaves(vecs: Seq[Array[Double]], m: Model, p1: Int,
+      p2: Int): Array[Int] = {
+    val heap = new TopKHeap(p2, asc = true)
+    val l2 = PairKernel(VecMetric.Euclidean)
+    for (c <- IvfIndex.nearestCells(vecs, m.l1, p1);
+         (s, j) <- m.sub(c).zipWithIndex; v <- vecs)
+      heap.insert(l2.one(v, s, math.min(v.length, s.length)),
+        c * m.fanout + j)
+    heap.sortedBestFirst.map(_._2.toInt)
   }
 
-  /** Tree search: probe worklist (Q x p2 leaves, broadcast) joined
-    * against the leaf-assigned table, exact top-k inside the probed
-    * leaves.
+  /** Tree search: the driver descent ([[leaves]]) picks each query's
+    * leaves, and [[IvfIndex.searchProbed]] keyed on the leaf id scores
+    * the probed leaves in one streamed pass.
     */
   def search(assigned: DataFrame, queries: DataFrame, m: Model,
-      k: Int, p1: Int, p2: Int, metric: VecMetric): DataFrame = {
-    val probed = probes(queries, m, p1, p2)
-      .join(queries, "query_id")
-      .localCheckpoint(true)
-    val scored = assigned
-      .join(broadcast(probed), Seq("l1", "l2"))
-      .select(col("query_id"),
-        metric.score(col("qvec"), col("vec")).as("score"),
-        col("id"))
-    KnnSearch.topKOf(scored, k, metric.asc)
-  }
+      k: Int, p1: Int, p2: Int, metric: VecMetric): DataFrame =
+    IvfIndex.searchProbed(
+      assigned.withColumn("cluster", col("l1") * m.fanout + col("l2")),
+      IvfIndex.probedQueries(queries, leaves(_, m, p1, p2)), k, metric)
 }

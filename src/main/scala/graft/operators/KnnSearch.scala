@@ -137,25 +137,9 @@ object KnnSearch {
     val filtered = preFilter.map(base.filter).getOrElse(base)
     val p = base.sparkSession.sessionState.conf.numShufflePartitions
     val minBlocks = math.ceil(math.sqrt(p.toDouble)).toInt
-    // Grid size from caller-supplied cardinality or plan STATISTICS —
-    // never a count() job (at 100 TB two extra full scans per query
-    // batch). Block counts shape the grid only; the scored set is
-    // identical for any grid, so an estimate is safe. When the stats
-    // carry no rowCount (no CBO), size blocks by bytes at the ~1 KiB/
-    // row of a 128-dim float64 vector — only the order matters.
-    def nBlocks(df: DataFrame, expected: Option[Long]): Int = {
-      val stats = df.queryExecution.optimizedPlan.stats
-      val byRows = expected.orElse(stats.rowCount.map(_.toLong))
-        .map(n => (n + blockRows - 1) / blockRows)
-      // clamp before toInt: an unknown-size relation reports
-      // sizeInBytes = Long.MaxValue and must not wrap negative
-      val byBytes =
-        (stats.sizeInBytes / (blockRows.toLong * 1024L)).min(1 << 24)
-      math.max(byRows.getOrElse(byBytes.toLong).min(1 << 24).toInt,
-        minBlocks).max(1)
-    }
-    val nbQ = nBlocks(queries, queryRows)
-    val nbB = nBlocks(filtered, baseRows)
+    // the scored set is identical for any grid
+    val nbQ = gridBlocks(queries, blockRows, minBlocks, queryRows)
+    val nbB = gridBlocks(filtered, blockRows, minBlocks, baseRows)
     val qx = queries.select(col(qidCol).as("query_id"),
       col(qvecCol).as("qvec"),
       pmod(xxhash64(col(qidCol)), lit(nbQ)).cast("int").as("qb"),
@@ -170,6 +154,27 @@ object KnnSearch {
         metric.score(col("qvec"), col("vec")).as("score"),
         col("id"))
     topKOf(scored, k, metric.asc)
+  }
+
+  /** Blocks of `blockRows` rows in a block-grid join over `df`, at
+    * least `floor`: from the caller's row count `expected`, else the
+    * plan STATISTICS — never a count() job (at 100 TB a full scan per
+    * call). Block counts shape the grid only, so an estimate is safe.
+    * When the stats carry no rowCount (no CBO), blocks are sized by
+    * bytes at the ~1 KiB/row of a 128-dim float64 vector — only the
+    * order matters.
+    */
+  private[operators] def gridBlocks(df: DataFrame, blockRows: Int,
+      floor: Int, expected: Option[Long] = None): Int = {
+    val stats = df.queryExecution.optimizedPlan.stats
+    val byRows = expected.orElse(stats.rowCount.map(_.toLong))
+      .map(n => (n + blockRows - 1) / blockRows)
+    // clamp before toInt: an unknown-size relation reports
+    // sizeInBytes = Long.MaxValue and must not wrap negative
+    val byBytes =
+      (stats.sizeInBytes / (blockRows.toLong * 1024L)).min(1 << 24)
+    math.max(byRows.getOrElse(byBytes.toLong).min(1 << 24).toInt, floor)
+      .max(1)
   }
 
   /** (query_id, score, id) -> ranked top-k per query. */

@@ -171,12 +171,6 @@ object Multimodal {
       }.toDF("doc_id", "out_w", "out_h", "r_sum", "g_sum", "b_sum")
   }
 
-  /** m03 entry: render payloads (column-pruned doc_id scan), decode
-    * + resize for real.
-    */
-  def resizePipeline(docs: DataFrame): DataFrame =
-    resizeImageStats(pngPayloads(docs))
-
   val BatchSize = 64
   val FrameStride = 2
   val MaxFrames = 8

@@ -685,8 +685,8 @@ object NnDescent {
       }
     }
 
-    // per-src top-k over a candidate slice, the collect_topk order:
-    // (score asc, id asc); srcs/dsts without vectors drop; duplicate
+    // per-src top-k over a candidate slice, the collect_topk order
+    // (TopKHeap.worse, ascending); srcs/dsts without vectors drop; duplicate
     // dsts pre-deduped by the caller (sort + skip-equal)
     def topInto(sv: Array[Float], dsts: Array[Long], lo: Int, hi: Int,
         kk: Int, ss: Array[Double], dd: Array[Long]): Int = {
@@ -701,11 +701,11 @@ object NnDescent {
           val dv = vecOf(d)
           if (dv != null) {
             val s = m.localScore(sv, dv)
-            if (cnt < kk || s < ss(cnt - 1) ||
-                (s == ss(cnt - 1) && d < dd(cnt - 1))) {
+            if (cnt < kk ||
+                TopKHeap.worse(true, ss(cnt - 1), dd(cnt - 1), s, d)) {
               var p = if (cnt < kk) cnt else kk - 1
-              while (p > 0 && (s < ss(p - 1) ||
-                  (s == ss(p - 1) && d < dd(p - 1)))) {
+              while (p > 0 &&
+                  TopKHeap.worse(true, ss(p - 1), dd(p - 1), s, d)) {
                 ss(p) = ss(p - 1); dd(p) = dd(p - 1); p -= 1
               }
               ss(p) = s; dd(p) = d

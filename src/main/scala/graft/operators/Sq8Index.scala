@@ -44,26 +44,20 @@ object Sq8Index {
           element_at(scales, i + 1)).cast("int"))))
   }
 
-  /** Column: decoded array<double> from codes. */
-  def decode(codes: Column, model: Model): Column = {
-    val mins = typedlit(model.mins.toSeq)
-    val scales = typedlit(model.scales.toSeq)
-    transform(codes, (c, i) =>
-      element_at(mins, i + 1) + c.cast("double") * element_at(scales, i + 1))
-  }
-
-  /** Search on decoded codes (exact math over quantized values). */
-  def search(
-      encoded: DataFrame, // (id, codes)
-      queries: DataFrame, // (query_id, qvec)
-      model: Model,
-      k: Int,
-      metric: VecMetric): DataFrame = {
-    val scored = encoded.crossJoin(broadcast(queries))
-      .select(
-        col("query_id"),
-        metric.score(col("qvec"), decode(col("codes"), model)).as("score"),
-        col("id"))
-    KnnSearch.topKOf(scored, k, metric.asc)
+  /** IVF-SQ probed scan: each `probed` row ([[IvfIndex.probedQueries]])
+    * meets the base rows of its cell, kept by `pairFilter`, and ranks
+    * them by the L2 fused over their codes — `codes` (array<int>, SQ8)
+    * or, with `packed`, `words` (Sq4Pack's SQ4 longs) — into the top k
+    * per query.
+    */
+  def searchProbed(base: DataFrame, probed: DataFrame, model: Model,
+      k: Int, packed: Boolean = false,
+      pairFilter: Option[Column] = None): DataFrame = {
+    val joined = base.join(broadcast(probed), "cluster")
+    val score =
+      if (packed) sq4_l2(col("qvec"), col("words"), model.mins, model.scales)
+      else sq8_l2(col("qvec"), col("codes"), model.mins, model.scales)
+    KnnSearch.topKOf(pairFilter.fold(joined)(joined.filter)
+      .select(col("query_id"), score.as("score"), col("id")), k, asc = true)
   }
 }

@@ -80,9 +80,9 @@ class VectorCollection(
     * above the bound or for quantized modes (their scans stay
     * distributed) — so a corpus-scale collection never pays or holds
     * it. Serving from it is bit-identical to the distributed probed
-    * scan: same probe cells ([[IvfIndex.nearestCells]]), localScore
-    * twins, (score, id) top-k ties — spec-gated against a 1-row
-    * batchQuery.
+    * scan: same probe cells ([[IvfIndex.nearestCells]]), the scan's
+    * pair kernel and (score, id) top-k heap — spec-gated against a
+    * 1-row batchQuery.
     */
   private val ServeLocalRows = 1L << 16
   private var localCells:
@@ -173,6 +173,7 @@ class VectorCollection(
   def query(v: Array[Float], n: Int,
       filterExpr: Option[Column] = None): Seq[Long] = {
     requireIndex()
+    require(n >= 1, s"n must be >= 1, got $n")
     import spark.implicits._
     // driver-resident serve (see [[localServe]]): probe cells with
     // the same driver math, scan them in process — ZERO Spark jobs
@@ -180,17 +181,18 @@ class VectorCollection(
     // distributed scan carries, so a filtered query keeps that path.
     if (filterExpr.isEmpty) localServe() match {
       case Some(cells) =>
-        val probeIdx = IvfIndex.nearestCells(Seq(v.map(_.toDouble)), cents,
-          nprobe)
-        val ord: Ordering[(Double, Long)] =
-          if (metric.asc) Ordering.Tuple2(Ordering.Double.TotalOrdering,
-            Ordering.Long)
-          else Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse,
-            Ordering.Long)
-        return probeIdx.iterator
-          .flatMap(ci => Option(cells.get(ci)).iterator.flatten)
-          .map { case (id, vec) => (metric.localScore(v, vec), id) }
-          .toArray.sorted(ord).take(n).map(_._2).toSeq
+        val q = v.map(_.toDouble)
+        val kernel = PairKernel(metric)
+        val heap = new graft.functions.TopKHeap(n, metric.asc)
+        var buf = new Array[Double](q.length)
+        for (ci <- IvfIndex.nearestCells(Seq(q), cents, nprobe);
+             (id, vec) <- Option(cells.get(ci)).iterator.flatten) {
+          if (buf.length < vec.length) buf = new Array[Double](vec.length)
+          var i = 0
+          while (i < vec.length) { buf(i) = vec(i).toDouble; i += 1 }
+          heap.insert(kernel.one(q, buf, math.min(q.length, vec.length)), id)
+        }
+        return heap.sortedBestFirst.map(_._2).toSeq
       case None => ()
     }
     val q = Seq((0L, v)).toDF("query_id", "qvec")
@@ -244,13 +246,7 @@ class VectorCollection(
       pairFilter: Option[Column], probed: DataFrame): DataFrame = {
     quantization match {
       case "sq8" =>
-        val joined = base.join(broadcast(probed), "cluster")
-        val kept = pairFilter.map(joined.filter).getOrElse(joined)
-        val scored = kept.select(col("query_id"),
-          graft.functions.sq8_l2(col("qvec"), col("codes"),
-            sq.mins, sq.scales).as("score"),
-          col("id"))
-        KnnSearch.topKOf(scored, n, asc = true)
+        Sq8Index.searchProbed(base, probed, sq, n, pairFilter = pairFilter)
       case _ => // pq (L2 table) | pq_aniso (dot table)
         PqIndex.search(base, probed, pq, n, rerank, metric, pairFilter,
           keyed = true)
@@ -290,12 +286,8 @@ class VectorCollection(
   def rangeQuery(queries: DataFrame, radius: Double): DataFrame = {
     requireIndex()
     require(metric.asc, "rangeQuery expects a distance (ascending) metric")
-    val probed = IvfIndex.probedQueries(queries, cents, nprobe)
-    table.join(broadcast(probed), "cluster")
-      .select(col("query_id"),
-        metric.score(col("qvec"), col("vec")).as("score"),
-        col("id").as("neighbor_id"))
-      .filter(col("score") <= radius)
+    IvfIndex.rangeProbed(table,
+      IvfIndex.probedQueries(queries, cents, nprobe), radius, metric)
   }
 
   /** Paginated search over the collection (q48's operator served

@@ -283,6 +283,19 @@ object AnalyticsQueries {
     * merged post-state's row count and id checksum ride along in
     * every row and are asserted exactly in AnalyticsSpec.
     */
+  /** A non-empty wall series in ns as (p50, p90, p95, p99, p99.9, max)
+    * in whole µs: nearest-rank percentiles truncated, the maximum
+    * rounded up, so the series' mean — what its ops-per-second figure
+    * inverts — never exceeds max_us.
+    */
+  def latencyUs(ns: Array[Long]): (Long, Long, Long, Long, Long, Long) = {
+    val s = ns.sorted
+    def pct(q: Double): Long =
+      s(math.min(s.length - 1, math.ceil(q * s.length).toInt - 1).max(0)) / 1000
+    (pct(0.5), pct(0.9), pct(0.95), pct(0.99), pct(0.999),
+      (s.last + 999) / 1000)
+  }
+
   def mutationLatency(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val nOps = 32
@@ -312,14 +325,10 @@ object AnalyticsQueries {
     val state = MutationLog.replay(base, logDir)
       .agg(count(lit(1)).as("n"), sum("id").as("ck")).head()
     val (finalRows, idChecksum) = (state.getLong(0), state.getLong(1))
-    def pct(ns: Array[Long], q: Double): Long = {
-      val s = ns.sorted
-      s(math.min(s.length - 1, math.ceil(q * s.length).toInt - 1).max(0)) / 1000
-    }
     Seq(("delete", deleteNs), ("insert", insertNs), ("update", updateNs))
       .map { case (op, ns) =>
-        (op, ns.length.toLong, pct(ns, 0.5), pct(ns, 0.9), pct(ns, 0.95),
-          pct(ns, 0.99), pct(ns, 0.999), ns.max / 1000,
+        val (p50, p90, p95, p99, p999, mx) = latencyUs(ns)
+        (op, ns.length.toLong, p50, p90, p95, p99, p999, mx,
           ns.length.toDouble * 1e9 / ns.sum, finalRows, idChecksum)
       }
       .toDF("op", "n_ops", "p50_us", "p90_us", "p95_us", "p99_us",
@@ -366,16 +375,10 @@ object AnalyticsQueries {
       ck += res.sum
       w
     }
-    def pct(ns: Array[Long], q: Double): Long = {
-      val srt = ns.sorted
-      srt(math.min(srt.length - 1,
-        math.ceil(q * srt.length).toInt - 1).max(0)) / 1000
-    }
+    val (p50, p90, p95, p99, p999, mx) = latencyUs(walls)
     // qps = the reference's queries_per_second metric
     // (plotting/metrics.py:51): n_ops over the summed serving wall
-    Seq(("single_query", walls.length.toLong, pct(walls, 0.5),
-      pct(walls, 0.9), pct(walls, 0.95), pct(walls, 0.99),
-      pct(walls, 0.999), walls.max / 1000,
+    Seq(("single_query", walls.length.toLong, p50, p90, p95, p99, p999, mx,
       walls.length.toDouble * 1e9 / walls.sum, hits, ck))
       .toDF("op", "n_ops", "p50_us", "p90_us", "p95_us", "p99_us",
         "p999_us", "max_us", "qps", "total_hits", "id_checksum")

@@ -111,12 +111,9 @@ object IndexQueries {
     val (base, queries) = baseAndQueries(s, dir)
     val cents = sampleCents(s, dir)
     val assigned = IvfIndex.assign(base, "vec", cents)
-    val probed = IvfIndex.probedQueries(queries, cents, NProbe)
-    assigned.join(broadcast(probed), "cluster")
-      .select(col("query_id"),
-        VecMetric.Euclidean.score(col("qvec"), col("vec")).as("score"),
-        col("id").as("neighbor_id"))
-      .filter(col("score") <= RangeRadius)
+    IvfIndex.rangeProbed(assigned,
+      IvfIndex.probedQueries(queries, cents, NProbe), RangeRadius,
+      VecMetric.Euclidean)
       .select("query_id", "neighbor_id")
       .orderBy("query_id", "neighbor_id")
   }
@@ -201,14 +198,8 @@ object IndexQueries {
     val sq = cached(dir, "sq8") { Sq8Index.train(base, "vec") }
     val assigned = IvfIndex.assign(base, "vec", cents)
       .withColumn("codes", Sq8Index.encode(col("vec"), sq))
-    val probed = IvfIndex.probedQueries(queries, cents, NProbe)
-    val scored = assigned
-      .join(broadcast(probed), "cluster")
-      .select(col("query_id"),
-        graft.functions.sq8_l2(col("qvec"), col("codes"),
-          sq.mins, sq.scales).as("score"),
-        col("id"))
-    ranked(KnnSearch.topKOf(scored, K, asc = true))
+    ranked(Sq8Index.searchProbed(assigned,
+      IvfIndex.probedQueries(queries, cents, NProbe), sq, K))
   }
 
   /** q37: IVF pruning + packed SQ4 scan — the byte-cheapest float
@@ -225,14 +216,8 @@ object IndexQueries {
     val assigned = IvfIndex.assign(base, "vec", cents)
       .withColumn("words",
         graft.functions.sq4_pack(col("vec"), sq.mins, sq.scales))
-    val probed = IvfIndex.probedQueries(queries, cents, NProbe)
-    val scored = assigned
-      .join(broadcast(probed), "cluster")
-      .select(col("query_id"),
-        graft.functions.sq4_l2(col("qvec"), col("words"),
-          sq.mins, sq.scales).as("score"),
-        col("id"))
-    ranked(KnnSearch.topKOf(scored, K, asc = true))
+    ranked(Sq8Index.searchProbed(assigned,
+      IvfIndex.probedQueries(queries, cents, NProbe), sq, K, packed = true))
   }
 
   /** q26: search against the *persisted* IVF layout — the scan reads
@@ -277,18 +262,10 @@ object IndexQueries {
       p
     }
     val probed = IvfIndex.probedQueries(queries, cents, NProbe)
-    val cells = probed.select("cluster").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val scan = Tables.parquetAt(s, path).filter(col("cluster").isin(cells: _*))
+    val scan = IvfIndex.probedCells(s, path, probed)
       .withColumn("codes", transform(col("codes"),
         c => c.cast("int") + lit(128)))
-    val scored = scan
-      .join(broadcast(probed), "cluster")
-      .select(col("query_id"),
-        graft.functions.sq8_l2(col("qvec"), col("codes"),
-          sq.mins, sq.scales).as("score"),
-        col("id"))
-    ranked(KnnSearch.topKOf(scored, K, asc = true))
+    ranked(Sq8Index.searchProbed(scan, probed, sq, K))
   }
 
   def lshRhp(s: SparkSession, dir: String): DataFrame = {
@@ -894,35 +871,11 @@ object IndexQueries {
     * comparison as its first point). */
   val SweepEtas: Seq[Int] = Seq(1, 2, 4, 8)
 
-  /** q17: the reference runner's query-argument sweep
-    * (query_argument_groups, runner.py — nprobe is THE IVF tuning
-    * knob): recall@K of the IVF index at each nprobe, averaged over
-    * the query set. One assignment and one exact-GT computation are
-    * shared across the whole sweep; each step only swaps the probe
-    * list. avg_recall = total_hits / (NQ * K) — an exact integer
-    * ratio, so the curve itself is hash-gated.
-    */
   // q49: hybrid search served FROM the index
   val MvFields = 4
   val MvDim = 16
   val HybridPerFieldK = 50
 
-  /** q49: the reference's hybrid multi-vector search served FROM the
-    * index — milvus hybrid_search
-    * (/root/reference/bigvectorbench/algorithms/milvus/module.py:422-458)
-    * issues one AnnSearchRequest per vector field against that
-    * field's OWN index and fuses with RRFRanker; q06/q07 are the
-    * brute-force twins of that semantics, this is the served shape.
-    * Each 16-dim field gets its own sample-init IVF (q20's NList /
-    * NProbe); per-field top-[[HybridPerFieldK]] lists come from the
-    * probed cells only, fused by q07's pinned-order RRF — assignment,
-    * probes, per-field ranks and fusion all replicate in the oracle.
-    *
-    * Scale: 4 probe joins (each centroids-broadcast, cells pruned)
-    * + a fusion over fields x Q x perFieldK rank rows — the
-    * per-field scans are q20's 100 TB shape and the fusion cost is
-    * independent of base size.
-    */
   /** Per-field IVF cosine top-`perFieldK` lists over the 16-dim
     * slices — the candidate generator both index-served hybrid
     * rankers (q49 RRF, q51 weighted) fuse from. One sample-init IVF
@@ -947,6 +900,22 @@ object IndexQueries {
     }
   }
 
+  /** q49: the reference's hybrid multi-vector search served FROM the
+    * index — milvus hybrid_search
+    * (bigvectorbench/algorithms/milvus/module.py:422-458)
+    * issues one AnnSearchRequest per vector field against that
+    * field's OWN index and fuses with RRFRanker; q06/q07 are the
+    * brute-force twins of that semantics, this is the served shape.
+    * Each 16-dim field gets its own sample-init IVF (q20's NList /
+    * NProbe); per-field top-[[HybridPerFieldK]] lists come from the
+    * probed cells only, fused by q07's pinned-order RRF — assignment,
+    * probes, per-field ranks and fusion all replicate in the oracle.
+    *
+    * Scale: 4 probe joins (each centroids-broadcast, cells pruned)
+    * + a fusion over fields x Q x perFieldK rank rows — the
+    * per-field scans are q20's 100 TB shape and the fusion cost is
+    * independent of base size.
+    */
   def hybridIndex(s: SparkSession, dir: String): DataFrame =
     ranked(MultiVectorSearch.fuseRrf(
       mvFieldLists(s, dir, HybridPerFieldK, NProbe), K))
@@ -968,6 +937,14 @@ object IndexQueries {
       mvFieldLists(s, dir, HybridPerFieldK, NProbe), K,
       Seq.fill(MvFields)(0.25)))
 
+  /** q17: the reference runner's query-argument sweep
+    * (query_argument_groups, runner.py — nprobe is THE IVF tuning
+    * knob): recall@K of the IVF index at each nprobe, averaged over
+    * the query set. One assignment and one exact-GT computation are
+    * shared across the whole sweep; each step only swaps the probe
+    * list. avg_recall = total_hits / (NQ * K) — an exact integer
+    * ratio, so the curve itself is hash-gated.
+    */
   def nprobeSweep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (base, queries) = baseAndQueries(s, dir)

@@ -156,6 +156,20 @@ class AnalyticsSpec extends AnyFunSuite {
     }
   }
 
+  test("latency percentiles: the mean of a sub-microsecond-spread series stays <= max_us") {
+    import graft.queries.AnalyticsQueries
+    // every op 3.5 us: truncating the max to 3 us would put the mean
+    // (3.5 us) above it
+    val ns = Array.fill(32)(3500L)
+    val (p50, p90, p95, p99, p999, mx) = AnalyticsQueries.latencyUs(ns)
+    val ps = Seq(p50, p90, p95, p99, p999, mx)
+    assert(ps == Seq(3L, 3L, 3L, 3L, 3L, 4L), ps)
+    val meanUs = ns.sum / 1000.0 / ns.length
+    assert(meanUs <= mx && meanUs + 1 >= p50, s"mean $meanUs vs $ps")
+    assert(AnalyticsQueries.latencyUs(Array(2000L, 1000L, 3000L)) ==
+      ((2L, 3L, 3L, 3L, 3L, 3L)))
+  }
+
   test("a13 per-query ANN latencies: exact post-state, sane percentiles") {
     import graft.queries.{AnalyticsQueries, Split}
     import graft.operators.{IvfIndex, VecMetric}

@@ -49,8 +49,10 @@ class BoundedCollectSpec extends AnyFunSuite {
     "operators/IvfIndex.scala" ->
       (5, "centroids (nlist <= 4096 rows); the probe worklist's query " +
         "batch (Q rows, the batch the cell scan broadcasts anyway; " +
-        "the driver probe then does Q x nlist x dim multiply-adds); " +
-        "3x probed cell-id lists (<= nprobe x queries ints)"),
+        "the driver probe then does Q x nlist x dim multiply-adds, " +
+        "for the flat index and the tree alike); 3x probed cell-id " +
+        "lists (<= nprobe x queries ints; one is the persisted-cell " +
+        "pruning every persisted search shares)"),
     "operators/IvfTree.scala" ->
       (1, "two-level tree centroids: nlist1 + nlist1*nlist2 rows"),
     "operators/LshIndex.scala" ->
@@ -72,8 +74,7 @@ class BoundedCollectSpec extends AnyFunSuite {
         "vector batch (A13NQ rows — the per-query latency series " +
         "is driver-timed by design)"),
     "queries/IndexQueries.scala" ->
-      (2, "probed cell ids (nprobe ints); vocabulary ranking " +
-        "(VocabSize rows)"),
+      (1, "vocabulary ranking (VocabSize rows)"),
     "queries/TextQueries.scala" ->
       (2, "q41's two rank lists: <= NQ x k rows each BY CONSTRUCTION " +
         "(top-k per bounded benchmark query, Split.isQuery) — the " +

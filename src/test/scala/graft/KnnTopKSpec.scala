@@ -171,6 +171,32 @@ class KnnTopKSpec extends AnyFunSuite {
     assert(res.passed, Pretty.pretty(res))
   }
 
+  test("a NaN-component base vector gives the same rows under every partitioning") {
+    // a NaN component makes every score of its row NaN (sign hamming
+    // aside), and cosine against the all-zero row is NaN too
+    val rng = new scala.util.Random(11)
+    val base = (0 until 16).map { i =>
+      val v =
+        if (i % 5 == 3) Seq(1.0, Double.NaN, -0.3)
+        else if (i == 7) Seq(0.0, 0.0, 0.0)
+        else Seq.fill(3)(rng.nextGaussian())
+      (Some(i.toLong), Some(v), 0)
+    }
+    val queries = (0 until 3).map(q =>
+      (q.toLong, Some(Seq.fill(3)(rng.nextGaussian())), 0, 0L))
+    for (m <- Seq(VecMetric.Euclidean, VecMetric.Cosine,
+           VecMetric.InnerProduct, VecMetric.SignHamming);
+         floatBase <- Seq(true, false)) {
+      val runs = Seq(1, 2, 3, 5, 16).map { slices =>
+        val (b, q) = frames(Search(m, 5, floatBase, false, base, queries,
+          slices, false, false))
+        bits(KnnSearch.bruteForce(b, q, 5, m))
+      }
+      assert(runs.forall(_ == runs.head), s"$m floatBase=$floatBase: $runs")
+      assert(runs.head.length == 3 * 5)
+    }
+  }
+
   /** A fixed search with its fused operator's SQL metrics. */
   private def measured(pair: Option[Column], k: Int)
       : (Seq[Row], Map[String, Long], Int) = {
